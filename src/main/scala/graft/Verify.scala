@@ -26,14 +26,10 @@ object Verify {
     // ScaleTrial, honored by EventStreams.applyStateStore
     sys.env.get("SPARK_GRAFT_STATESTORE")
       .foreach(v => spark.conf.set("spark.graft.stateStore", v))
-    // conf A/B hook (the FloorProbe convention): SPARK_GRAFT_SETCONF=
-    // "k=v;k=v" — e.g. spark.graft.localExactMaxRows=0 forces every
-    // LocalExact hybrid onto its distributed path for an oracle run
-    sys.env.get("SPARK_GRAFT_SETCONF").toSeq.flatMap(_.split(';'))
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      }
+    // conf A/B hook: SPARK_GRAFT_SETCONF="k=v;k=v" — e.g.
+    // spark.graft.localExactMaxRows=0 forces every LocalExact hybrid
+    // onto its distributed path for an oracle run
+    graft.util.SetConf(spark)
     // 95 queries over ten base tables: read each parquet once
     graft.util.Tables.enableSessionCache()
     new java.io.File(outDir).mkdirs()

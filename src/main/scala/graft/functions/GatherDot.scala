@@ -8,17 +8,23 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Tight-loop kernel for the sparse gather-dot: Σ w[b_i] · x_i. */
 object GatherDotKernel {
-  /** `indices` are 0-based positions into `w`; caller guarantees they
-    * are in range (hash-bucket ids are bounded by construction). Plain
-    * Java long multiply-add — wraps exactly like the interpreted
-    * `element_at(w, b+1) * x` / `aggregate(+)` composition it
-    * replaces. */
+  /** `indices` are 0-based positions into `w` (hash-bucket ids are
+    * bounded by construction); one outside [0, |w|) throws, since an
+    * `UnsafeArrayData` read past its end returns garbage, not an
+    * error. Plain Java long multiply-add — wraps exactly like the
+    * interpreted `element_at(w, b+1) * x` / `aggregate(+)` composition
+    * it replaces. */
   def gatherDot(w: ArrayData, indices: ArrayData, values: ArrayData): Long = {
     val n = math.min(indices.numElements(), values.numElements())
+    val m = w.numElements()
     var s = 0L
     var i = 0
     while (i < n) {
-      s += w.getLong(indices.getLong(i).toInt) * values.getLong(i)
+      val b = indices.getLong(i)
+      if (b < 0 || b >= m)
+        throw new IndexOutOfBoundsException(
+          s"gather_dot: bucket index $b is outside [0, |w|) for |w| = $m")
+      s += w.getLong(b.toInt) * values.getLong(i)
       i += 1
     }
     s
@@ -34,7 +40,7 @@ object GatherDotKernel {
   * as [[DotScaledExpr]], with identical values (same long
   * multiply-add order, same wraparound). Arrays must be non-null
   * element-wise and indices in [0, |w|) — both hold by construction
-  * for hashed feature buckets. */
+  * for hashed feature buckets; an out-of-range index fails the task. */
 case class GatherDotLongExpr(weights: Expression, indices: Expression,
                              values: Expression) extends TernaryExpression {
   override def first: Expression = weights

@@ -101,15 +101,17 @@ object Dedup {
     //    whole-stage-codegens, which is where cold-run time went;
     //  - signatures via 16 flat `min` aggregates instead of 16
     //    array-lambda transforms — same interpreted-lambda reason;
-    //  - localCheckpoint(eager): both sides of the bucket self-join
-    //    are scheduled concurrently and would otherwise race past a
-    //    lazy cache and compute signatures twice; unlike persist(),
-    //    checkpoint blocks are released when the plan is GC'd, so a
-    //    long-lived session doesn't accumulate pinned caches. Cost:
-    //    lineage is truncated, so losing an executor mid-query fails
-    //    the job instead of recomputing — acceptable for this
-    //    one-query-scoped materialization; use reliable checkpoint()
-    //    storage if wrapping this in a multi-hour pipeline.
+    //  - lazy localCheckpoint of the signatures, materialized by
+    //    [[localCandidates]]'s gating count — the first action on
+    //    every path — so both sides of the distributed bucket
+    //    self-join read the same blocks instead of recomputing them;
+    //    unlike persist(), checkpoint blocks are released when the
+    //    plan is GC'd, so a long-lived session doesn't accumulate
+    //    pinned caches. Cost: lineage is truncated, so losing an
+    //    executor mid-query fails the job instead of recomputing —
+    //    acceptable for this one-query-scoped materialization; use
+    //    reliable checkpoint() storage if wrapping this in a
+    //    multi-hour pipeline.
     // explicit partition count: a bare repartition(col) is an AQE
     // coalesce target — small shuffle stats collapse it to ONE task
     // and serialize the CPU-heavy shingle+md5 projection.
@@ -149,10 +151,11 @@ object Dedup {
   /** Distributed signature prefix shared by BOTH dispatch paths:
     * hashed shingle stream → 16 flat min-aggregates (whole-stage
     * codegen; the array-lambda form evaluates interpreted) → one
-    * (id, sig) row per document with a non-empty shingle set. EAGER
-    * checkpoint: the distributed tail's bucket self-join schedules
-    * both sides concurrently and would race past a lazy cache; the
-    * local path's gating count is equally happy reading the blocks.
+    * (id, sig) row per document with a non-empty shingle set. LAZY
+    * checkpoint: [[localCandidates]]'s gating count is the first
+    * action on both dispatch paths and materializes the blocks, so
+    * the local kernel and the distributed tail's bucket self-join
+    * (both sides) read them without a dedicated checkpoint job.
     * Before round 14 the LOCAL kernel recomputed every signature
     * single-threaded from the per-doc hash arrays — O(corpus ×
     * shingles × numHashes) in ONE task, 7.9 s of q23's 10× time. */
@@ -552,9 +555,8 @@ object Dedup {
     // that runs before any concurrent consumer, so it materializes
     // the blocks itself — one job round instead of two (the eager
     // form paid a dedicated checkpoint job, then the gate re-read
-    // the blocks; the concurrent-self-join race that mandates eager
-    // in `signatures` cannot happen here because `st` always runs
-    // first)
+    // the blocks; as in `signatures`, no concurrent self-join side
+    // can race the lazy checkpoint because `st` always runs first)
     val sims = sims0.localCheckpoint(eager = false)
     // threshold gate (see [[dupGroups]] / [[dupCollapseThreshold]]):
     // below maxBucket/2 duplicate extras the member-level banding

@@ -123,15 +123,7 @@ object ImageDedup {
     val fps = withDhash(assets, idCol, contentCol)
       .filter(col("dhash").isNotNull)
       .select(col(idCol).as("id"), col("dhash").as("simhash"))
-    pairsFromFingerprints(fps, maxHamming, maxBucket)
-  }
-
-  /** The band-join stage alone, over precomputed (id, simhash)
-    * fingerprints — for callers that persist the decode output and
-    * re-pair under different thresholds (ImageProbe times the stages
-    * apart this way). */
-  def pairsFromFingerprints(fps: DataFrame, maxHamming: Int = 6,
-                            maxBucket: Int = 1000): DataFrame =
     Dedup.hammingPairs(fps, bits = 64, maxHamming = maxHamming,
       maxBucket = maxBucket)
+  }
 }

@@ -91,15 +91,12 @@ object StreamQueries {
     * too-high count makes per-batch store commits dominate when the
     * state is only thousands of slim rows (32 stores × commit files ×
     * batches for kilobytes of state). Partitions = staged bytes /
-    * 8 MB, clamped to [2, session setting] — small drains get cheap
-    * commits (the floor engages only under 16 MB staged, where state
-    * is KBs and per-partition commit cost dominates; floor 2 keeps
-    * the state genuinely partitioned — a floor-1 A/B was measured
-    * round 13 and is window noise: per-partition store commits
-    * overlap in wall-clock, so sum-of-commitTimeMs shrinks but the
-    * drain doesn't), and a corpus-scale stream ramps back to the
-    * session's full parallelism (a 50× dedup drain with ~5M keys
-    * already lands near the cap under this divisor).
+    * 2 MiB, clamped to [4, session setting] — small drains get cheap
+    * commits (the floor engages only under 8 MiB staged, where state
+    * is KBs and per-partition commit cost dominates), and a
+    * corpus-scale stream ramps back to the session's full
+    * parallelism (a 50× dedup drain with ~5M keys already lands near
+    * the cap under this divisor).
     * Identical results either way (fresh
     * checkpoint per run, so the lifetime property can't leak); the
     * previous value is always restored.
@@ -117,14 +114,12 @@ object StreamQueries {
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(du).sum else f.length()
     val sessionN = s.conf.get("spark.sql.shuffle.partitions").toInt
     val staged = dirs.map(d => du(new java.io.File(d))).sum
-    // A/B override (spark.graft.statePartitions=N): pin the state
-    // partition count instead of deriving it from staged bytes.
     // Divisor: 2 MiB of staged parquet per state partition — stateful
     // ops are compute-dense per compressed byte (the 10× A/B read
     // 9.6 s → 3.7 s on q117 going 3 → 8 partitions), while each extra
     // partition costs a fixed per-batch commit (~50 ms), which is why
     // 32 partitions LOSES on multi-batch drains (q168 3 batches:
-    // 4.6 s @ 8 vs 11.8 s @ 32). At sf0.1 the floor n=2 is unchanged.
+    // 4.6 s @ 8 vs 11.8 s @ 32).
     // Floor 4 (r14 optimization round): the r13 floor-1 A/B showed
     // floor 2 vs 1 is noise, but a same-window A/B at sf0.1 (quiet,
     // min-of-2) read n=4 faster than the n=2 floor on every
@@ -135,9 +130,7 @@ object StreamQueries {
     // multi-batch drains). The 2 MiB divisor itself is pinned by the
     // 10× A/B (n≈10 best; 32 loses), so only the small-drain floor
     // moves.
-    val n = s.conf.getOption("spark.graft.statePartitions")
-      .map(_.toInt).getOrElse(
-        math.min(math.max(4L, staged / (2L << 20)), sessionN.toLong).toInt)
+    val n = math.min(math.max(4L, staged / (2L << 20)), sessionN.toLong).toInt
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", n.toString)
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)

@@ -229,23 +229,6 @@ object EventStreams {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    // profiling hook (spark.graft.streamProfile=true): per-micro-batch
-    // duration decomposition from StreamingQueryProgress — the
-    // instrument behind the BASELINE.md streaming-floor pricing
-    // (plan vs addBatch vs state commit per trigger round)
-    if (spark.conf.getOption("spark.graft.streamProfile").contains("true"))
-      q.recentProgress.foreach { p =>
-        val d = p.durationMs
-        println(s"[streamprofile] $queryName batch=${p.batchId} " +
-          s"rows=${p.numInputRows} total=${d.get("triggerExecution")} " +
-          s"plan=${d.getOrDefault("queryPlanning", -1L)} " +
-          s"addBatch=${d.getOrDefault("addBatch", -1L)} " +
-          s"getBatch=${d.getOrDefault("getBatch", -1L)} " +
-          s"commit=${d.getOrDefault("commitOffsets", -1L)} " +
-          s"wal=${d.getOrDefault("walCommit", -1L)} " +
-          s"stateRows=${p.stateOperators.map(_.numRowsTotal).sum} " +
-          s"stateCommitMs=${p.stateOperators.map(_.commitTimeMs).sum}")
-      }
     spark.table(queryName)
     } finally prevFlush match {
       case Some(v) => spark.conf.set(flushKey, v)

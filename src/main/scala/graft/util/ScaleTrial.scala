@@ -5,10 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-up trial: replicate the sf0.1 tables N× with key offsets that
-  * preserve referential integrity, then run headline queries at both
-  * scales and report the runtime ratio — empirical evidence for the
-  * "would this plan survive a scale-up" question, beyond eyeballing
-  * plans. `runMain graft.util.ScaleTrial [replicas] [outDir]`.
+  * preserve referential integrity, then time headline queries at both
+  * scales with [[Probe.measure]] and report the runtime ratio —
+  * empirical evidence for the "would this plan survive a scale-up"
+  * question, beyond eyeballing plans.
+  * `runMain graft.util.ScaleTrial [replicas] [outDir]`.
   */
 object ScaleTrial {
 
@@ -83,16 +84,11 @@ object ScaleTrial {
       s"${stale.mkString(",")} from a previous run — use a fresh outDir")
     val spark = Tables.session("scaletrial")
     spark.sparkContext.setLogLevel("ERROR")
-    // conf A/B hook (the FloorProbe convention): SPARK_GRAFT_SETCONF=
-    // "k=v;k=v" — e.g. spark.graft.localExactMaxRows=0 to force every
-    // LocalExact hybrid onto its distributed fallback for a crossover
-    // probe OUTSIDE the parity tests
-    sys.env.get("SPARK_GRAFT_SETCONF").toSeq.flatMap(_.split(';'))
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-        println(s"[conf] $k=$v")
-      }
+    // conf A/B hook: SPARK_GRAFT_SETCONF="k=v;k=v" — e.g.
+    // spark.graft.localExactMaxRows=0 to force every LocalExact hybrid
+    // onto its distributed fallback for a crossover probe OUTSIDE the
+    // parity tests
+    SetConf(spark).foreach { case (k, v) => println(s"[conf] $k=$v") }
     // SPARK_GRAFT_STATESTORE=rocksdb runs the streaming family on the
     // disk-backed store — the 100-TB posture trial (state > heap)
     sys.env.get("SPARK_GRAFT_STATESTORE")
@@ -110,74 +106,35 @@ object ScaleTrial {
         "q86_dedup_survivors", "q87_source_mixture", "q88_sequence_packing",
         "q89_kmeans_step")
     val headline = if (only.nonEmpty) only else defaultHeadline
-    // Force EVERY output column (count(col) per column + the row count
-    // in ONE aggregate) — under a bare count() Catalyst prunes dead
-    // projections (q108's EWMA fold, q104's interval columns) and
-    // eliminates unique-key joins, timing a thinner plan than users
-    // run. Same force shape as Bench.
-    def time(name: String, dir: String): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val df = Registry.byName(name).run(spark, dir)
-      val row = df.select(count(lit(1)) +: df.columns.map(c => count(col(c))): _*)
-        .collect()(0)
-      ((System.nanoTime() - t0) / 1e9, row.getLong(0))
-    }
-    // output rows at both scales distinguish output-bound growth (the
-    // true answer got bigger — replication makes every replica a
-    // genuine duplicate) from a plan hazard
-    println(f"${"query"}%-26s ${"sf0.1"}%8s ${"x" + replicas}%8s ratio ${"rows"}%10s ${"rows'"}%10s")
+    // one Probe run per directory: Bench's every-column force, a
+    // build/plan/exec split and the scratch release after each query.
+    // The force value (Σ non-null output cells) at both scales tells
+    // output-bound growth (the true answer got bigger — replication
+    // makes every replica a genuine duplicate) from a plan hazard.
+    println(f"${"query"}%-26s ${"sf0.1"}%8s ${"x" + replicas}%8s ratio ${"value"}%10s ${"value'"}%10s")
+    val probe = new Probe(spark)
     headline.distinct.foreach { n =>
-      val (a, ra) = time(n, src)
-      val (b, rb) = time(n, outDir)
-      println(f"$n%-26s $a%8.2f $b%8.2f ${b / a}%5.1f $ra%10d $rb%10d")
+      val (a, b) = (probe.measure(src, n), probe.measure(outDir, n))
+      println(f"$n%-26s ${a.totalS}%8.2f ${b.totalS}%8.2f ${b.totalS / a.totalS}%5.1f " +
+        f"${a.value}%10d ${b.value}%10d ${(a.error ++ b.error).mkString("; ")}")
     }
-    // q27's one-line ratio conflates the amortize-once index build
-    // (|corpus| × nCells work, nCells ~ √N → ~N^1.5) with the per-query
-    // probe (touches nProbe/nCells of the corpus). Time them apart:
-    // build = materialize the assigned index; probe = top-k over the
-    // PERSISTED index, the steady-state serving cost.
-    if (headline.contains("q27_ivf_topk")) {
-      import graft.operators.SimilaritySearch
-      def ivfSplit(dir: String): (Double, Double) = {
+    probe.close()
+    // IVF index build and probe timed apart: q27's one-line ratio
+    // conflates the amortize-once index build (|corpus| × nCells work,
+    // nCells ~ √N → ~N^1.5) with the per-query probe (touches
+    // nProbe/nCells of the corpus); q194's registry form is the exact
+    // broadcast mine (|anchors|=20 × corpus, allowlisted), while the
+    // operator's 100-TB story is the IVF cell-probe path
+    // (SimilaritySearch.probeHardNegatives). build = materialize the
+    // assigned index; probe = the probe over the PERSISTED index, the
+    // steady-state serving cost.
+    import graft.operators.SimilaritySearch
+    def ivfSplit(label: String)(probeOn: (DataFrame, DataFrame, DataFrame) => Long): Unit = {
+      def once(dir: String): (Double, Double) = {
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val emb = spark.read.parquet(s"$dir/embeddings.parquet")
         val centroids = emb.filter(col("vec_id") % 50 === 0)
           .select(col("vec_id").as("cell_id"), col("embedding").as("cell_vec"))
-        val queries = emb.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-        val corpus = emb.select(col("vec_id").as("n_id"), col("embedding"))
-        val idx = SimilaritySearch.buildIndex(corpus, centroids, "n_id", "embedding")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val t0 = System.nanoTime()
-        idx.count()
-        val build = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        SimilaritySearch.probeTopK(queries, idx, centroids,
-          "q_id", "q_vec", "n_id", "embedding", k = 5, nProbe = 3).count()
-        val probe = (System.nanoTime() - t1) / 1e9
-        idx.unpersist()
-        (build, probe)
-      }
-      val (ba, pa) = ivfSplit(src)
-      val (bb, pb) = ivfSplit(outDir)
-      println(f"${"q27 ivf build"}%-26s $ba%8.2f $bb%8.2f ${bb / ba}%5.1f")
-      println(f"${"q27 ivf probe"}%-26s $pa%8.2f $pb%8.2f ${pb / pa}%5.1f")
-    }
-    // q194's registry form is the exact broadcast mine (|anchors|=20
-    // × corpus, allowlisted); the operator's 100-TB story is the IVF
-    // cell-probe path (SimilaritySearch.probeHardNegatives). Time the
-    // index build and the label-filtered probe apart, like q27 — the
-    // probe is the steady-state serving cost per anchor batch.
-    if (headline.contains("q194_hard_negatives")) {
-      import graft.operators.SimilaritySearch
-      def mineSplit(dir: String): (Double, Double) = {
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-        val centroids = emb.filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id").as("cell_id"), col("embedding").as("cell_vec"))
-        val anchors = emb.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("a_id"), col("embedding").as("a_vec"),
-            col("label").as("a_lbl"))
         val idx = SimilaritySearch.buildIndex(
             emb.select(col("vec_id").as("n_id"), col("embedding").as("n_vec"),
               col("label").as("n_lbl")),
@@ -185,59 +142,44 @@ object ScaleTrial {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val t0 = System.nanoTime()
         idx.count()
-        val build = (System.nanoTime() - t0) / 1e9
         val t1 = System.nanoTime()
-        SimilaritySearch.probeHardNegatives(anchors, idx, centroids,
-          "a_id", "a_vec", "a_lbl", "n_id", "n_lbl", "n_vec",
-          k = 3, nProbe = 3).count()
-        val probe = (System.nanoTime() - t1) / 1e9
+        probeOn(emb, idx, centroids)
+        val t2 = System.nanoTime()
         idx.unpersist()
-        (build, probe)
+        ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
       }
-      val (ba, pa) = mineSplit(src)
-      val (bb, pb) = mineSplit(outDir)
-      println(f"${"q194 ivf build"}%-26s $ba%8.2f $bb%8.2f ${bb / ba}%5.1f")
-      println(f"${"q194 ivf probe"}%-26s $pa%8.2f $pb%8.2f ${pb / pa}%5.1f")
+      val ((ba, pa), (bb, pb)) = (once(src), once(outDir))
+      println(f"${label + " ivf build"}%-26s $ba%8.2f $bb%8.2f ${bb / ba}%5.1f")
+      println(f"${label + " ivf probe"}%-26s $pa%8.2f $pb%8.2f ${pb / pa}%5.1f")
     }
-    // q98's one-line ratio is a mirage: under count() Catalyst
-    // eliminates the final left join (the score side aggregates on the
-    // unique join key and count references no right-side column), so
-    // the timed plan is a bare documents scan. Force the full
-    // train+score pipeline by aggregating the score columns.
-    if (headline.contains("q98_lm_quality")) {
-      def forced(dir: String): Double = {
-        val t0 = System.nanoTime()
-        Registry.byName("q98_lm_quality").run(spark, dir)
-          .agg(sum(col("n_bigrams")), sum(col("mean_p_scaled")),
-            sum(col("mean_surprisal"))).collect()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val a = forced(src)
-      val b = forced(outDir)
-      println(f"${"q98 lm forced"}%-26s $a%8.2f $b%8.2f ${b / a}%5.1f")
+    if (headline.contains("q27_ivf_topk")) ivfSplit("q27") { (emb, idx, centroids) =>
+      val queries = emb.filter(col("vec_id") < 10)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+      SimilaritySearch.probeTopK(queries, idx, centroids,
+        "q_id", "q_vec", "n_id", "n_vec", k = 5, nProbe = 3).count()
     }
-    // q101's count() prunes the encode chain (tokens/n_tokens are
-    // dead under count), so force the encode by aggregating its
-    // outputs; separately time the CORPUS-scale apply — the broadcast
-    // join of the vocab-sized encodings back onto the corpus token
-    // stream, which is how a full re-tokenization consumes them.
+    if (headline.contains("q194_hard_negatives")) ivfSplit("q194") { (emb, idx, centroids) =>
+      val anchors = emb.filter(col("vec_id") < 20)
+        .select(col("vec_id").as("a_id"), col("embedding").as("a_vec"),
+          col("label").as("a_lbl"))
+      SimilaritySearch.probeHardNegatives(anchors, idx, centroids,
+        "a_id", "a_vec", "a_lbl", "n_id", "n_lbl", "n_vec", k = 3, nProbe = 3).count()
+    }
+    // q101's registry row times the vocab-sized encode; separately
+    // time the CORPUS-scale apply — the broadcast join of the encodings
+    // back onto the corpus token stream, which is how a full
+    // re-tokenization consumes them.
     if (headline.contains("q101_bpe_encode")) {
-      def forced(dir: String): (Double, Double) = {
-        val t0 = System.nanoTime()
+      def corpusApply(dir: String): Double = {
         val enc = Registry.byName("q101_bpe_encode").run(spark, dir)
-        enc.agg(sum(col("n_tokens")), sum(length(col("tokens")))).collect()
-        val vocab = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
+        val t0 = System.nanoTime()
         Tables(spark, dir, "documents")
           .select(explode(graft.functions.TextFns.tokens(col("text"))).as("word"))
           .join(broadcast(enc.select(col("word"), col("n_tokens"))), "word")
           .agg(sum(col("n_tokens"))).collect()
-        val corpus = (System.nanoTime() - t1) / 1e9
-        (vocab, corpus)
+        (System.nanoTime() - t0) / 1e9
       }
-      val (va, ca) = forced(src)
-      val (vb, cb) = forced(outDir)
-      println(f"${"q101 bpe forced"}%-26s $va%8.2f $vb%8.2f ${vb / va}%5.1f")
+      val (ca, cb) = (corpusApply(src), corpusApply(outDir))
       println(f"${"q101 corpus apply"}%-26s $ca%8.2f $cb%8.2f ${cb / ca}%5.1f")
     }
     spark.stop()

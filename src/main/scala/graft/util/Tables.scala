@@ -25,6 +25,10 @@ object Tables {
   @volatile private var cacheEnabled = false
   def enableSessionCache(): Unit = cacheEnabled = true
 
+  /** The tables widened to session parallelism at cache time (see the
+    * note in [[apply]]). */
+  private val WidenAtCache = Set("documents", "lineitem", "orders")
+
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // The driver's parquet stores naive (not UTC-adjusted) timestamps;
     // read them as TimestampType (session tz = UTC) rather than NTZ so
@@ -56,11 +60,8 @@ object Tables {
         // the writer produces many row groups and this branch never
         // fires.
         val target = spark.sparkContext.defaultParallelism
-        val widenNames = sys.env
-          .getOrElse("GRAFT_WIDEN_TABLES", "documents,lineitem,orders")
-          .split(",").toSet
         val wide =
-          if (widenNames(name) && raw.rdd.getNumPartitions < target)
+          if (WidenAtCache(name) && raw.rdd.getNumPartitions < target)
             raw.repartition(target)
           else raw
         wide.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

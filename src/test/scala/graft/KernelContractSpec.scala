@@ -153,4 +153,33 @@ class KernelContractSpec extends graft.SparkSpec {
         s"fl2Jvm($p) != floorLog2 column")
     }
   }
+
+  test("gatherDot: in-range margin = Σ w[b]·x; an out-of-range bucket throws") {
+    import graft.functions.{GatherDotKernel, GatherDotLongExpr}
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    def arr(xs: Long*) = UnsafeArrayData.fromPrimitiveArray(xs.toArray)
+    val w = arr(3L, -2L, 7L)
+    assert(GatherDotKernel.gatherDot(w, arr(0L, 2L, 2L), arr(5L, 1L, -4L)) ===
+      3L * 5 + 7L * 1 + 7L * -4)
+    // the long multiply-add wraps like the SQL composition it replaces
+    assert(GatherDotKernel.gatherDot(arr(Long.MaxValue), arr(0L), arr(2L)) ===
+      Long.MaxValue * 2)
+    // 1L << 32 truncates to bucket 0 under a bare toInt
+    Seq(3L, -1L, 1L << 32).foreach { b =>
+      val e = intercept[IndexOutOfBoundsException](
+        GatherDotKernel.gatherDot(w, arr(0L, b), arr(1L, 1L)))
+      assert(e.getMessage.contains(s"index $b") && e.getMessage.contains("|w| = 3"),
+        e.getMessage)
+    }
+    // the same check through the Catalyst expression
+    val s = spark; import s.implicits._
+    val df = Seq((Seq(3L, -2L, 7L), Seq(0L, 5L), Seq(1L, 1L))).toDF("w", "b", "x")
+    val m = ColumnBridge.column(GatherDotLongExpr(ColumnBridge.expression(col("w")),
+      ColumnBridge.expression(col("b")), ColumnBridge.expression(col("x"))))
+    val err = intercept[Exception](df.select(m).collect())
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("index 5")), msgs.mkString(" | "))
+  }
 }
