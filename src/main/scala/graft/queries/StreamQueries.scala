@@ -130,10 +130,13 @@ object StreamQueries {
     // multi-batch drains). The 2 MiB divisor itself is pinned by the
     // 10× A/B (n≈10 best; 32 loses), so only the small-drain floor
     // moves.
+    // The ~50 ms per-partition commit above was measured while each
+    // state file still forked 5 shell commands (`chmod`, `readlink`)
+    // through Spark's FileContext checkpoint manager. Streams now
+    // write through LocalCheckpointFileManager, which forks none; the
+    // floor and divisor have not been re-tuned since.
     val n = math.min(math.max(4L, staged / (2L << 20)), sessionN.toLong).toInt
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    EventStreams.withConfs(s, Seq("spark.sql.shuffle.partitions" -> n.toString))(body)
   }
 
   /** Tumbling hourly aggregate oracle — q92 (stream) and q94
@@ -196,8 +199,7 @@ object StreamQueries {
     Q("q94_streaming_sink",
       (s, dir) => withStatePartitions(s, Seq(staged(s, dir))) {
         val sink = graft.util.Scratch.tempDir("graft_q94_sink")
-        val q = source(s, dir).writeStream
-          .option("checkpointLocation", graft.util.Scratch.tempDir("graft_q94_ckpt"))
+        EventStreams.drain(s, source(s, dir).writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             batch.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
               .agg(count(lit(1)).as("n"),
@@ -206,10 +208,7 @@ object StreamQueries {
                 col("n"), col("sum_dec"))
               .write.mode("append").parquet(sink)
             ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          }, "graft_q94_ckpt")
         s.read.parquet(sink)
           .groupBy(col("hour_start"), col("event_type"))
           .agg(sum(col("n")).as("n"),
@@ -252,16 +251,12 @@ object StreamQueries {
             require(tmp.renameTo(target), s"publish failed for batch $bid")
           }
         }
-        val q = source(s, dir).writeStream
-          .option("checkpointLocation", graft.util.Scratch.tempDir("graft_q170_ckpt"))
+        EventStreams.drain(s, source(s, dir).writeStream
           .foreachBatch { (batch: DataFrame, bid: Long) =>
             writeBatch(batch, bid)
             writeBatch(batch, bid) // forced redelivery — must no-op
             ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          }, "graft_q170_ckpt")
         // read the sink root: `b=<batchId>` dirs ARE a partition
         // column, so discovery lists exactly the published batches
         // (in-flight `.stage_*` dirs are dot-hidden from listings) —
@@ -630,12 +625,8 @@ object StreamQueries {
           .load(src)
           .select(col("src_file"), col("record_index"), col("warc_type"),
             col("content_length"), md5(col("payload")).as("payload_md5"))
-        val q = stream.writeStream
-          .format("memory").queryName(name).outputMode("append")
-          .option("checkpointLocation", graft.util.Scratch.tempDir("q185_ckpt"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val q = EventStreams.drain(s, stream.writeStream
+          .format("memory").queryName(name).outputMode("append"), "q185_ckpt")
         val dataBatches = q.recentProgress.count(_.numInputRows > 0)
         require(dataBatches >= 2,
           s"expected file-granularity micro-batches (>= 2), got $dataBatches")
@@ -669,19 +660,15 @@ object StreamQueries {
         // q177's WHOLE POINT is one log version per micro-batch with
         // monotone snapshot growth — it keeps a genuine multi-batch
         // drain (4 files/poll) regardless of the bench-path source()
-        val q = s.readStream.schema(EventStreams.eventSchema)
+        EventStreams.drain(s, s.readStream.schema(EventStreams.eventSchema)
           .option("maxFilesPerTrigger", "4")
           .parquet(staged(s, dir))
           .writeStream
-          .option("checkpointLocation", graft.util.Scratch.tempDir("graft_q177_ckpt"))
           .foreachBatch { (batch: DataFrame, bid: Long) =>
             publish(batch, bid)
             publish(batch, bid) // forced redelivery — must no-op
             ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          }, "graft_q177_ckpt")
         val (last, _) = TxnLog.liveFiles(root, None)
         (root, last)
       })

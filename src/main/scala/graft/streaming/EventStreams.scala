@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (SURVEY §2.9): the reference's
@@ -216,23 +217,49 @@ object EventStreams {
           "last windows/null rows are silently dropped.")
     }
     applyStateStoreChoice(spark)
-    val flushKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevFlush = spark.conf.getOption(flushKey)
-    spark.conf.set(flushKey, noDataFlush.toString)
-    try {
-    val q = streamed.writeStream
-      .format("memory").queryName(queryName).outputMode(outputMode)
-      // RAM-backed scratch checkpoint (graft.util.Scratch): offset log
-      // + state commits are per-invocation transient here; a durable
-      // URI takes this slot on a real deployment
-      .option("checkpointLocation", graft.util.Scratch.tempDir(s"ckpt_$queryName"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-    } finally prevFlush match {
-      case Some(v) => spark.conf.set(flushKey, v)
-      case None => spark.conf.unset(flushKey)
+    withConfs(spark, Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> noDataFlush.toString)) {
+      drain(spark, streamed.writeStream
+        .format("memory").queryName(queryName).outputMode(outputMode), s"ckpt_$queryName")
+      spark.table(queryName)
+    }
+  }
+
+  /** What every graft stream starts under, for its cloned session:
+    *  - artifact isolation off, so the clone runs on the shared
+    *    executor class loader. `CodeGenerator`'s cache is keyed by
+    *    (class loader, code); an isolated clone gets a fresh
+    *    `ExecutorClassLoader` and recompiles every whole-stage-codegen
+    *    class the session has already compiled (14 per q92 run at
+    *    sf0.1). graft adds no session artifacts.
+    *  - [[LocalCheckpointFileManager]], which writes `file:` checkpoints
+    *    without forking `chmod`/`readlink` (over 100 per q92 drain). */
+  private val StartConfs = Seq(
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    LocalCheckpointFileManager.ClassKey -> classOf[LocalCheckpointFileManager].getName)
+
+  /** Run `writer` to completion under Trigger.AvailableNow with a fresh
+    * scratch checkpoint (`graft.util.Scratch`, RAM-backed: offset log and
+    * state commits are per-invocation transient here; a durable URI takes
+    * this slot on a real deployment). [[StartConfs]] are set for the
+    * drain and restored after it. Every graft stream starts here. */
+  def drain(spark: SparkSession, writer: DataStreamWriter[_], checkpoint: String): StreamingQuery =
+    withConfs(spark, StartConfs) {
+      val q = writer
+        .option("checkpointLocation", graft.util.Scratch.tempDir(checkpoint))
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      q
+    }
+
+  /** `body` with `confs` set on `spark`; each prior value is put back
+    * (or the key unset) afterwards, also when `body` throws. */
+  private[graft] def withConfs[T](spark: SparkSession, confs: Seq[(String, String)])(body: => T): T = {
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -2,6 +2,7 @@ package graft.util
 
 import graft.queries.Registry
 import org.apache.spark.graftprobe.Bus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.functions.{col, count}
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -42,6 +43,7 @@ final class Probe(spark: SparkSession) extends AutoCloseable {
     Bus.drain(sc)
     seen.reset()
     val gc0 = gcMs
+    val cg0 = codegen
     var forced: DataFrame = null
     var (value, error) = (-1L, Option.empty[String])
     val a = System.nanoTime()
@@ -60,10 +62,12 @@ final class Probe(spark: SparkSession) extends AutoCloseable {
     if (p < 0) p = e
     release()
     Bus.drain(sc)
+    val cg1 = codegen
     val plan = if (error.isEmpty) forced.queryExecution.executedPlan.toString else ""
     seen.synchronized(Record(q, value, error, (b - a) / 1e9, (p - b) / 1e9, (e - p) / 1e9,
       (e - a) / 1e9, seen.buildJobs, seen.jobs, seen.stages, seen.tasks, seen.shuffleRead,
-      seen.shuffleWrite, seen.spill, gcMs - gc0, seen.batches.toSeq, plan))
+      seen.shuffleWrite, seen.spill, gcMs - gc0, cg1._1 - cg0._1,
+      for (ms0 <- cg0._2; ms1 <- cg1._2) yield ms1 - ms0, seen.batches.toSeq, plan))
   }
 
   /** One warm sweep, then two timed sweeps, as Bench. */
@@ -89,12 +93,14 @@ object Probe {
                           buildS: Double, planS: Double, execS: Double, totalS: Double,
                           buildJobs: Int, jobs: Int, stages: Int, tasks: Long,
                           shuffleRead: Long, shuffleWrite: Long, spill: Long,
-                          gcMs: Long, batches: Seq[Batch], plan: String) {
+                          gcMs: Long, compiles: Long, compileMs: Option[Long],
+                          batches: Seq[Batch], plan: String) {
     def json: String = obj("query" -> str(query), "ok" -> error.isEmpty,
       "error" -> error.map(str).getOrElse("null"), "value" -> value, "build_s" -> buildS,
       "plan_s" -> planS, "exec_s" -> execS, "total_s" -> totalS, "build_jobs" -> buildJobs,
       "jobs" -> jobs, "stages" -> stages, "tasks" -> tasks, "shuffle_read_bytes" -> shuffleRead,
       "shuffle_write_bytes" -> shuffleWrite, "spill_bytes" -> spill, "gc_ms" -> gcMs,
+      "compiles" -> compiles, "compile_ms" -> compileMs.getOrElse("null"),
       "batches" -> batches.map(m => obj("batch" -> m.id, "input_rows" -> m.inputRows,
         "duration_ms" -> obj(m.durationMs.toSeq.sorted: _*), "state_rows" -> m.stateRows,
         "state_commit_ms" -> m.stateCommitMs)).mkString("[", ",", "]"))
@@ -120,6 +126,16 @@ object Probe {
 
   private def gcMs: Long =
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
+
+  /** Whole-stage-codegen compiles so far in this JVM and their summed
+    * ms. The ms come from the compile-time histogram's reservoir, which
+    * holds every sample only up to 1028; past that Dropwizard samples,
+    * the sum is no total, and it reads None. */
+  private def codegen: (Long, Option[Long]) = {
+    val h = CodegenMetrics.METRIC_COMPILATION_TIME
+    val s = h.getSnapshot
+    (h.getCount, Option.when(s.size == h.getCount)(s.getValues.sum))
+  }
 
   /** Scheduler and micro-batch counters of the run in flight. */
   private final class Seen extends SparkListener {
@@ -186,7 +202,7 @@ object Probe {
     write(s"$out/profile.jsonl", recs.map(_.json + "\n").mkString)
     recs.filter(_.error.isEmpty).foreach(r => write(s"$out/plans/${r.query}.txt", r.plan))
     recs.foreach(r => println(f"${r.query}%-34s${r.buildS}%8.3f${r.planS}%8.3f${r.execS}%8.3f" +
-      f"${r.totalS}%8.3f ${r.jobs}%4d ${r.stages}%4d ${r.tasks}%6d ${r.error.getOrElse("")}"))
+      f"${r.totalS}%8.3f ${r.jobs}%4d ${r.stages}%4d ${r.tasks}%6d ${r.compiles}%4d ${r.error.getOrElse("")}"))
     spark.stop()
   }
 }

@@ -88,13 +88,15 @@ object Tables {
     else widen(apply(spark, sfDir, name))
   }
 
-  /** Session tuned for the graft engine. local[32] here; on a real
-    * cluster the same knobs come from spark-submit. AQE handles runtime
-    * re-planning (adaptive shuffle partition coalescing, broadcast
-    * conversion, skew-join splitting) — essential at 100 TB.
+  /** Session tuned for the graft engine: `local[SPARK_GRAFT_CPUS]`
+    * (default 4, as `graft.Bench` and `graft.Verify`) with as many
+    * shuffle partitions; on a real cluster the same knobs come from
+    * spark-submit. AQE handles runtime re-planning (adaptive shuffle
+    * partition coalescing, broadcast conversion, skew-join splitting)
+    * — essential at 100 TB.
     */
   def session(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)

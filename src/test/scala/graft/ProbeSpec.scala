@@ -53,6 +53,9 @@ class ProbeSpec extends SparkSpec {
       assert(stream.batches.map(_.inputRows).sum > 0)
       assert(stream.json.startsWith("""{"query":"q92_streaming_drain","ok":true,"""))
       assert(stream.json.contains(""""batches":[{"batch":0,"""))
+      assert(stream.compiles >= 0 && stream.compileMs.forall(_ >= 0) &&
+        """"compiles":\d+,"compile_ms":(\d+|null),""".r.findFirstIn(stream.json).nonEmpty,
+        "q92's record lacks its codegen fields")
       assert(recs("q01_pricing_summary").batches.isEmpty)
     } finally {
       probe.close()
