@@ -27,8 +27,9 @@ object Verify {
     sys.env.get("SPARK_GRAFT_STATESTORE")
       .foreach(v => spark.conf.set("spark.graft.stateStore", v))
     // conf A/B hook: SPARK_GRAFT_SETCONF="k=v;k=v" — e.g.
-    // spark.graft.localExactMaxRows=0 forces every LocalExact hybrid
-    // onto its distributed path for an oracle run
+    // spark.graft.localExactMaxRows=0 forces every hybrid operator
+    // (each dispatches through LocalExact) onto its distributed path
+    // for an oracle run
     graft.util.SetConf(spark)
     // 95 queries over ten base tables: read each parquet once
     graft.util.Tables.enableSessionCache()

@@ -63,26 +63,35 @@ private[graft] object Md5Kernel {
     else ws.split(t, -1).filter(_.nonEmpty)
   }
 
-  /** md5 digest of the UTF-8 bytes, via a per-thread reused instance. */
-  def md5(s: String): Array[Byte] = {
+  /** md5 digest of `utf8`, via a per-thread reused instance. */
+  def md5(utf8: Array[Byte]): Array[Byte] = {
     val md = digest.get()
     md.reset()
-    md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    md.digest(utf8)
   }
+
+  def md5(s: String): Array[Byte] =
+    md5(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** First 8 md5 hex digits (4 digest bytes) as an unsigned 32-bit long. */
-  def md5Int32(s: String): Long = {
-    val d = md5(s)
-    ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-      ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-  }
+  def md5Int32(s: String): Long = prefix32(md5(s))
 
   /** First 15 md5 hex digits (60 bits) as a non-negative long. */
-  def md5Int60(s: String): Long = {
-    val d = md5(s)
+  def md5Int60(s: String): Long = prefix60(md5(s))
+
+  /** The 32- or 60-bit prefix of the md5 of raw UTF-8 bytes — the entry
+    * point of the codegen [[Md5PrefixExpr]] (UTF8String hands its bytes
+    * out without a String round-trip). */
+  def md5Prefix(utf8: Array[Byte], bits: Int): Long =
+    if (bits == 32) prefix32(md5(utf8)) else prefix60(md5(utf8))
+
+  private def prefix32(d: Array[Byte]): Long =
+    ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
+      ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+
+  private def prefix60(d: Array[Byte]): Long =
     ((d(0) & 0xffL) << 52) | ((d(1) & 0xffL) << 44) |
       ((d(2) & 0xffL) << 36) | ((d(3) & 0xffL) << 28) |
       ((d(4) & 0xffL) << 20) | ((d(5) & 0xffL) << 12) |
       ((d(6) & 0xffL) << 4) | ((d(7) & 0xf0L) >> 4)
-  }
 }

@@ -6,33 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Digest entry point for [[Md5PrefixExpr]]: md5 over raw UTF-8 bytes
-  * (UTF8String hands those out without a String round-trip), prefix
-  * assembled as an integer. Bit-identical to the composed column form
-  * `conv(substring(md5(c), 1, 8 | 15), 16, 10)` — the first 8 hex
-  * digits are the first 4 digest bytes unsigned; the first 15 are the
-  * first 7 bytes plus the high nibble of the 8th. */
-object Md5PrefixKernel {
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  def md5Prefix(utf8: Array[Byte], bits: Int): Long = {
-    val md = digest.get()
-    md.reset()
-    val d = md.digest(utf8)
-    if (bits == 32)
-      ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-        ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-    else
-      ((d(0) & 0xffL) << 52) | ((d(1) & 0xffL) << 44) |
-        ((d(2) & 0xffL) << 36) | ((d(3) & 0xffL) << 28) |
-        ((d(4) & 0xffL) << 20) | ((d(5) & 0xffL) << 12) |
-        ((d(6) & 0xffL) << 4) | ((d(7) & 0xf0L) >> 4)
-  }
-}
-
 /** Codegen'd md5-prefix hash of a STRING column: the first 32 or 60
   * bits of the digest as a BIGINT. Replaces the composed
   * `conv(substring(md5(c), 1, n), 16, 10)` form, which allocates a
@@ -40,7 +13,9 @@ object Md5PrefixKernel {
   * the hashed-feature/ngram/minhash families (q180 hashes every token
   * of every document through this). Values are bit-identical to the
   * composed form and to the DuckDB oracle's
-  * `('0x' || substr(md5(x), 1, n))::BIGINT`. */
+  * `('0x' || substr(md5(x), 1, n))::BIGINT`: the first 8 hex digits
+  * are the first 4 digest bytes unsigned; the first 15 are the first 7
+  * bytes plus the high nibble of the 8th ([[Md5Kernel.md5Prefix]]). */
 case class Md5PrefixExpr(child: Expression, bits: Int)
     extends UnaryExpression {
   require(bits == 32 || bits == 60, s"md5_prefix bits must be 32|60, got $bits")
@@ -51,10 +26,10 @@ case class Md5PrefixExpr(child: Expression, bits: Int)
   }
   override def dataType: DataType = LongType
   override protected def nullSafeEval(input: Any): Any =
-    Md5PrefixKernel.md5Prefix(input.asInstanceOf[UTF8String].getBytes, bits)
+    Md5Kernel.md5Prefix(input.asInstanceOf[UTF8String].getBytes, bits)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Md5PrefixKernel.md5Prefix($c.getBytes(), $bits)")
+      s"graft.functions.Md5Kernel.md5Prefix($c.getBytes(), $bits)")
   override protected def withNewChildInternal(newChild: Expression): Md5PrefixExpr =
     copy(child = newChild)
 }

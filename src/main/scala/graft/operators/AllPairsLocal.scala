@@ -195,18 +195,21 @@ object AllPairsLocal {
     out.iterator
   }
 
+  /** Document-count threshold of the one-task path. */
+  private val MaxDocs = 100000L
+
   private def jacBp(inter: Long, s1: Long, s2: Long): Long =
     (inter * 10000L) / (s1 + s2 - inter) // floor div, operands ≥ 0
 
   /** q133 shape over checkpointed `docArr(doc_id, arr, sz)`:
     * (d1, d2, inter, sz1, sz2, jac_bp), d1 < d2, UNSORTED (caller
     * orders). None above the threshold. */
-  def allPairs(docArr: DataFrame, maxRows: Long): Option[DataFrame] =
+  def allPairs(docArr: DataFrame): Option[DataFrame] =
     LocalExact(docArr, StructType(Seq(
       StructField("d1", LongType), StructField("d2", LongType),
       StructField("inter", LongType), StructField("sz1", LongType),
       StructField("sz2", LongType), StructField("jac_bp", LongType))),
-      maxRows) { it =>
+      MaxDocs) { it =>
       val docs = internDocs(it, baseAt = -1)
       verifiedPairs(docs, (a, b) => a.id < b.id).map { case (a, b, inter) =>
         Row(a.id, b.id, inter, a.sz, b.sz, jacBp(inter, a.sz, b.sz))
@@ -219,12 +222,12 @@ object AllPairsLocal {
     * of A's ⌊|A|/5⌋+1 rarest shingles with B's FULL set, so the
     * candidate scan walks A's prefix against the full inverted
     * index. (d_a, d_b, inter, sz_a, sz_b, cont_bp), UNSORTED. */
-  def containment(docArr: DataFrame, maxRows: Long): Option[DataFrame] =
+  def containment(docArr: DataFrame): Option[DataFrame] =
     LocalExact(docArr, StructType(Seq(
       StructField("d_a", LongType), StructField("d_b", LongType),
       StructField("inter", LongType), StructField("sz_a", LongType),
       StructField("sz_b", LongType), StructField("cont_bp", LongType))),
-      maxRows) { it =>
+      MaxDocs) { it =>
       val docs = internDocs(it, baseAt = -1, prefixDiv = 5)
       // identical-set groups (see groupBySet): candidacy, inter and
       // the one-sided threshold are all set-level facts, so probe and
@@ -309,10 +312,10 @@ object AllPairsLocal {
   /** q165 shape over checkpointed `docArr(doc_id, arr, sz, base)`:
     * per incoming doc, its best base match (max jac_bp, tie min base
     * id) — (inc, base_id, jac_bp), UNSORTED. None above threshold. */
-  def incremental(docArr: DataFrame, maxRows: Long): Option[DataFrame] =
+  def incremental(docArr: DataFrame): Option[DataFrame] =
     LocalExact(docArr, StructType(Seq(
       StructField("inc", LongType), StructField("base_id", LongType),
-      StructField("jac_bp", LongType))), maxRows) { it =>
+      StructField("jac_bp", LongType))), MaxDocs) { it =>
       val docs = internDocs(it, baseAt = 3)
       val best = new java.util.HashMap[Long, (Long, Long)]() // inc → (jac, bs)
       verifiedPairs(docs, (a, b) => !a.base && b.base).foreach {

@@ -154,14 +154,15 @@ object BpeTrain {
     * right)` — the q102 registry surface. Two-level: the corpus-sized
     * wordcount behind `wf` is always distributed; the sequential
     * per-rank loop runs locally when the vocab table is bounded
-    * ([[LocalVocabMax]]) and as the distributed [[merges]] loop
-    * otherwise. */
+    * ([[LocalVocabMax]], or the `spark.graft.localExactMaxRows`
+    * override every hybrid reads — [[LocalExact.limit]]) and as the
+    * distributed [[merges]] loop otherwise. */
   def mergeTable(spark: SparkSession, wf: DataFrame, nMerges: Int): DataFrame = {
     import spark.implicits._
     val rows = wf.select(col("word").cast(org.apache.spark.sql.types.StringType),
       col("freq").cast(LongType)).persist()
     val table =
-      if (rows.count() <= LocalVocabMax)
+      if (rows.count() <= LocalExact.limit(spark, LocalVocabMax))
         mergesLocal(rows.collect().map(r => (r.getString(0), r.getLong(1))).toSeq,
           nMerges)
       else merges(rows.toDF("word", "freq"), nMerges)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.GeoFns
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Spatial cluster unification (connected components over a
@@ -69,8 +69,7 @@ object ClusterUnify extends org.apache.spark.internal.Logging {
     * @return `_id`, `_lbl` where `_lbl` = min reachable `_id`.
     */
   def components(nodes: DataFrame, edges0: DataFrame,
-                 maxIters: Int = 25,
-                 localSolveMaxEdges: Long = 500000L): DataFrame = {
+                 maxIters: Int = 25): DataFrame = {
     // the edge set is re-joined every round (and read again by the
     // local kernel): materialize it once. Lazy checkpoint instead of
     // persist (r15) — persist keeps lineage and was unpersisted before
@@ -83,61 +82,60 @@ object ClusterUnify extends org.apache.spark.internal.Logging {
       return nodes.select(col("_id"), col("_id").as("_lbl"))
     }
 
-    // Hybrid algorithm switch (the GraphFrames/GraphX convention): a
+    // Hybrid switch (the GraphFrames/GraphX convention): a
     // post-threshold dup-pair graph is usually a few rows per
     // duplicate cluster, and O(log diameter) distributed rounds cost
     // more in per-stage scheduling than the whole graph. Below the
     // threshold — known for free from the count above — solve
-    // exactly with ONE union-find task (an executor task over a
-    // coalesced partition, not a driver collect); above it, fall
-    // through to the pointer-jumping loop. NOTE: union-find is
-    // direction-insensitive while pointer jumping follows edge
-    // direction, so the two paths agree ONLY for symmetric edge
-    // sets — which the docstring already requires of every caller
-    // (for a lone directed edge b→a with b>a, union-find would
-    // label b with a where pointer jumping leaves b alone). With
-    // symmetric input the output is identical either way:
+    // exactly with ONE union-find task; above it, run the
+    // pointer-jumping loop. NOTE: union-find is direction-insensitive
+    // while pointer jumping follows edge direction, so the two paths
+    // agree ONLY for symmetric edge sets — which the docstring already
+    // requires of every caller (for a lone directed edge b→a with b>a,
+    // union-find would label b with a where pointer jumping leaves b
+    // alone). With symmetric input the output is identical either way:
     // `_lbl` = min reachable id.
-    if (edgeCount <= localSolveMaxEdges) {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        edges.schema("_src").copy(name = "_id"),
-        edges.schema("_src").copy(name = "_lbl")))
-      val lblRdd = edges.coalesce(1).rdd.mapPartitions { it =>
-        val parent = new java.util.HashMap[Any, Any]()
-        def find(x: Any): Any = {
-          var r = x
-          while (parent.get(r) != r) r = parent.get(r)
-          var c = x // path compression
-          while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-          r
-        }
-        def lt(a: Any, b: Any): Boolean =
-          a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
-        it.foreach { row =>
-          val (a, b) = (row.get(0), row.get(1))
-          if (!parent.containsKey(a)) parent.put(a, a)
-          if (!parent.containsKey(b)) parent.put(b, b)
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { // min id becomes the root
-            if (lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
-          }
-        }
-        val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-        parent.keySet().forEach(k => out += org.apache.spark.sql.Row(k, find(k)))
-        out.iterator
-      }
-      // lazy-materialize the one-task result (the LocalExact
-      // convention): the first consumer runs the union-find kernel
-      // once (recomputing only edges' final map stage from its
-      // shuffle files — the cache is gone by then) and every later
-      // pass reads the label blocks; eager was measured ~0.3 s worse
-      // at sf0.1 (extra job barrier > the saved final-stage re-read)
-      val labels = edges.sparkSession.createDataFrame(lblRdd, schema)
-        .localCheckpoint(eager = false)
-      return nodes.join(labels, Seq("_id"), "left")
-        .select(col("_id"), coalesce(col("_lbl"), col("_id")).as("_lbl"))
-    }
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      edges.schema("_src").copy(name = "_id"),
+      edges.schema("_src").copy(name = "_lbl")))
+    val labels = LocalExact(edges, schema, LocalSolveMaxEdges, Some(edgeCount))(unionFind)
+      .getOrElse(pointerJumping(edges, maxIters))
+    nodes.join(labels, Seq("_id"), "left")
+      .select(col("_id"), coalesce(col("_lbl"), col("_id")).as("_lbl"))
+  }
 
+  /** Edge-count threshold of the one-task union-find path. */
+  private val LocalSolveMaxEdges = 500000L
+
+  /** One-task union-find over `(_src, _dst)` rows: `(_id, _lbl)` for
+    * every edge-incident node, `_lbl` = min id of its component. */
+  private def unionFind(it: Iterator[Row]): Iterator[Row] = {
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x // path compression
+      while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+    def lt(a: Any, b: Any): Boolean =
+      a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
+    it.foreach { row =>
+      val (a, b) = (row.get(0), row.get(1))
+      if (!parent.containsKey(a)) parent.put(a, a)
+      if (!parent.containsKey(b)) parent.put(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { // min id becomes the root
+        if (lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
+      }
+    }
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+    parent.keySet().forEach(k => out += Row(k, find(k)))
+    out.iterator
+  }
+
+  /** The distributed path: `(_id, _lbl)` for every edge-incident node. */
+  private def pointerJumping(edges: DataFrame, maxIters: Int): DataFrame = {
     // Iterate ONLY the edge-incident subgraph: a node with no edge can
     // never leave its singleton label, so the loop runs over the
     // active vertices (dup-cluster members — orders of magnitude fewer
@@ -184,7 +182,6 @@ object ClusterUnify extends org.apache.spark.internal.Logging {
       logInfo(s"cluster-unify round $iter: changed=$changed " +
         f"(${(System.nanoTime() - t0) / 1e9}%.2fs)")
     }
-    nodes.join(labels, Seq("_id"), "left")
-      .select(col("_id"), coalesce(col("_lbl"), col("_id")).as("_lbl"))
+    labels
   }
 }

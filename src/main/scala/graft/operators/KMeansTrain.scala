@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StructField, StructType}
 
 import graft.functions.VectorFns
 
@@ -51,7 +51,6 @@ object KMeansTrain {
     *   oracle-replayable form). */
   def train(vectors: DataFrame, idCol: String, vecCol: String,
             k: Int, iters: Int,
-            localSolveMaxVectors: Long = 2000000L,
             autoCellTarget: Option[Int] = None): DataFrame = {
     // pin the caller's (possibly expensive) vector derivation ONCE
     // before the threshold count — without the checkpoint the count
@@ -62,13 +61,25 @@ object KMeansTrain {
     val n = vecs.count()
     val kEff = autoCellTarget
       .map(t => math.max(k.toLong, (n + t - 1) / t).toInt).getOrElse(k)
-    // Hybrid switch (ClusterUnify/PageRank/Perceptron convention):
-    // below the threshold the whole Lloyd loop runs in one executor
-    // task with the identical scaled-long / HALF_UP arithmetic —
-    // above it, the broadcast-assignment iterations below are
-    // unchanged (the 100-TB path: each iteration is one corpus pass).
-    if (n <= localSolveMaxVectors)
-      return localSolve(vecs, kEff, iters)
+    // Hybrid switch (LocalExact, reusing the count above): below the
+    // threshold the whole Lloyd loop runs in one executor task with
+    // the identical scaled-long / HALF_UP arithmetic — above it, the
+    // broadcast-assignment iterations (the 100-TB path: each
+    // iteration is one corpus pass).
+    val isFloat = vecs.schema("_v").dataType
+      .asInstanceOf[ArrayType].elementType == FloatType
+    LocalExact(vecs, LocalSchema, LocalSolveMaxVectors, Some(n))(
+      localSolve(_, kEff, iters, isFloat))
+      .getOrElse(distributed(vecs, kEff, iters))
+  }
+
+  /** Vector-count threshold of the one-task path. */
+  private val LocalSolveMaxVectors = 2000000L
+
+  private val LocalSchema = StructType(Seq(StructField("cell_id", LongType),
+    StructField("cell_vec", ArrayType(DoubleType))))
+
+  private def distributed(vecs: DataFrame, kEff: Int, iters: Int): DataFrame = {
     var cents = vecs.filter(col("_vid") < kEff)
       .select(col("_vid").as("cell_id"),
         transform(col("_v"), x => x.cast(DoubleType)).as("cell_vec"))
@@ -114,76 +125,63 @@ object KMeansTrain {
     * contribute to fewer dims); empty clusters keep their previous
     * centroid; means round to 6 decimals via the same BigDecimal
     * HALF_UP as Catalyst's `round(x, 6)`. */
-  private def localSolve(vecs: DataFrame, k: Int, iters: Int): DataFrame = {
-    import org.apache.spark.sql.types.{ArrayType, FloatType, StructField, StructType}
-    val isFloat = vecs.schema("_v").dataType
-      .asInstanceOf[ArrayType].elementType == FloatType
-    val schema = StructType(Seq(StructField("cell_id", LongType),
-      StructField("cell_vec", ArrayType(DoubleType))))
-    val rows = vecs.coalesce(1).rdd.mapPartitions { it =>
-      import graft.functions.VectorKernels.halfUpLong
-      val data = it.map { r =>
-        val v = if (isFloat) r.getSeq[Float](1).map(_.toDouble).toArray
-          else r.getSeq[Double](1).toArray
-        (r.getLong(0), v)
-      }.toArray
-      def dot(a: Array[Double], b: Array[Double]): Long = {
-        val n = math.min(a.length, b.length)
-        var s = 0L
-        var i = 0
-        while (i < n) { s += halfUpLong(a(i) * b(i) * 1e10); i += 1 }
-        s
-      }
-      def round6(v: Double): Double = java.math.BigDecimal.valueOf(v)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-      var cents = data.filter(_._1 < k).sortBy(_._1)
-        .map { case (id, v) => (id, v.clone()) }
-      if (cents.isEmpty) Iterator.empty
-      else {
-        val normV = data.map { case (_, v) => dot(v, v) }
-        for (_ <- 0 until iters) {
-          val normC = cents.map { case (_, c) => dot(c, c) }
-          val dimMax = data.iterator.map(_._2.length).max
-          val xsum = Array.ofDim[Long](cents.length, dimMax)
-          val cnt = Array.ofDim[Long](cents.length, dimMax)
-          var vi = 0
-          while (vi < data.length) {
-            val v = data(vi)._2
-            var best = 0
-            var bestD = Long.MaxValue
-            var bestId = Long.MaxValue
-            var j = 0
-            while (j < cents.length) {
-              val d = normV(vi) - 2L * dot(v, cents(j)._2) + normC(j)
-              if (d < bestD || (d == bestD && cents(j)._1 < bestId)) {
-                best = j; bestD = d; bestId = cents(j)._1
-              }
-              j += 1
-            }
-            var di = 0
-            while (di < v.length) {
-              xsum(best)(di) += halfUpLong(v(di) * 1e10)
-              cnt(best)(di) += 1L
-              di += 1
-            }
-            vi += 1
-          }
-          cents = cents.zipWithIndex.map { case ((id, old), j) =>
-            val nDims = cnt(j).lastIndexWhere(_ > 0L) + 1
-            if (nDims == 0) (id, old) // empty cluster keeps centroid
-            else (id, Array.tabulate(nDims)(d =>
-              round6(xsum(j)(d).toDouble / cnt(j)(d).toDouble / 1e10)))
-          }
-        }
-        cents.iterator.map { case (id, v) =>
-          org.apache.spark.sql.Row(id, v.toSeq)
-        }
-      }
+  private def localSolve(it: Iterator[Row], k: Int, iters: Int,
+                         isFloat: Boolean): Iterator[Row] = {
+    import graft.functions.VectorKernels.halfUpLong
+    val data = it.map { r =>
+      val v = if (isFloat) r.getSeq[Float](1).map(_.toDouble).toArray
+        else r.getSeq[Double](1).toArray
+      (r.getLong(0), v)
+    }.toArray
+    def dot(a: Array[Double], b: Array[Double]): Long = {
+      val n = math.min(a.length, b.length)
+      var s = 0L
+      var i = 0
+      while (i < n) { s += halfUpLong(a(i) * b(i) * 1e10); i += 1 }
+      s
     }
-    // lazy-materialize the one-task result: consumers broadcast or
-    // sort the k-row codebook, and each pass would otherwise re-run
-    // the whole Lloyd kernel (the LocalExact convention)
-    vecs.sparkSession.createDataFrame(rows, schema)
-      .localCheckpoint(eager = false)
+    def round6(v: Double): Double = java.math.BigDecimal.valueOf(v)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    var cents = data.filter(_._1 < k).sortBy(_._1)
+      .map { case (id, v) => (id, v.clone()) }
+    if (cents.isEmpty) Iterator.empty
+    else {
+      val normV = data.map { case (_, v) => dot(v, v) }
+      for (_ <- 0 until iters) {
+        val normC = cents.map { case (_, c) => dot(c, c) }
+        val dimMax = data.iterator.map(_._2.length).max
+        val xsum = Array.ofDim[Long](cents.length, dimMax)
+        val cnt = Array.ofDim[Long](cents.length, dimMax)
+        var vi = 0
+        while (vi < data.length) {
+          val v = data(vi)._2
+          var best = 0
+          var bestD = Long.MaxValue
+          var bestId = Long.MaxValue
+          var j = 0
+          while (j < cents.length) {
+            val d = normV(vi) - 2L * dot(v, cents(j)._2) + normC(j)
+            if (d < bestD || (d == bestD && cents(j)._1 < bestId)) {
+              best = j; bestD = d; bestId = cents(j)._1
+            }
+            j += 1
+          }
+          var di = 0
+          while (di < v.length) {
+            xsum(best)(di) += halfUpLong(v(di) * 1e10)
+            cnt(best)(di) += 1L
+            di += 1
+          }
+          vi += 1
+        }
+        cents = cents.zipWithIndex.map { case ((id, old), j) =>
+          val nDims = cnt(j).lastIndexWhere(_ > 0L) + 1
+          if (nDims == 0) (id, old) // empty cluster keeps centroid
+          else (id, Array.tabulate(nDims)(d =>
+            round6(xsum(j)(d).toDouble / cnt(j)(d).toDouble / 1e10)))
+        }
+      }
+      cents.iterator.map { case (id, v) => Row(id, v.toSeq) }
+    }
   }
 }

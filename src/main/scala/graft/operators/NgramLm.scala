@@ -169,6 +169,10 @@ object NgramLm {
           .as("mean_surprisal"))
   }
 
+  /** Document-count threshold of the one-task paths of [[selfScore]]
+    * and [[DsirSelect.select]]. */
+  private[operators] val LocalSolveMaxDocs = 200000L
+
   /** Self-scoring (train on `docs`, score `docs`) in ONE corpus pass:
     * the per-(doc, gram) count aggregate is materialized once
     * (localCheckpoint, distinct-(doc,gram)-sized) and feeds BOTH the
@@ -177,8 +181,7 @@ object NgramLm {
     * not fire across the differently-pruned branches (measured r8:
     * 2.6 s → 1.5 s at sf0.1). Identical numbers: per-occurrence sums
     * become cnt-weighted sums over the distinct-gram rows. */
-  def selfScore(docs: DataFrame, idCol: String, textCol: String,
-                localSolveMaxDocs: Long = 200000L): DataFrame = {
+  def selfScore(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // LocalExact hybrid: below the doc threshold, train + score run
     // in one sequential pass with the identical BigInt round-half-up
     // and integer floor-log2 (LocalExactParitySpec pins the paths)
@@ -188,7 +191,7 @@ object NgramLm {
         org.apache.spark.sql.types.StructField("n_bigrams", LongType),
         org.apache.spark.sql.types.StructField("mean_p_scaled", LongType),
         org.apache.spark.sql.types.StructField("mean_surprisal", DoubleType))),
-      localSolveMaxDocs) { it =>
+      LocalSolveMaxDocs) { it =>
       val rows = it.map(r => (r.getLong(0), r.getString(1))).toArray
       val cab = new java.util.HashMap[String, Long]()
       rows.foreach { case (_, t) =>
@@ -300,8 +303,7 @@ object DsirSelect {
     * tiny distinct-gram aggregate, whose exchange Spark reuses across
     * the model and scoring branches. */
   def select(docs: DataFrame, idCol: String, textCol: String,
-             targetFlag: Column, nBuckets: Int, k: Int,
-             localSolveMaxDocs: Long = 200000L): DataFrame = {
+             targetFlag: Column, nBuckets: Int, k: Int): DataFrame = {
     // LocalExact hybrid (the NgramLm.selfScore convention): one
     // sequential pass builds both bucket models and scores + selects,
     // with the identical md5 bucketing (Md5Kernel.md5Int32), BigInt
@@ -312,7 +314,7 @@ object DsirSelect {
         org.apache.spark.sql.types.StructField(idCol, LongType),
         org.apache.spark.sql.types.StructField("n_bigrams", LongType),
         org.apache.spark.sql.types.StructField("dsir_logw", LongType))),
-      localSolveMaxDocs) { it =>
+      NgramLm.LocalSolveMaxDocs) { it =>
       import graft.functions.Md5Kernel
       val rows = it.map(r => (r.getLong(0), r.getBoolean(1), r.getString(2))).toArray
       val ct = new java.util.HashMap[String, Long]()

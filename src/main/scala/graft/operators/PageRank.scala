@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Fixed-iteration PageRank (power method, Brin & Page 1998) over an
   * edge table — entity-importance scoring, the graph-quality signal a
@@ -42,38 +43,36 @@ object PageRank {
     * dstType, dstKey)` (typed keys let bipartite graphs share the
     * node space); returns `(node_type, node_key, score)`.
     *
-    * `edgesMaterialized = true` tells PageRank the caller already
-    * put a materialization barrier (checkpoint/cache) under `edges`,
-    * so the internal edge checkpoint is skipped: `e` stays a lazy
-    * projection over the caller's RDD and its two consumers (deg,
-    * eAug) each pay only a cheap local re-scan instead of one more
-    * full job barrier. Stacked barriers are exactly what regressed
-    * q106 under a cold driver window (+1.8 s, round-10 verdict). */
-  def apply(edges: DataFrame, iters: Int, scale: Long = 1000000000000L,
-            edgesMaterialized: Boolean = false,
-            localSolveMaxEdges: Long = 2000000L): DataFrame = {
-    val spark = edges.sparkSession
-    // materialize the (possibly expensive) caller-supplied edge
-    // derivation ONCE — e feeds both deg and eAug, and without the
-    // checkpoint its upstream plan (q106: an orders⋈lineitem distinct)
-    // executes twice
-    val eProj = edges.select(
+    * The caller MATERIALIZES `edges` (checkpoint/cache), as
+    * [[TriangleCount]] requires too: the dispatch count and the chosen
+    * path each re-read it, so an unmaterialized derivation (q106: an
+    * orders⋈lineitem distinct) would execute twice. PageRank stacks no
+    * barrier of its own on top — stacked barriers are exactly what
+    * regressed q106 in a cold bench window (+1.8 s, round-10
+    * verdict). */
+  def apply(edges: DataFrame, iters: Int, scale: Long = 1000000000000L): DataFrame = {
+    val e = edges.select(
       col("srcType").as("st"), col("srcKey").cast(LongType).as("sk"),
       col("dstType").as("dt"), col("dstKey").cast(LongType).as("dk"))
-    // lazy: the hybrid-switch count below is the first consumer and
-    // materializes the blocks — one job instead of barrier + count
-    val e = if (edgesMaterialized) eProj
-            else eProj.localCheckpoint(eager = false)
-    // Hybrid switch (the ClusterUnify convention): below the edge
-    // threshold the whole power iteration runs as ONE union-find-style
-    // executor task over a coalesced partition — integer math
-    // identical to the distributed loop below (score DIV outdeg per
-    // edge, base + (85·inc) DIV 100 per node, and the same
-    // destination-only state regeneration), so the two paths are
-    // bit-equal. The count is one cheap job over the materialized
-    // edge relation; above the threshold the stationary-relation
-    // Pregel loop is unchanged.
-    if (e.count() <= localSolveMaxEdges) return localSolve(e, iters, scale)
+    // Hybrid switch: below the edge threshold the whole power
+    // iteration runs as ONE executor task — integer math identical to
+    // the distributed loop (score DIV outdeg per edge, base +
+    // (85·inc) DIV 100 per node, and the same destination-only state
+    // regeneration), so the two paths are bit-equal. Above it, the
+    // stationary-relation Pregel loop.
+    LocalExact.internal(e, LocalSchema, LocalSolveMaxEdges)(localSolve(_, iters, scale))
+      .getOrElse(distributed(e, iters, scale))
+  }
+
+  /** Edge-count threshold of the one-task path. */
+  private val LocalSolveMaxEdges = 2000000L
+
+  private val LocalSchema = StructType(Seq(
+    StructField("node_type", StringType),
+    StructField("node_key", LongType),
+    StructField("score", LongType)))
+
+  private def distributed(e: DataFrame, iters: Int, scale: Long): DataFrame = {
     // LAZY checkpoint: deg's consumers are strictly sequential driver
     // actions — the n-count below materializes it, then eAug's join
     // and the initial state read the persisted blocks — so the lazy
@@ -143,109 +142,92 @@ object PageRank {
     * nodes (= deg rows); the state after each iteration covers only
     * nodes that RECEIVED a contribution (the join-aggregate shape —
     * src-only nodes drop out exactly as they do distributed); all
-    * arithmetic is the same truncating integer division. */
-  private def localSolve(e: DataFrame, iters: Int, scale: Long): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("node_key", LongType),
-      org.apache.spark.sql.types.StructField("score", LongType)))
-    // Read the kernel's input as INTERNAL rows (r14 optimization
-    // round, guide §1.2 per-task work): the public .rdd path converts
-    // every InternalRow to a GenericRowWithSchema with two fresh
-    // String allocations — measured 0.7 s of the 0.8 s single-task
-    // read at 1.17M edges, vs 0.07 s for all five score iterations.
-    // Type strings compare against a ≤|types| UTF8String dictionary
-    // (cloned on store — UnsafeRow buffers are reused), keys intern
-    // through a specialized LongMap, and member arrays are primitive —
-    // no per-edge allocation anywhere.
-    val rows = e.coalesce(1).queryExecution.toRdd.mapPartitions { it =>
-      import scala.collection.mutable
-      import org.apache.spark.unsafe.types.UTF8String
-      val typeNames = mutable.ArrayBuffer.empty[UTF8String]
-      val typeMaps = mutable.ArrayBuffer.empty[mutable.LongMap[Int]]
-      val keyType = mutable.ArrayBuffer.empty[Int] // node -> type idx
-      val keyVal = mutable.ArrayBuffer.empty[Long] // node -> key
-      def typeId(t: UTF8String): Int = {
-        var i = 0
-        while (i < typeNames.length) {
-          if (typeNames(i) == t) return i
-          i += 1
-        }
-        typeNames += t.clone()
-        typeMaps += mutable.LongMap.empty[Int]
-        typeNames.length - 1
+    * arithmetic is the same truncating integer division.
+    *
+    * Type strings compare against a ≤|types| UTF8String dictionary
+    * (cloned on store — UnsafeRow buffers are reused), keys intern
+    * through a specialized LongMap, and member arrays are primitive —
+    * no per-edge allocation anywhere. */
+  private def localSolve(it: Iterator[InternalRow], iters: Int, scale: Long): Iterator[Row] = {
+    import scala.collection.mutable
+    import org.apache.spark.unsafe.types.UTF8String
+    val typeNames = mutable.ArrayBuffer.empty[UTF8String]
+    val typeMaps = mutable.ArrayBuffer.empty[mutable.LongMap[Int]]
+    val keyType = mutable.ArrayBuffer.empty[Int] // node -> type idx
+    val keyVal = mutable.ArrayBuffer.empty[Long] // node -> key
+    def typeId(t: UTF8String): Int = {
+      var i = 0
+      while (i < typeNames.length) {
+        if (typeNames(i) == t) return i
+        i += 1
       }
-      def id(t: UTF8String, k: Long): Int = {
-        val ti = typeId(t)
-        val got = typeMaps(ti).getOrElse(k, -1) // node ids are >= 0
-        if (got >= 0) got
-        else {
-          val nid = keyType.length
-          typeMaps(ti).update(k, nid)
-          keyType += ti; keyVal += k
-          nid
-        }
-      }
-      var srcs = new Array[Int](1 << 16)
-      var dsts = new Array[Int](1 << 16)
-      var nE = 0
-      it.foreach { r =>
-        if (nE == srcs.length) {
-          srcs = java.util.Arrays.copyOf(srcs, nE * 2)
-          dsts = java.util.Arrays.copyOf(dsts, nE * 2)
-        }
-        srcs(nE) = id(r.getUTF8String(0), r.getLong(1))
-        dsts(nE) = id(r.getUTF8String(2), r.getLong(3))
-        nE += 1
-      }
-      val nN = keyType.length
-      val outdeg = new Array[Long](nN)
-      var ei = 0
-      while (ei < nE) { outdeg(srcs(ei)) += 1; ei += 1 }
-      val n = outdeg.count(_ > 0L) // deg.count(): distinct sources
-      if (n == 0) Iterator.empty
+      typeNames += t.clone()
+      typeMaps += mutable.LongMap.empty[Int]
+      typeNames.length - 1
+    }
+    def id(t: UTF8String, k: Long): Int = {
+      val ti = typeId(t)
+      val got = typeMaps(ti).getOrElse(k, -1) // node ids are >= 0
+      if (got >= 0) got
       else {
-        val base = (15L * (scale / n)) / 100L
-        val score = Array.fill[Long](nN)(scale / n)
-        val active = Array.tabulate[Boolean](nN)(outdeg(_) > 0L)
-        for (_ <- 0 until iters) {
-          val inc = new Array[Long](nN)
-          val nextActive = new Array[Boolean](nN)
-          var i = 0
-          while (i < nE) {
-            val s = srcs(i)
-            if (active(s)) {
-              val d = dsts(i)
-              // mirror the distributed eAug inner join with the
-              // source-degree table: edges to a sink destination
-              // (outdeg 0) never enter state there, so they must not
-              // receive contributions here either
-              if (outdeg(d) > 0L) {
-                inc(d) += score(s) / outdeg(s)
-                nextActive(d) = true
-              }
-            }
-            i += 1
-          }
-          var j = 0
-          while (j < nN) {
-            if (nextActive(j)) score(j) = base + (85L * inc(j)) / 100L
-            j += 1
-          }
-          System.arraycopy(nextActive, 0, active, 0, nN)
-        }
-        (0 until nN).iterator.collect {
-          case i if active(i) =>
-            org.apache.spark.sql.Row(
-              typeNames(keyType(i)).toString, keyVal(i), score(i))
-        }
+        val nid = keyType.length
+        typeMaps(ti).update(k, nid)
+        keyType += ti; keyVal += k
+        nid
       }
     }
-    // lazy-materialize the one-task result: the caller's global
-    // orderBy (range-sample + sort) would otherwise run the kernel
-    // twice (the LocalExact convention)
-    e.sparkSession.createDataFrame(rows, schema)
-      .localCheckpoint(eager = false)
+    var srcs = new Array[Int](1 << 16)
+    var dsts = new Array[Int](1 << 16)
+    var nE = 0
+    it.foreach { r =>
+      if (nE == srcs.length) {
+        srcs = java.util.Arrays.copyOf(srcs, nE * 2)
+        dsts = java.util.Arrays.copyOf(dsts, nE * 2)
+      }
+      srcs(nE) = id(r.getUTF8String(0), r.getLong(1))
+      dsts(nE) = id(r.getUTF8String(2), r.getLong(3))
+      nE += 1
+    }
+    val nN = keyType.length
+    val outdeg = new Array[Long](nN)
+    var ei = 0
+    while (ei < nE) { outdeg(srcs(ei)) += 1; ei += 1 }
+    val n = outdeg.count(_ > 0L) // deg.count(): distinct sources
+    if (n == 0) Iterator.empty
+    else {
+      val base = (15L * (scale / n)) / 100L
+      val score = Array.fill[Long](nN)(scale / n)
+      val active = Array.tabulate[Boolean](nN)(outdeg(_) > 0L)
+      for (_ <- 0 until iters) {
+        val inc = new Array[Long](nN)
+        val nextActive = new Array[Boolean](nN)
+        var i = 0
+        while (i < nE) {
+          val s = srcs(i)
+          if (active(s)) {
+            val d = dsts(i)
+            // mirror the distributed eAug inner join with the
+            // source-degree table: edges to a sink destination
+            // (outdeg 0) never enter state there, so they must not
+            // receive contributions here either
+            if (outdeg(d) > 0L) {
+              inc(d) += score(s) / outdeg(s)
+              nextActive(d) = true
+            }
+          }
+          i += 1
+        }
+        var j = 0
+        while (j < nN) {
+          if (nextActive(j)) score(j) = base + (85L * inc(j)) / 100L
+          j += 1
+        }
+        System.arraycopy(nextActive, 0, active, 0, nN)
+      }
+      (0 until nN).iterator.collect {
+        case i if active(i) =>
+          Row(typeNames(keyType(i)).toString, keyVal(i), score(i))
+      }
+    }
   }
 }

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Batch-gradient perceptron TRAINING over hashed bag-of-words
   * features — the in-engine trainer for the linear text filters a
@@ -50,89 +51,88 @@ object Perceptron {
     * count. Returns `(b, w)`, one row per bucket, zero-initialized
     * buckets included even when no document touches them.
     *
-    * `localSolveMaxRows` gates on FEATURE ROWS (≥ docs, ≤ docs ×
-    * (nBuckets+1)); r14's gate counted the per-doc array table, which
-    * cost a corpus-wide collect_list aggregate + eager checkpoint just
-    * to decide the dispatch (FloorProbe: the whole q180 build phase).
-    * Sub-threshold, the kernel consumes the RAW feature rows in flat
-    * primitive arrays — no per-doc array build at all. */
-  def train(feats: DataFrame, nBuckets: Int, iters: Int,
-            localSolveMaxRows: Long = 2000000L): DataFrame = {
-    val spark = feats.sparkSession
-    import spark.implicits._
+    * The hybrid switch ([[LocalExact]]) gates on FEATURE ROWS (≥
+    * docs, ≤ docs × (nBuckets+1)); r14's gate counted the per-doc
+    * array table, which cost a corpus-wide collect_list aggregate +
+    * eager checkpoint just to decide the dispatch (FloorProbe: the
+    * whole q180 build phase). Sub-threshold, the kernel consumes the
+    * RAW feature rows in flat primitive arrays — no per-doc array
+    * build at all. */
+  def train(feats: DataFrame, nBuckets: Int, iters: Int): DataFrame = {
     // slim projection materialized once: the dispatch count and the
     // chosen path both read it
     val fm = feats.select(col("doc_id").cast(LongType).as("doc_id"),
         col("y").cast(LongType).as("y"), col("b").cast(LongType).as("b"),
         col("x").cast(LongType).as("x"))
       .localCheckpoint(eager = false)
-    val limit = spark.conf
-      .getOption("spark.graft.localExactMaxRows").map(_.toLong)
-      .getOrElse(localSolveMaxRows)
-    if (fm.count() <= limit) {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("b",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("w",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      // InternalRow reader + flat row-major arrays (the PageRank r14
-      // kernel idiom): margins and updates are both single passes over
-      // the row arrays — per-doc feature lists never materialize. The
-      // batch update is a sum of longs, so row order cannot affect the
-      // weights (OperatorSpec pins partition invariance).
-      val rows = fm.coalesce(1).queryExecution.toRdd.mapPartitions { it =>
-        import scala.collection.mutable
-        val docIdx = mutable.LongMap.empty[Int]
-        val ys = new mutable.ArrayBuffer[Long]()
-        var rd = new Array[Int](1 << 12)
-        var rb = new Array[Int](1 << 12)
-        var rx = new Array[Long](1 << 12)
-        var nR = 0
-        it.foreach { r =>
-          if (nR == rd.length) {
-            rd = java.util.Arrays.copyOf(rd, nR * 2)
-            rb = java.util.Arrays.copyOf(rb, nR * 2)
-            rx = java.util.Arrays.copyOf(rx, nR * 2)
-          }
-          val d = r.getLong(0)
-          val di = docIdx.getOrElse(d, -1)
-          rd(nR) =
-            if (di >= 0) di
-            else {
-              val nd = ys.length
-              docIdx.update(d, nd)
-              ys += r.getLong(1)
-              nd
-            }
-          rb(nR) = r.getLong(2).toInt
-          rx(nR) = r.getLong(3)
-          nR += 1
-        }
-        val nD = ys.length
-        val w = Array.fill(nBuckets + 1)(0L)
-        for (_ <- 1 to iters) {
-          val m = new Array[Long](nD)
-          var i = 0
-          while (i < nR) { m(rd(i)) += w(rb(i)) * rx(i); i += 1 }
-          val upd = Array.fill(nBuckets + 1)(0L)
-          i = 0
-          while (i < nR) {
-            val d = rd(i)
-            if (ys(d) * m(d) <= 0L) upd(rb(i)) += ys(d) * rx(i)
-            i += 1
-          }
-          var b = 0
-          while (b <= nBuckets) { w(b) += upd(b); b += 1 }
-        }
-        (0 to nBuckets).iterator
-          .map(b => org.apache.spark.sql.Row(b.toLong, w(b)))
+    LocalExact.internal(fm, LocalSchema, LocalSolveMaxRows)(localSolve(_, nBuckets, iters))
+      .getOrElse(distributed(fm, nBuckets, iters))
+  }
+
+  /** Feature-row threshold of the one-task path. */
+  private val LocalSolveMaxRows = 2000000L
+
+  private val LocalSchema = StructType(Seq(
+    StructField("b", LongType, nullable = false),
+    StructField("w", LongType, nullable = false)))
+
+  /** One-task replay over the raw `(doc_id, y, b, x)` rows, in flat
+    * row-major arrays (the PageRank r14 kernel idiom): margins and
+    * updates are both single passes over the row arrays — per-doc
+    * feature lists never materialize. The batch update is a sum of
+    * longs, so row order cannot affect the weights (OperatorSpec pins
+    * partition invariance). */
+  private def localSolve(it: Iterator[InternalRow], nBuckets: Int,
+                         iters: Int): Iterator[Row] = {
+    import scala.collection.mutable
+    val docIdx = mutable.LongMap.empty[Int]
+    val ys = new mutable.ArrayBuffer[Long]()
+    var rd = new Array[Int](1 << 12)
+    var rb = new Array[Int](1 << 12)
+    var rx = new Array[Long](1 << 12)
+    var nR = 0
+    it.foreach { r =>
+      if (nR == rd.length) {
+        rd = java.util.Arrays.copyOf(rd, nR * 2)
+        rb = java.util.Arrays.copyOf(rb, nR * 2)
+        rx = java.util.Arrays.copyOf(rx, nR * 2)
       }
-      // lazy-materialize the one-task result so downstream passes
-      // (broadcast + sort) run the multi-round kernel once
-      // (the LocalExact convention)
-      return spark.createDataFrame(rows, schema)
-        .localCheckpoint(eager = false)
+      val d = r.getLong(0)
+      val di = docIdx.getOrElse(d, -1)
+      rd(nR) =
+        if (di >= 0) di
+        else {
+          val nd = ys.length
+          docIdx.update(d, nd)
+          ys += r.getLong(1)
+          nd
+        }
+      rb(nR) = r.getLong(2).toInt
+      rx(nR) = r.getLong(3)
+      nR += 1
     }
+    val nD = ys.length
+    val w = Array.fill(nBuckets + 1)(0L)
+    for (_ <- 1 to iters) {
+      val m = new Array[Long](nD)
+      var i = 0
+      while (i < nR) { m(rd(i)) += w(rb(i)) * rx(i); i += 1 }
+      val upd = Array.fill(nBuckets + 1)(0L)
+      i = 0
+      while (i < nR) {
+        val d = rd(i)
+        if (ys(d) * m(d) <= 0L) upd(rb(i)) += ys(d) * rx(i)
+        i += 1
+      }
+      var b = 0
+      while (b <= nBuckets) { w(b) += upd(b); b += 1 }
+    }
+    (0 to nBuckets).iterator.map(b => Row(b.toLong, w(b)))
+  }
+
+  private def distributed(fm: DataFrame, nBuckets: Int, iters: Int): DataFrame = {
+    val spark = fm.sparkSession
+    import spark.implicits._
     // over-threshold: one array-pair row per doc, materialized once —
     // every round re-reads this, never the raw feature stream.
     // array_sort on the (b, x) struct pins the collect_list order

@@ -59,8 +59,8 @@ object PrefixSum {
     // consumer's subtree, canonical equality breaks, and AQE
     // re-executes the input per consumer (measured on q84: every
     // stage duplicated, input computed 4×). LAZY so construction pays
-    // no synchronous job; inputs the CALLER already checkpointed
-    // (q122/q144/q145 share their cell table with other consumers)
+    // no synchronous job; inputs the CALLER already checkpointed (q122
+    // eagerly; q144/q145 share their cell table with other consumers)
     // are passed through — re-checkpointing a checkpoint scan would
     // copy every block for nothing.
     val dfm =

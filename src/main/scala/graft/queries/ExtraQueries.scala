@@ -494,59 +494,23 @@ object ExtraQueries {
       (s, dir) => {
         val v = Tables(s, dir, "lineitem")
           .select(expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)").as("p"))
-        // materialized once: g feeds the prefix sum (which range-
-        // repartitions it) and the global total — different exchanges
         val g = v.groupBy(col("p")).agg(count(lit(1)).cast(LongType).as("c"))
-          .localCheckpoint(eager = false)
-        // LocalExact hybrid: the cell table is bounded by the price
-        // domain — one sorted sequential pass bins exactly, same
-        // rows_strictly_below rule. Threshold 200k (r14 optimization
-        // round): cents-quantized prices are nearly UNIQUE per row
-        // (sf0.1: ~500k cells from 600k rows), so this cell table is
-        // row-scaled, not domain-bounded — a same-window A/B read the
-        // distributed PrefixSum path 1.31 s vs 1.51 s through the
-        // one-task kernel at 500k cells. Genuinely bounded domains
-        // (q130's quantized grid, q146's buckets) keep their 5M
-        // thresholds — forced-distributed loses 0.8→2.4 s there.
-        val localOut = graft.operators.LocalExact(g,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("decile", LongType),
-            org.apache.spark.sql.types.StructField("n_rows", LongType),
-            org.apache.spark.sql.types.StructField("min_cents", LongType),
-            org.apache.spark.sql.types.StructField("max_cents", LongType))),
-          200000L) { it =>
-          val cells = it.map(r => (r.getLong(0), r.getLong(1))).toArray.sortBy(_._1)
-          val n = cells.map(_._2).sum
-          if (n == 0) Iterator.empty
-          else {
-            val nr = new Array[Long](10)
-            val mn = Array.fill(10)(Long.MaxValue)
-            val mx = Array.fill(10)(Long.MinValue)
-            var below = 0L
-            cells.foreach { case (p, c) =>
-              val d = ((below * 10) / n).toInt
-              nr(d) += c
-              if (p < mn(d)) mn(d) = p
-              if (p > mx(d)) mx(d) = p
-              below += c
-            }
-            (0 until 10).iterator.filter(nr(_) > 0L)
-              .map(d => org.apache.spark.sql.Row(d.toLong, nr(d), mn(d), mx(d)))
-          }
-        }
-        localOut.getOrElse {
-          // totalCol folds the corpus count into PrefixSum's offsets
-          // window (r15: drops the separate SUM(c) aggregate branch
-          // and its BroadcastNestedLoopJoin cross join)
-          val cum = graft.operators.PrefixSum(g, "p", "c", "cum",
-            totalCol = Some("n"))
-          cum
-            .withColumn("decile", expr("((cum - c) * 10) div n"))
-            .groupBy(col("decile"))
-            .agg(sum(col("c")).cast(LongType).as("n_rows"),
-              min(col("p")).as("min_cents"),
-              max(col("p")).as("max_cents"))
-        }.orderBy(col("decile"))
+          // eager, measured: PrefixSum's bounds, totals and probe
+          // branches read g in concurrent stages, and under a lazy
+          // checkpoint they race-compute it before the cache lands
+          // (the q130 race; same-window Probe at sf0.1, 4 cores:
+          // 2.88/3.57 s lazy vs 2.65/2.66 s eager)
+          .localCheckpoint()
+        // totalCol folds the corpus count into PrefixSum's offsets
+        // window (r15: drops the separate SUM(c) aggregate branch and
+        // its BroadcastNestedLoopJoin cross join)
+        graft.operators.PrefixSum(g, "p", "c", "cum", totalCol = Some("n"))
+          .withColumn("decile", expr("((cum - c) * 10) div n"))
+          .groupBy(col("decile"))
+          .agg(sum(col("c")).cast(LongType).as("n_rows"),
+            min(col("p")).as("min_cents"),
+            max(col("p")).as("max_cents"))
+          .orderBy(col("decile"))
       },
       Some("""WITH v AS (SELECT CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS p
              |  FROM lineitem),

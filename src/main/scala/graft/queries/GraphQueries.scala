@@ -34,17 +34,16 @@ object GraphQueries {
           // branches of one plan — without the barrier the
           // orders⋈lineitem distinct (the query's heaviest stage)
           // executes twice inside PageRank's edge materialization.
-          // This is the ONLY barrier under the edge set:
-          // edgesMaterialized=true tells PageRank not to stack a
-          // second checkpoint on what is now a cheap lazy union over
-          // this RDD (the double barrier read +1.8 s in the r10
-          // driver window)
+          // This is the ONLY barrier under the edge set: PageRank
+          // stacks no second checkpoint on what is now a cheap lazy
+          // union over this RDD (the double barrier read +1.8 s in
+          // the r10 bench window)
           .localCheckpoint()
         val edges = ce.selectExpr("'c' AS srcType", "c AS srcKey",
             "'s' AS dstType", "sup AS dstKey")
           .unionAll(ce.selectExpr("'s' AS srcType", "sup AS srcKey",
             "'c' AS dstType", "c AS dstKey"))
-        PageRank(edges, iters = 5, edgesMaterialized = true)
+        PageRank(edges, iters = 5)
           .orderBy(col("node_type"), col("node_key"))
       },
       Some("""WITH RECURSIVE

@@ -23,7 +23,7 @@ object ProfileQueries {
   /** Open-addressing exact-distinct set over primitive longs for the
     * q131 one-task profile kernel: ~8 B/slot at ≤75% load vs ~48 B +
     * one allocation per entry for a boxed HashSet[Any] — the boxed
-    * form is multi-GB at the 5M-row localSolveMaxRows ceiling. 0L is
+    * form is multi-GB at q131's 5M-row LocalExact threshold. 0L is
     * tracked out-of-band so the empty-slot sentinel stays unambiguous
     * (same convention as AllPairsLocal.LongSet, which can't hold 0). */
   private final class LongDistinct(initialCap: Int) {
@@ -35,7 +35,7 @@ object ProfileQueries {
       if (k == 0L) { hasZero = true; return }
       // long arithmetic: at n≈536M, n*4 overflows Int and the growth
       // check would silently stop firing (ADVICE r13) — unreachable
-      // under the 5M localSolveMaxRows ceiling, but fail safe anyway
+      // under q131's 5M-row LocalExact threshold, but fail safe anyway
       if (n.toLong * 4 >= cap.toLong * 3) grow()
       var i = (scala.util.hashing.byteswap64(k) & (cap - 1)).toInt
       var done = false
@@ -773,35 +773,12 @@ object ProfileQueries {
         val cell = base.groupBy(col("source"), col("qv"))
           .agg(count(lit(1)).cast(LongType).as("c"),
             sum(col("n_tokens")).cast(LongType).as("toks"))
-          .localCheckpoint(eager = false)
-        // LocalExact hybrid (the q122/q130 convention): the cell
-        // table is bounded by the quantized quality domain; one
-        // sorted pass per source replays the cumulative window and
-        // the band rollup exactly
-        val localOut = graft.operators.LocalExact(cell,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("source",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("n_docs", LongType),
-            org.apache.spark.sql.types.StructField("n_kept", LongType),
-            org.apache.spark.sql.types.StructField("kept_tokens", LongType))),
-          5000000L) { it =>
-          it.toArray.groupBy(_.getString(0)).toSeq.sortBy(_._1).iterator
-            .map { case (src, rows) =>
-              val cells = rows.map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-                .sortBy(_._1) // (qv, c, toks) ascending qv
-              val nSrc = cells.map(_._2).sum
-              var below = 0L
-              var (nKept, keptToks) = (0L, 0L)
-              cells.foreach { case (_, c, toks) =>
-                val band = (below * 10L) / nSrc
-                if (band >= 1L && band <= 8L) { nKept += c; keptToks += toks }
-                below += c
-              }
-              org.apache.spark.sql.Row(src, nSrc, nKept, keptToks)
-            }
-        }
-        localOut.map(_.orderBy(col("source"))).getOrElse {
+          // eager, measured: the cum window and the n aggregate read
+          // cell in concurrent stages, and under a lazy checkpoint
+          // they race-compute it before the cache lands (the q130
+          // race; same-window Probe at sf0.1, 4 cores: 1.44/1.65 s
+          // lazy vs 1.07/1.08 s eager)
+          .localCheckpoint()
         val cum = cell.withColumn("below",
           coalesce(sum(col("c")).over(
             Window.partitionBy(col("source")).orderBy(col("qv"))
@@ -817,7 +794,6 @@ object ProfileQueries {
             sum(when(col("band").between(1, 8), col("toks")).otherwise(0L))
               .cast(LongType).as("kept_tokens"))
           .orderBy(col("source"))
-        }
       },
       Some(s"""WITH ${TextQueries.qualitySql("doc_id, source")},
              |base AS (SELECT source,

@@ -462,7 +462,7 @@ object RetrievalQueries {
             .select(col("d1"), col("d2"), col("inter"), col("sz1"), col("sz2"),
               col("jac_bp"))
         }
-        graft.operators.AllPairsLocal.allPairs(docArr, 100000L)
+        graft.operators.AllPairsLocal.allPairs(docArr)
           .getOrElse {
             // identical-set group collapse (SetGroups): the candidate
             // join over a mass-duplicate corpus is dup²-quadratic; run
@@ -592,7 +592,7 @@ object RetrievalQueries {
               .select(col("inc"), col("m.bs").as("base_id"),
                 (-col("m.nj")).cast(LongType).as("jac_bp"))
         }
-        graft.operators.AllPairsLocal.incremental(docArr, 100000L)
+        graft.operators.AllPairsLocal.incremental(docArr)
           .getOrElse {
             // identical-set group collapse, keyed (arr, base): every
             // pair is cross-group by construction (inc vs base differ
@@ -761,7 +761,7 @@ object RetrievalQueries {
             .select(col("d_a"), col("d_b"), col("inter"), col("sz_a"),
               col("sz_b"), col("cont_bp"))
         }
-        graft.operators.AllPairsLocal.containment(docArr, 100000L)
+        graft.operators.AllPairsLocal.containment(docArr)
           .getOrElse {
             // identical-set group collapse (SetGroups, the q133 shape —
             // DIRECTED fan-out: rep pairs expand member_a × member_b

@@ -387,10 +387,8 @@ object StreamQueries {
             // round (~0.9 s: the state commit floor is ~0.7 s/batch
             // regardless of rows, streamprofile r15). The long
             // 1-file-per-trigger drain with PROGRESSIVE mid-drain
-            // eviction stays pinned by StreamingSpec. A/B override:
-            // spark.graft.q168FilesPerTrigger.
-            .option("maxFilesPerTrigger", s.conf.getOption(
-              "spark.graft.q168FilesPerTrigger").getOrElse("5"))
+            // eviction stays pinned by StreamingSpec.
+            .option("maxFilesPerTrigger", "5")
             .parquet(d)
         val (viewDir, purchaseDir) = (orderedDir("view"), orderedDir("purchase"))
         val joined = EventStreams.intervalJoin(side(viewDir), side(purchaseDir),

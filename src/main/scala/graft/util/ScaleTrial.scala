@@ -85,9 +85,9 @@ object ScaleTrial {
     val spark = Tables.session("scaletrial")
     spark.sparkContext.setLogLevel("ERROR")
     // conf A/B hook: SPARK_GRAFT_SETCONF="k=v;k=v" — e.g.
-    // spark.graft.localExactMaxRows=0 to force every LocalExact hybrid
-    // onto its distributed fallback for a crossover probe OUTSIDE the
-    // parity tests
+    // spark.graft.localExactMaxRows=0 to force every hybrid operator
+    // (each dispatches through LocalExact) onto its distributed
+    // fallback for a crossover probe OUTSIDE the parity tests
     SetConf(spark).foreach { case (k, v) => println(s"[conf] $k=$v") }
     // SPARK_GRAFT_STATESTORE=rocksdb runs the streaming family on the
     // disk-backed store — the 100-TB posture trial (state > heap)

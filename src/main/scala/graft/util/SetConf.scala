@@ -5,9 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** The `SPARK_GRAFT_SETCONF="k=v;k=v"` conf hook of the multi-query
   * mains (Verify, Probe, ScaleTrial): runtime-settable SQL confs only,
   * static core confs go through javaOptions `-D`. E.g.
-  * `spark.graft.localExactMaxRows=0` forces every LocalExact hybrid
-  * onto its distributed path, `spark.sql.adaptive.enabled=false` times
-  * a sweep without AQE. */
+  * `spark.graft.localExactMaxRows=0` forces every hybrid operator (each
+  * dispatches through LocalExact) onto its distributed path,
+  * `spark.sql.adaptive.enabled=false` times a sweep without AQE. */
 object SetConf {
   /** `k=v;k=v` → pairs, in order; an entry without `=` is ignored. */
   def parse(spec: String): Seq[(String, String)] =

@@ -56,28 +56,26 @@ class DifflibClusterSpec extends SparkSpec {
 
   test("local union-find and distributed pointer jumping agree (both paths)") {
     // two chains + isolated nodes, string AND long id variants; force
-    // each path explicitly via the localSolveMaxEdges threshold
+    // each path explicitly via the spark.graft.localExactMaxRows conf
     def sym(ps: Seq[(Long, Long)]) = (ps ++ ps.map(p => (p._2, p._1)))
       .toDF("_src", "_dst")
     val nodes = (0L to 9L).toDF("_id")
     val edges = sym(Seq((0L, 1L), (1L, 2L), (4L, 3L), (5L, 4L), (7L, 8L)))
-    def run(threshold: Long) =
-      ClusterUnify.components(nodes, edges, localSolveMaxEdges = threshold)
-        .as[(Long, Long)].collect().toMap
+    def run() = ClusterUnify.components(nodes, edges)
+      .as[(Long, Long)].collect().toMap
     val expect = Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 3L,
       5L -> 3L, 6L -> 6L, 7L -> 7L, 8L -> 7L, 9L -> 9L)
-    assert(run(Long.MaxValue) == expect, "local union-find path")
-    assert(run(0L) == expect, "distributed pointer-jumping path")
+    assert(run() == expect, "local union-find path")
+    assert(forcedDistributed(run()) == expect, "distributed pointer-jumping path")
 
     // string ids exercise the Comparable-based min tie-break
     val snodes = Seq("a", "b", "c", "d").toDF("_id")
     val sedges = Seq(("c", "b"), ("b", "c"), ("b", "a"), ("a", "b"))
       .toDF("_src", "_dst")
     val sexpect = Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "d")
-    def srun(threshold: Long) =
-      ClusterUnify.components(snodes, sedges, localSolveMaxEdges = threshold)
-        .as[(String, String)].collect().toMap
-    assert(srun(Long.MaxValue) == sexpect, "local path, string ids")
-    assert(srun(0L) == sexpect, "distributed path, string ids")
+    def srun() = ClusterUnify.components(snodes, sedges)
+      .as[(String, String)].collect().toMap
+    assert(srun() == sexpect, "local path, string ids")
+    assert(forcedDistributed(srun()) == sexpect, "distributed path, string ids")
   }
 }

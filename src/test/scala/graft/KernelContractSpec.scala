@@ -60,8 +60,13 @@ class KernelContractSpec extends graft.SparkSpec {
         "CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT) AS i60")
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     trickyStrings.foreach { t =>
+      // both entry points: the String one the kernels call and the
+      // raw-UTF-8 one the codegen Md5PrefixExpr calls
+      val utf8 = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       assert(Md5Kernel.md5Int32(t) === got(t)._1, s"md5Int32('$t')")
       assert(Md5Kernel.md5Int60(t) === got(t)._2, s"md5Int60('$t')")
+      assert(Md5Kernel.md5Prefix(utf8, 32) === got(t)._1, s"md5Prefix('$t', 32)")
+      assert(Md5Kernel.md5Prefix(utf8, 60) === got(t)._2, s"md5Prefix('$t', 60)")
     }
   }
 

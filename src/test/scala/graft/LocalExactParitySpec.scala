@@ -1,33 +1,49 @@
 package graft
 
+import org.apache.spark.graftprobe.Bus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 /** Pins the LocalExact hybrid queries' two paths equal: the
   * single-task sequential pass (default at test scale) must produce
-  * the exact rows of the distributed DECIMAL/window plan (forced via
-  * the spark.graft.localExactMaxRows=0 override). Runs on the sf0.001
-  * testdata when present.
+  * the exact rows of the distributed plan (forced via the
+  * spark.graft.localExactMaxRows=0 override). The forced run must also
+  * launch more Spark jobs than the default one, so a case cannot pass
+  * because the override never reached the operator. Runs on the
+  * sf0.001 testdata when present.
   */
 class LocalExactParitySpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
   private def available: Boolean = new java.io.File(dir).isDirectory
 
-  private def rowsOf(df: DataFrame): Seq[String] =
-    df.collect().map(_.toString).toSeq
+  /** The rows of `name`'s result and the Spark jobs started while it
+    * was built and collected, counted after a listener-bus drain. */
+  private def rowsAndJobs(name: String): (Seq[String], Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val rows = graft.queries.Registry.byName(name).run(spark, dir)
+        .collect().map(_.toString).toSeq
+      Bus.drain(sc)
+      (rows, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
 
   private def bothPaths(name: String): Unit = {
     assume(available, s"$dir not present")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val q = graft.queries.Registry.byName(name)
-    spark.conf.unset("spark.graft.localExactMaxRows")
-    val local = rowsOf(q.run(spark, dir))
-    spark.conf.set("spark.graft.localExactMaxRows", "0")
-    try {
-      val dist = rowsOf(q.run(spark, dir))
-      assert(local == dist, s"$name: local path != distributed path")
-      assert(local.nonEmpty, s"$name returned no rows")
-    } finally spark.conf.unset("spark.graft.localExactMaxRows")
+    val (local, localJobs) = rowsAndJobs(name)
+    val (dist, distJobs) = forcedDistributed(rowsAndJobs(name))
+    assert(local == dist, s"$name: local path != distributed path")
+    assert(local.nonEmpty, s"$name returned no rows")
+    assert(distJobs > localJobs, s"$name: the forced run launched $distJobs " +
+      s"jobs, the default run $localJobs — the override did not change the path")
   }
 
   test("q135 decision stump: local scan equals the DECIMAL(38) plan") {
@@ -36,10 +52,6 @@ class LocalExactParitySpec extends SparkSpec {
 
   test("q130 MAD outliers: local scan equals the window-median plan") {
     bothPaths("q130_mad_outliers")
-  }
-
-  test("q122 decile bins: local scan equals the distributed prefix sum") {
-    bothPaths("q122_decile_bins")
   }
 
   test("q146 PSI drift: local scan equals the distributed bounds plan") {
@@ -90,10 +102,6 @@ class LocalExactParitySpec extends SparkSpec {
     bothPaths("q131_profile")
   }
 
-  test("q137 quality bands: one-task pass equals the window-band plan") {
-    bothPaths("q137_quality_band_prune")
-  }
-
   test("q76 tfidf top terms: one-task pass equals the TopKPhysical plan") {
     bothPaths("q76_tfidf_topterms")
   }
@@ -129,5 +137,37 @@ class LocalExactParitySpec extends SparkSpec {
   // expression path would be spec-dark
   test("q22 minhash LSH: one-task banding kernel equals the distributed tail") {
     bothPaths("q22_minhash_lsh")
+  }
+
+  test("q41 cluster unify: union-find task equals pointer jumping") {
+    bothPaths("q41_cluster_unify")
+  }
+
+  test("q86 dedup survivors: one-task banding and union-find equal the distributed plans") {
+    bothPaths("q86_dedup_survivors")
+  }
+
+  test("q163 entity resolution: union-find task equals pointer jumping") {
+    bothPaths("q163_er_resolve")
+  }
+
+  test("q103 trained semdedup: one-task Lloyd loop equals the broadcast iterations") {
+    bothPaths("q103_semdedup_trained")
+  }
+
+  test("q106 pagerank: one-task power iteration equals the Pregel loop") {
+    bothPaths("q106_pagerank")
+  }
+
+  test("q115 triangle count: one-task CSR count equals the wedge join") {
+    bothPaths("q115_triangle_count")
+  }
+
+  test("q180 perceptron: one-task rounds equal the per-round aggregates") {
+    bothPaths("q180_perceptron")
+  }
+
+  test("q102 BPE train: the in-memory merge loop equals the per-rank Spark loop") {
+    bothPaths("q102_bpe_train")
   }
 }

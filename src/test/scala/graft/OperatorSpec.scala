@@ -203,12 +203,10 @@ class OperatorSpec extends SparkSpec {
       (0L, Array(1f, 0.1f)), (1L, Array(0f, 1.7f)), (2L, Array(2.9f, 0.3f)),
       (3L, Array(0.2f, 3.3f)), (4L, Array(0.5f, 0.9f)), (5L, Array(1.1f, 1.1f))
     ).toDF("vec_id", "embedding")
-    def run(threshold: Long) =
-      KMeansTrain.train(vecs, "vec_id", "embedding", k = 2, iters = 3,
-        localSolveMaxVectors = threshold)
-        .as[(Long, Seq[Double])].collect().toMap
-    val local = run(Long.MaxValue)
-    val dist = run(0L)
+    def run() = KMeansTrain.train(vecs, "vec_id", "embedding", k = 2, iters = 3)
+      .as[(Long, Seq[Double])].collect().toMap
+    val local = run()
+    val dist = forcedDistributed(run())
     assert(local == dist, s"local $local != distributed $dist")
   }
 
@@ -305,13 +303,12 @@ class OperatorSpec extends SparkSpec {
     // 4-5 edge (no triangle), and a separate triangle {6,7,8}
     val e = (Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (4L, 5L), (6L, 7L), (6L, 8L), (7L, 8L))).toDF("u", "v")
-    def run(threshold: Long) =
-      graft.operators.TriangleCount.perNode(e, localSolveMaxEdges = threshold)
-        .as[(Long, Long)].collect().toMap
+    def run() = graft.operators.TriangleCount.perNode(e)
+      .as[(Long, Long)].collect().toMap
     val expect = Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L,
       6L -> 1L, 7L -> 1L, 8L -> 1L)
-    assert(run(Long.MaxValue) == expect, "local path")
-    assert(run(0L) == expect, "distributed path")
+    assert(run() == expect, "local path")
+    assert(forcedDistributed(run()) == expect, "distributed path")
   }
 
   test("pagerank local single-task path is bit-equal to the distributed loop") {
@@ -326,11 +323,11 @@ class OperatorSpec extends SparkSpec {
       ("s", 10L, "c", 1L), ("s", 20L, "c", 2L), ("c", 30L, "s", 10L),
       ("c", 2L, "s", 99L))
       .toDF("srcType", "srcKey", "dstType", "dstKey")
-    def runPath(threshold: Long): Map[(String, Long), Long] =
-      graft.operators.PageRank(edges, iters = 4, localSolveMaxEdges = threshold)
+    def runPath(): Map[(String, Long), Long] =
+      graft.operators.PageRank(edges, iters = 4)
         .collect().map(r => ((r.getString(0), r.getLong(1)), r.getLong(2))).toMap
-    val local = runPath(Long.MaxValue)
-    val dist = runPath(0L)
+    val local = runPath()
+    val dist = forcedDistributed(runPath())
     assert(local == dist, s"local $local != distributed $dist")
     assert(!local.contains(("c", 30L))) // src-only node dropped out
     assert(!local.contains(("s", 99L))) // sink dest never enters state
@@ -378,11 +375,11 @@ class OperatorSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == reference(3))
     }
-    // the distributed per-round aggregate (forced via threshold 0)
-    // must agree with the local single-task path and the reference
-    val dist = graft.operators.Perceptron
-      .train(feats, nBuckets = 2, iters = 3, localSolveMaxRows = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the distributed per-round aggregate (forced via the conf) must
+    // agree with the local single-task path and the reference
+    val dist = forcedDistributed(graft.operators.Perceptron
+      .train(feats, nBuckets = 2, iters = 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(dist == reference(3), "distributed path")
   }
 }

@@ -63,15 +63,11 @@ class SetGroupsSpec extends SparkSpec {
     assume(new java.io.File(sf001).isDirectory, s"$sf001 not present")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val q = graft.queries.Registry.byName(name)
-    spark.conf.unset("spark.graft.localExactMaxRows")
     val local = q.run(spark, dupDir).collect().map(_.toString).toSeq
-    spark.conf.set("spark.graft.localExactMaxRows", "0")
-    try {
-      val collapsed = q.run(spark, dupDir).collect().map(_.toString).toSeq
-      assert(local == collapsed,
-        s"$name: collapsed distributed plan != one-task exact kernel")
-      assert(local.nonEmpty, s"$name returned no rows on the dup fixture")
-    } finally spark.conf.unset("spark.graft.localExactMaxRows")
+    val collapsed = forcedDistributed(q.run(spark, dupDir).collect().map(_.toString).toSeq)
+    assert(local == collapsed,
+      s"$name: collapsed distributed plan != one-task exact kernel")
+    assert(local.nonEmpty, s"$name returned no rows on the dup fixture")
   }
 
   test("q133 all-pairs: collapsed Bayardo join equals exact kernel at 5× dup") {

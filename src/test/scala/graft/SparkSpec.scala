@@ -23,4 +23,12 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   val sf001 = "/root/testdata/sf0.001"
+
+  /** `body` with every LocalExact hybrid forced onto its distributed
+    * plan (`spark.graft.localExactMaxRows=0`); outside it, each hybrid
+    * takes its one-task path at test scale. */
+  def forcedDistributed[T](body: => T): T = {
+    spark.conf.set("spark.graft.localExactMaxRows", "0")
+    try body finally spark.conf.unset("spark.graft.localExactMaxRows")
+  }
 }
