@@ -79,14 +79,6 @@ object TextFns {
     // Md5Kernel.tokenize, so tokenization is bit-identical to tokens()
     ShingleStrings(text, n)
 
-  /** Punctuation-character ratio (over total characters). */
-  def punctRatio(text: Column): Column = {
-    val n = length(text)
-    when(n === 0, lit(0d)).otherwise(
-      length(regexp_replace(text, "[^.,;:!?'\"()-]", "")).cast(DoubleType) /
-        n.cast(DoubleType))
-  }
-
   /** Share of tokens that appear in `stopwords`. */
   def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
     val toks = tokens(text)

@@ -27,38 +27,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object AllPairsLocal {
 
-  /** Minimal open-addressing long set (linear probing, power-of-two
-    * capacity) for the candidate-dedup hot path: a replicated
-    * duplicate-heavy corpus generates tens of millions of candidate
-    * ATTEMPTS, and a boxed java.util.HashSet[(Long, Long)] there costs
-    * ~5 µs/op in allocation + equals (measured: the 10× ScaleTrial of
-    * q133 read 145 s before this, ~8 s after). 0 is reserved as the
-    * empty marker — callers pack two non-negative ints as
-    * ((p+1)<<32)|q so no live key is 0. */
-  private final class LongSet(initialCap: Int) {
-    private var cap = Integer.highestOneBit(math.max(initialCap, 16) * 2)
-    private var table = new Array[Long](cap)
-    private var n = 0
-    def add(k: Long): Boolean = {
-      if (n * 4 >= cap * 3) grow()
-      var i = (scala.util.hashing.byteswap64(k) & (cap - 1)).toInt
-      while (true) {
-        val cur = table(i)
-        if (cur == 0L) { table(i) = k; n += 1; return true }
-        if (cur == k) return false
-        i = (i + 1) & (cap - 1)
-      }
-      false
-    }
-    private def grow(): Unit = {
-      val old = table
-      cap <<= 1
-      table = new Array[Long](cap)
-      n = 0
-      old.foreach(k => if (k != 0L) add(k))
-    }
-  }
-
   private final case class Doc(id: Long, base: Boolean,
                                sorted: Array[Int], // ascending intern ids (verify)
                                prefix: Array[Int]) { // rarest-first ⌊sz/2⌋+1 ids
@@ -174,7 +142,7 @@ object AllPairsLocal {
           var y = x + 1
           while (y < bucket.length) {
             val (p, q) = (math.min(bucket(x), bucket(y)), math.max(bucket(x), bucket(y)))
-            if (seen.add(((p.toLong + 1L) << 32) | q.toLong)) {
+            if (seen.add((p.toLong << 32) | q.toLong)) {
               val (da, db) = (reps(p), reps(q))
               var (u, v, inter) = (0, 0, 0L)
               while (u < da.sorted.length && v < db.sorted.length) {

@@ -58,18 +58,6 @@ object Dedup {
       (a, b)
     }
 
-  /** MinHash signature over word n-gram shingles: for each hash j,
-    * min over shingles of (a_j * md5_32(shingle) + b_j) mod p.
-    *
-    * Takes a PRE-HASHED shingle array (`hv`, from graft.functions.ShingleHashes)
-    * so the md5 pass runs once per document, not once per hash
-    * function — the naive per-hash recompute blows the generated code
-    * up 16× and costs two orders of magnitude at bench scale. */
-  def minhashSignature(hv: Column, numHashes: Int): Seq[Column] =
-    hashParams(numHashes).map { case (a, b) =>
-      array_min(transform(hv, h => (h * a + b) % HashPrime))
-    }
-
   /** MinHash-LSH candidate pairs: band the signature, bucket-join on
     * (band, band-signature), emit unordered (idA < idB) pairs with the
     * estimated Jaccard (fraction of matching minhashes).
@@ -131,18 +119,17 @@ object Dedup {
         candidatesFromSignatures(withSig, bands, rowsPerBand, maxBucket)
       }
     }
-    // identical-TEXT group collapse (dupGroups): on a duplicated
+    // identical-TEXT group collapse (SetGroups): on a duplicated
     // corpus, run signatures + banding + pairing over one rep per
     // distinct text and fan passing pairs out to members — candidate
     // volume becomes duplication-independent. Gate cost when
     // duplicate-free: one count aggregate over the text column.
     val base = df.select(col(idCol).as("id"), col(textCol).as("_txt"))
-    dupGroups(base, "_txt", maxBucket) match {
+    SetGroups.collapse(base, "id", Seq("_txt"), maxBucket) match {
       case None => cands(base)
       case Some(g) =>
-        fanOutPairs(cands(g.select(col("id"), col("_txt"))), g, maxBucket,
-          Seq("est_jaccard"))
-          .unionByName(withinGroupPairs(g,
+        g.fanOutPairs(cands(g.reps), maxBucket, Seq("est_jaccard"))
+          .unionByName(g.withinGroupPairs(
             size(graft.functions.ShingleHashes(col("_txt"), n)) > 0,
             maxBucket, Seq("est_jaccard" -> lit(1.0))))
     }
@@ -178,6 +165,9 @@ object Dedup {
       .localCheckpoint(eager = false)
   }
 
+  /** Document-count threshold of the one-task path. */
+  private val LocalMaxDocs = 200000L
+
   /** One-task exact replay of [[candidatesFromSignatures]] (the
     * LocalExact convention): identical "_"-joined band keys, identical
     * star-cap (all pairs at or under `maxBucket`, hub star above it,
@@ -187,8 +177,8 @@ object Dedup {
     * a LongType id — exotic id types fall through to the distributed
     * plan. */
   private def localCandidates(withSig: DataFrame,
-                              bands: Int, rowsPerBand: Int, maxBucket: Int,
-                              maxDocs: Long = 200000L): Option[DataFrame] = {
+                              bands: Int, rowsPerBand: Int,
+                              maxBucket: Int): Option[DataFrame] = {
     if (withSig.schema.head.dataType != org.apache.spark.sql.types.LongType)
       return None
     LocalExact(withSig, org.apache.spark.sql.types.StructType(Seq(
@@ -197,7 +187,7 @@ object Dedup {
       org.apache.spark.sql.types.StructField("id_b",
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("est_jaccard",
-        org.apache.spark.sql.types.DoubleType))), maxDocs) { it =>
+        org.apache.spark.sql.types.DoubleType))), LocalMaxDocs) { it =>
       val docs = it.map { r =>
         (r.getLong(0), r.getSeq[Long](1).toArray)
       }.toArray
@@ -265,20 +255,19 @@ object Dedup {
         candidatesFromSignatures(withSig, bands, rowsPerBand, maxBucket)
       }
     }
-    // identical-set group collapse (dupGroups) — callers that collapse
+    // identical-set group collapse (SetGroups) — callers that collapse
     // (or gate) upstream ([[lshVerified]]) skip the duplicate-count
     // aggregate outright via collapseDups = false: one driver job
     // round saved per call (the family is job-round-bound at bench
     // scale, FloorProbe r14)
-    val gated = if (collapseDups)
-      dupGroups(shingled.select(col("id"), col("_sh")), "_sh", maxBucket)
+    val gated = if (collapseDups) SetGroups.collapse(
+      shingled.select(col("id"), col("_sh")), "id", Seq("_sh"), maxBucket)
     else None
     gated match {
       case None => cands(shingled)
       case Some(g) =>
-        fanOutPairs(cands(g.select(col("id"), col("_sh"))), g, maxBucket,
-          Seq("est_jaccard"))
-          .unionByName(withinGroupPairs(g, size(col("_sh")) > 0, maxBucket,
+        g.fanOutPairs(cands(g.reps), maxBucket, Seq("est_jaccard"))
+          .unionByName(g.withinGroupPairs(size(col("_sh")) > 0, maxBucket,
             Seq("est_jaccard" -> lit(1.0))))
     }
   }
@@ -313,57 +302,17 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** Exact n-gram Jaccard on candidate pairs (post-LSH verification).
-    * `pairs` must carry id_a/id_b; docs joined back by id.
-    *
-    * Scale shape: the candidate set is orders of magnitude smaller than
-    * the corpus (that is the point of LSH), so the expensive shingle
-    * projection must run over candidate docs only, not the whole
-    * corpus — a semi-join on the candidate id set gates it. `pairs` is
-    * materialized once (localCheckpoint) because its plan is consumed
-    * twice (id extraction + the verify join) and would otherwise
-    * re-run the whole LSH pipeline per consumer. Joins stay shuffle
-    * joins on id — scale-safe for candidate sets too big to broadcast;
-    * AQE broadcasts the small side at bench scale. */
-  def jaccardVerify(pairs: DataFrame, docs: DataFrame, idCol: String,
-                    textCol: String, n: Int): DataFrame = {
-    // spread before the barrier: a one-partition candidate relation
-    // (the local kernel's output shape) would serialize the
-    // array_intersect verify onto one core (same hazard fixed in
-    // lshVerified, r14)
-    val p = pairs
-      .repartition(pairs.sparkSession.sparkContext.defaultParallelism,
-        col("id_a"))
-      .localCheckpoint()
-    val ids = p.select(col("id_a").as("_jid"))
-      .unionByName(p.select(col("id_b").as("_jid")))
-      .distinct()
-    val sh = docs
-      .join(ids, docs(idCol) === ids("_jid"), "left_semi")
-      .select(col(idCol).as("_jid"),
-        array_distinct(TextFns.shingles(col(textCol), n)).as("_sh"))
-    p
-      .join(sh.withColumnRenamed("_jid", "id_a").withColumnRenamed("_sh", "sh_a"), "id_a")
-      .join(sh.withColumnRenamed("_jid", "id_b").withColumnRenamed("_sh", "sh_b"), "id_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("uni", size(array_union(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        when(col("uni") === 0, 0d).otherwise(col("inter").cast("double") / col("uni")))
-      .drop("sh_a", "sh_b")
-  }
-
   /** LSH candidates + exact-Jaccard verification sharing ONE shingle
     * scan: the corpus is shingled once (distinct n-grams per doc,
     * repartitioned first so file layout doesn't bound the CPU-heavy
     * projection), localCheckpointed, and BOTH the minhash leg and the
-    * verify join read the materialized arrays — the two-leg shape
-    * ([[minhashCandidates]] then [[jaccardVerify]]) runs the
-    * corpus-sized shingle projection twice. Output identical to that
-    * composition. Scale trade, stated plainly: this materializes a
-    * corpus-sized shingle set on executors; when the candidate set is
-    * orders of magnitude smaller than the corpus (sparse-dup corpora),
-    * [[jaccardVerify]]'s recompute-for-candidates-only gating avoids
-    * that materialization — pick by expected candidate density. */
+    * verify join read the materialized arrays, where a two-leg shape
+    * (candidates, then a verify that re-shingles the candidate docs)
+    * runs the shingle projection twice. Scale trade, stated plainly:
+    * this materializes a corpus-sized shingle set on executors; when
+    * the candidate set is orders of magnitude smaller than the corpus
+    * (sparse-dup corpora), re-shingling only the candidate docs would
+    * avoid that materialization. */
   def lshVerified(docs: DataFrame, idCol: String, textCol: String,
                   n: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
                   maxBucket: Int = 1000): DataFrame = {
@@ -373,7 +322,7 @@ object Dedup {
       .repartition(par, col(idCol))
       .select(col(idCol).as("id"),
         array_distinct(TextFns.shingles(col(textCol), n)).as("_sh"))
-      // LAZY (r15): the dupGroups gate below is the first consumer
+      // LAZY (r15): the SetGroups gate below is the first consumer
       // and is a synchronous aggregate — it materializes the blocks,
       // saving the dedicated eager-checkpoint job round (the
       // concurrent legs only run after the gate returned)
@@ -386,8 +335,7 @@ object Dedup {
       val cand = minhashCandidatesFromShingles(sh, bands, rowsPerBand,
         maxBucket, collapseDups = false)
       // pairs feed ONE linear plan (two joins against the checkpointed
-      // arrays), so no pairs-side checkpoint is needed here — unlike
-      // jaccardVerify, whose id-extraction leg reads pairs a second time.
+      // arrays), so no pairs-side checkpoint is needed here.
       // repartition first: when the local kernel produced `cand` it is
       // ONE partition, and with the doc side broadcast the whole
       // array_intersect verify would run as one task (measured 5.5 s of
@@ -411,12 +359,12 @@ object Dedup {
     // sets ⇒ identical values). Members of one non-empty group pair at
     // jaccard 1 exactly, as the uncollapsed plan emits them through
     // their shared buckets.
-    dupGroups(shingled, "_sh", maxBucket) match {
+    SetGroups.collapse(shingled, "id", Seq("_sh"), maxBucket) match {
       case None => verified(shingled)
       case Some(g) =>
-        fanOutPairs(verified(g.select(col("id"), col("_sh"))), g, maxBucket,
+        g.fanOutPairs(verified(g.reps), maxBucket,
           Seq("est_jaccard", "inter", "uni", "jaccard"))
-          .unionByName(withinGroupPairs(g, size(col("_sh")) > 0, maxBucket,
+          .unionByName(g.withinGroupPairs(size(col("_sh")) > 0, maxBucket,
             Seq("est_jaccard" -> lit(1.0), "inter" -> size(col("_sh")),
               "uni" -> size(col("_sh")), "jaccard" -> lit(1.0))))
     }
@@ -432,33 +380,11 @@ object Dedup {
       .select(col(idCol), VectorFns.simhash(TextFns.tokens(col(textCol)), bits)
         .as("simhash"))
 
-  /** SimHash near-dup PAIRS within Hamming distance `maxHamming`,
-    * found without any cross join via the banding pigeonhole: split
-    * the `bits`-bit fingerprint into `maxHamming + 1` contiguous
-    * bands — two fingerprints within distance d must agree EXACTLY on
-    * at least one band, so an equi-join on (band, band-bits) finds
-    * every qualifying pair (perfect recall, unlike probabilistic
-    * MinHash banding). Candidates are then verified with
-    * bit_count(xor) — cheap integer ops, no text re-read.
-    *
-    * Scale shape mirrors [[minhashCandidates]]: the only shuffle is
-    * the (band, value) bucket exchange; mass-duplicate corpora share
-    * fingerprints, so buckets above `maxBucket` emit star pairs
-    * around the bucket's min-id hub instead of all pairs (O(bucket)
-    * not O(bucket²)) — hub-distance caveat documented there applies. */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   bits: Int = 16, maxHamming: Int = 2,
-                   maxBucket: Int = 1000): DataFrame =
-    hammingPairs(
-      simhashBuckets(df, idCol, textCol, bits)
-        .select(col(idCol).as("id"), col("simhash")),
-      bits, maxHamming, maxBucket)
-
   /** Near-dup pairs over the 60-bit one-digest-per-token classic
-    * simhash ([[graft.functions.SimHashWide]]). Same perfect-recall
-    * band pigeonhole as [[simhashPairs]], but the wide fingerprint
-    * makes the 15-bit band buckets near-singleton instead of the
-    * 16-bit variant's hundreds-of-docs buckets, so the candidate join
+    * simhash ([[graft.functions.SimHashWide]]), found by the
+    * perfect-recall band pigeonhole of [[hammingPairs]]. The wide
+    * fingerprint makes the 15-bit band buckets near-singleton instead
+    * of a 16-bit simhash's hundreds-of-docs buckets, so the candidate join
     * stays linear in the corpus — the shape that survives 100 TB.
     * Band agreement over 32k distinct values also means a matching
     * pair is overwhelmingly a REAL near-dup, not a coarse-hash
@@ -522,27 +448,11 @@ object Dedup {
 
   /** Band-pigeonhole Hamming join on a fingerprint frame
     * (`id`, `simhash`): every pair within `maxHamming` agrees exactly
-    * on one of the `maxHamming + 1` bands.
-    *
-    * IDENTICAL-FINGERPRINT GROUP COLLAPSE (the r12 AllPairsLocal
-    * insight, applied to the distributed plan): when the frame holds
-    * duplicate fingerprints — the dominant 100-TB case is exact-dup
-    * documents — banding MEMBERS inflates every bucket by the
-    * duplication factor and pushes it past the star cap, truncating
-    * recall exactly where dedup matters most. Instead band one
-    * REPRESENTATIVE per distinct fingerprint (min id), compute
-    * rep-level pairs (buckets are duplication-invariant), then fan
-    * rep pairs out to member pairs and add the within-group pairs
-    * (hamming 0) directly. The star cap re-applies at the GROUP
-    * level: a duplicate group of m ≤ maxBucket members expands
-    * exactly (m·(m−1)/2 internal pairs — the true answer), while an
-    * over-cap group keeps the linear hub-star shape both internally
-    * and in cross-group fan-out, so one viral exact-dup can never
-    * emit O(m²) rows. Output is exact under any replication factor
-    * up to the cap; work is candidate volume at the DISTINCT level
-    * + output size. The collapse is data-adaptive: one aggregate on
-    * the checkpointed fingerprints decides, so a duplicate-free
-    * corpus pays nothing but that count. */
+    * on one of the `maxHamming + 1` bands. Duplicate fingerprints —
+    * the dominant 100-TB case is exact-dup documents — collapse
+    * through [[SetGroups]]: band one representative per distinct
+    * fingerprint, then fan rep pairs out to members and add each
+    * group's internal pairs at hamming 0. */
   private[operators] def hammingPairs(sims0: DataFrame, bits: Int,
                                       maxHamming: Int,
                                       maxBucket: Int): DataFrame = {
@@ -556,22 +466,10 @@ object Dedup {
     // the blocks itself — one job round instead of two (the eager
     // form paid a dedicated checkpoint job, then the gate re-read
     // the blocks; as in `signatures`, no concurrent self-join side
-    // can race the lazy checkpoint because `st` always runs first)
+    // can race the lazy checkpoint because the gate always runs first)
     val sims = sims0.localCheckpoint(eager = false)
-    // threshold gate (see [[dupGroups]] / [[dupCollapseThreshold]]):
-    // below maxBucket/2 duplicate extras the member-level banding
-    // cannot overflow a half-empty bucket, both plans equal the
-    // unguarded oracle, and the collapse's membership/fan-out joins
-    // (~4 extra AQE job rounds at bench scale) are pure overhead
-    val st = sims.agg(count(lit(1)), countDistinct(col("simhash"))).head()
-    val collapse =
-      st.getLong(0) - st.getLong(1) >= dupCollapseThreshold(sims, maxBucket)
-    val reps =
-      if (collapse) sims.groupBy(col("simhash"))
-        .agg(min(col("id")).as("id"), count(lit(1)).as("_m"))
-        .select(col("id"), col("simhash"), col("_m"))
-        .localCheckpoint()
-      else sims
+    val groups = SetGroups.collapse(sims, "id", Seq("simhash"), maxBucket)
+    val reps = groups.fold(sims)(_.reps)
     val nBands = maxHamming + 1
     val base = bits / nBands
     val extra = bits % nBands // first `extra` bands get one more bit
@@ -599,140 +497,13 @@ object Dedup {
         bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))))
       .filter(col("hamming") <= maxHamming)
       .dropDuplicates("id_a", "id_b")
-    if (!collapse)
-      repPairs.select(col("id_a"), col("id_b"), col("hamming"))
-    else {
-      // the fan-out member relation: full membership for groups under
-      // the cap, hub-only for over-cap groups (keeps every rep pair's
-      // expansion ≤ cap², and a viral group's cross edges linear)
-      val mem = sims.join(reps.select(col("simhash"),
-          col("id").as("_hub"), col("_m")), "simhash")
-      val xm = mem.filter(col("_m") <= maxBucket || col("id") === col("_hub"))
-        .select(col("simhash"), col("id"))
-      val cross = repPairs
-        .join(xm.select(col("simhash").as("simhash_a"), col("id").as("_xa")),
-          "simhash_a")
-        .join(xm.select(col("simhash").as("simhash_b"), col("id").as("_xb")),
-          "simhash_b")
-        .select(least(col("_xa"), col("_xb")).as("id_a"),
-          greatest(col("_xa"), col("_xb")).as("id_b"), col("hamming"))
-      // internal pairs of each duplicate group, hamming 0: full m²/2
-      // under the cap, hub star above it
-      val small = mem.filter(col("_m") <= maxBucket && col("_m") > 1)
-      val within = small.select(col("simhash"), col("id").as("id_a"))
-        .join(small.select(col("simhash"), col("id").as("id_b")), "simhash")
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), lit(0).cast("int").as("hamming"))
-      val withinStar = mem
-        .filter(col("_m") > maxBucket && col("id") =!= col("_hub"))
-        .select(col("_hub").as("id_a"), col("id").as("id_b"),
-          lit(0).cast("int").as("hamming"))
-      cross.unionByName(within).unionByName(withinStar)
+    groups match {
+      case None => repPairs.select(col("id_a"), col("id_b"), col("hamming"))
+      case Some(g) =>
+        g.fanOutPairs(repPairs, maxBucket, Seq("hamming"))
+          .unionByName(g.withinGroupPairs(lit(true), maxBucket,
+            Seq("hamming" -> lit(0).cast("int"))))
     }
-  }
-
-  /** Identical-key duplicate-group gate + grouping for the minhash
-    * family — the r14 SetGroups pattern (see
-    * `operators/SetGroups.scala`) applied where the key is the doc
-    * text or its shingle array. On a mass-duplicate corpus every
-    * member of a group lands in the same LSH buckets, so candidate
-    * volume grows dup²; collapsing to one min-id representative per
-    * distinct key makes the candidate AND verify legs independent of
-    * the duplication factor (identical keys ⇒ identical signatures ⇒
-    * identical pair results — expansion is pure output).
-    *
-    * Gate: one aggregate; `countDistinct(xxhash64(key))` never
-    * exceeds the true distinct count, so real duplication always
-    * registers — a 64-bit collision can only turn the collapse on
-    * spuriously (exact either way; the GROUPING key is the actual
-    * value).
-    *
-    * THRESHOLD (r14 optimization round): collapse only when the
-    * duplicate EXTRAS (rows − distinct keys) reach `maxBucket / 2` —
-    * [[dupCollapseThreshold]]. Exactness rationale: both plans equal
-    * the unguarded oracle whenever no bucket overflows `maxBucket`,
-    * and duplication can add at most `extras` members to any one
-    * bucket, so below the threshold duplication alone cannot push a
-    * half-empty bucket over the cap — the residual risk (a NATURALLY
-    * near-cap bucket tipped over by a few duplicates) is the same
-    * documented recall trade the cap already makes on duplicate-free
-    * corpora ([[minhashCandidates]] scaladoc). Below threshold the
-    * whole collapse machinery (wide-key groupBy + checkpoint +
-    * fan-out joins ≈ 6 extra AQE job rounds, +0.7–0.8 s per query at
-    * sf0.1 for 8 duplicate rows in 5,000 — measured this round)
-    * disappears; at any real replication factor (ScaleTrial 10×/30×,
-    * the DedupSkewSpec 5× fixtures) extras ≫ threshold and the
-    * collapse engages exactly as before.
-    *
-    * Caveat shared with SetGroups: `collect_list` puts a group's
-    * member ids on one row — fine for any real duplication factor;
-    * the hub-only fan-out below bounds pair EXPANSION for viral
-    * groups, but a ~10⁸-member group would need [[hammingPairs]]'
-    * join-based membership instead. */
-  private def dupGroups(docs: DataFrame, keyCol: String,
-                        maxBucket: Int): Option[DataFrame] = {
-    val st = docs.agg(count(lit(1)),
-      countDistinct(xxhash64(col(keyCol)))).head()
-    if (st.getLong(0) - st.getLong(1) <
-        dupCollapseThreshold(docs, maxBucket)) None
-    else Some(docs.groupBy(col(keyCol))
-      .agg(min(col("id")).as("id"), count(lit(1)).as("_m"),
-        collect_list(col("id")).as("_mm"))
-      .localCheckpoint())
-  }
-
-  /** Duplicate-extras threshold that engages the group collapse:
-    * `spark.graft.dupCollapseMinExtras` when set (the spec/A-B hook —
-    * 1 restores the round-13 "any duplicate" gate), else
-    * `max(1, maxBucket / 2)` — see [[dupGroups]] for the exactness
-    * argument. */
-  private[operators] def dupCollapseThreshold(df: DataFrame,
-                                              maxBucket: Int): Long =
-    df.sparkSession.conf.getOption("spark.graft.dupCollapseMinExtras")
-      .map(_.toLong).getOrElse(math.max(1L, maxBucket / 2L))
-
-  /** Expand rep-level pairs to member pairs: full membership for
-    * groups at/under `maxBucket`, hub-only above it (the
-    * [[hammingPairs]] contract — a viral group's cross edges stay
-    * linear). `payload` columns must be symmetric in a/b (est/inter/
-    * uni/jaccard all are), since members are reordered by id. */
-  private def fanOutPairs(repPairs: DataFrame, g: DataFrame,
-                          maxBucket: Int, payload: Seq[String]): DataFrame = {
-    val xm = g.select(col("id").as("_rep"), col("_m"),
-        explode(col("_mm")).as("_mid"))
-      .filter(col("_m") <= maxBucket || col("_mid") === col("_rep"))
-      .select(col("_rep"), col("_mid"))
-    repPairs
-      .join(xm.select(col("_rep").as("id_a"), col("_mid").as("_xa")), "id_a")
-      .join(xm.select(col("_rep").as("id_b"), col("_mid").as("_xb")), "id_b")
-      .select(least(col("_xa"), col("_xb")).as("id_a") +:
-        greatest(col("_xa"), col("_xb")).as("id_b") +:
-        payload.map(col): _*)
-  }
-
-  /** Internal pairs of each duplicate group (the uncollapsed plan
-    * emits them through their shared buckets): full m²/2 under the
-    * cap, hub star above it. `nonEmpty` gates out groups whose
-    * shingle set is empty — those produce no signature rows in the
-    * uncollapsed plan and so must produce no pairs here. `carry`
-    * columns are evaluated on the GROUP row (e.g. est 1.0, inter =
-    * set size). */
-  private def withinGroupPairs(g: DataFrame, nonEmpty: Column,
-                               maxBucket: Int,
-                               carry: Seq[(String, Column)]): DataFrame = {
-    val cs = carry.map { case (n, _) => col(n) }
-    val ne = g.filter(col("_m") > 1 && nonEmpty)
-      .select(col("id") +: col("_m") +: col("_mm") +:
-        carry.map { case (n, c) => c.as(n) }: _*)
-    val small = ne.filter(col("_m") <= maxBucket)
-      .select(cs :+ explode(col("_mm")).as("_a") :+ col("_mm"): _*)
-      .select(cs :+ col("_a") :+ explode(col("_mm")).as("_b"): _*)
-      .filter(col("_a") < col("_b"))
-    val star = ne.filter(col("_m") > maxBucket)
-      .select(cs :+ col("id").as("_a") :+ explode(col("_mm")).as("_b"): _*)
-      .filter(col("_a") < col("_b")) // hub IS the group min id
-    small.unionByName(star)
-      .select(col("_a").as("id_a") +: col("_b").as("id_b") +: cs: _*)
   }
 
   /** The shared candidate-pair shape of [[minhashCandidates]],

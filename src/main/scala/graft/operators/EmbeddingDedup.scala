@@ -31,19 +31,11 @@ object EmbeddingDedup {
     * the hub, so size the cap above any bucket an all-pairs pass
     * should handle.
     *
-    * IDENTICAL-VECTOR GROUP COLLAPSE (the [[Dedup.hammingPairs]]
-    * convention): exact-duplicate vectors — the dominant near-dup
-    * class in a replicated corpus — would inflate their sign-bucket
-    * past the cap and truncate recall. When duplicates exist, bucket
+    * Exact-duplicate vectors — the dominant near-dup class in a
+    * replicated corpus — would inflate their sign-bucket past the cap
+    * and truncate recall; they collapse through [[SetGroups]] (bucket
     * one representative per distinct vector, pair at the distinct
-    * level, then fan out to member pairs. The cap re-applies at the
-    * GROUP level: groups of m ≤ maxBucket expand exactly (internal
-    * pairs at the same cosine expression the in-bucket join emitted;
-    * zero-norm groups drop via the same null), over-cap groups keep
-    * the linear hub-star shape internally and fan out by hub only —
-    * exact under any replication up to the cap, never O(m²) past it.
-    * Data-adaptive: a duplicate-free corpus pays only the
-    * distinct-count aggregate. */
+    * level, fan out to members). */
   def apply(vectors: DataFrame, idCol: String, vecCol: String,
             nPlanes: Int, threshold: Double, maxBucket: Int = 1000): DataFrame = {
     val planeVecs: Seq[Seq[Float]] = vectors.orderBy(col(idCol)).limit(nPlanes)
@@ -65,19 +57,11 @@ object EmbeddingDedup {
       // consumer and synchronous — it materializes the blocks itself;
       // the self-join sides only execute after it returned
       .localCheckpoint(eager = false)
-    // threshold gate (Dedup.dupCollapseThreshold): below maxBucket/2
-    // duplicate extras the member-level bucketing cannot overflow a
-    // half-empty sign bucket, both plans equal the unguarded oracle,
-    // and the collapse's membership/fan-out joins are pure overhead
-    val st = signs.agg(count(lit(1)), countDistinct(col("vec"))).head()
-    val collapse = st.getLong(0) - st.getLong(1) >=
-      Dedup.dupCollapseThreshold(signs, maxBucket)
-    val reps =
-      if (collapse) signs.groupBy(col("vec"))
-        .agg(min(col("id")).as("id"), first(col("_n")).as("_n"),
-          first(col("bucket")).as("bucket"), count(lit(1)).as("_m"))
-        .localCheckpoint()
-      else signs
+    // vec determines _n and bucket, so grouping by all three is
+    // grouping by vec and keeps both on the group row
+    val groups =
+      SetGroups.collapse(signs, "id", Seq("vec", "_n", "bucket"), maxBucket)
+    val reps = groups.fold(signs)(_.reps)
 
     // shared pair shape (one bucket aggregate + star fallback) lives
     // in Dedup.starCappedPairs; a doc sits in exactly ONE sign-bucket
@@ -91,42 +75,20 @@ object EmbeddingDedup {
           .otherwise(VectorFns.dotScaled(col("vec_a"), col("vec_b")).cast("double") /
             sqrt(col("_n_a").cast("double") * col("_n_b").cast("double"))))
       .filter(col("cosine") >= threshold)
-    if (!collapse)
-      repPairs.select(col("id_a"), col("id_b"), col("cosine"))
-    else {
-      // rep-level pairs carry the exact cosine for EVERY member pair
-      // (identical vectors); fan out via the member relation (hub-only
-      // for over-cap groups), then add each duplicate group's internal
-      // pairs. The internal cosine is computed with the SAME
-      // _n/sqrt(_n·_n) double expression the in-bucket join would have
-      // produced (sqrt(n·n) can differ from n by an ulp — a
-      // hand-written 1.0 would diverge from the SQL oracle
-      // bit-for-bit), and the same null-on-zero-norm + threshold
-      // filter applies
-      val mem = signs.select(col("vec"), col("id"), col("_n"))
-        .join(reps.select(col("vec"), col("id").as("_hub"), col("_m")), "vec")
-      val xm = mem.filter(col("_m") <= maxBucket || col("id") === col("_hub"))
-      val cross = repPairs
-        .join(xm.select(col("vec").as("vec_a"), col("id").as("_xa")), "vec_a")
-        .join(xm.select(col("vec").as("vec_b"), col("id").as("_xb")), "vec_b")
-        .select(least(col("_xa"), col("_xb")).as("id_a"),
-          greatest(col("_xa"), col("_xb")).as("id_b"), col("cosine"))
-      def internalCosine(df: DataFrame): DataFrame = df
-        .withColumn("cosine",
-          when(col("_n") === 0, lit(null).cast("double"))
-            .otherwise(col("_n").cast("double") /
-              sqrt(col("_n").cast("double") * col("_n").cast("double"))))
-        .filter(col("cosine") >= threshold)
-        .select(col("id_a"), col("id_b"), col("cosine"))
-      val small = mem.filter(col("_m") <= maxBucket && col("_m") > 1)
-      val within = internalCosine(small
-        .select(col("vec"), col("id").as("id_a"), col("_n"))
-        .join(small.select(col("vec"), col("id").as("id_b")), "vec")
-        .filter(col("id_a") < col("id_b")))
-      val withinStar = internalCosine(mem
-        .filter(col("_m") > maxBucket && col("id") =!= col("_hub"))
-        .select(col("_hub").as("id_a"), col("id").as("id_b"), col("_n")))
-      cross.unionByName(within).unionByName(withinStar)
+    groups match {
+      case None => repPairs.select(col("id_a"), col("id_b"), col("cosine"))
+      case Some(g) =>
+        // a group's internal cosine is the SAME _n/sqrt(_n·_n) double
+        // expression the in-bucket join would have produced (sqrt(n·n)
+        // can differ from n by an ulp — a hand-written 1.0 would
+        // diverge from the SQL oracle bit-for-bit); zero-norm groups
+        // get the same null and so fail the threshold
+        val self = when(col("_n") === 0, lit(null).cast("double"))
+          .otherwise(col("_n").cast("double") /
+            sqrt(col("_n").cast("double") * col("_n").cast("double")))
+        g.fanOutPairs(repPairs, maxBucket, Seq("cosine"))
+          .unionByName(g.withinGroupPairs(self >= threshold, maxBucket,
+            Seq("cosine" -> self)))
     }
   }
 }

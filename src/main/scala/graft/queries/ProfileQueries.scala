@@ -20,42 +20,6 @@ object ProfileQueries {
 
   private val MicroUs = "CAST(round(value * 1000000) AS BIGINT)"
 
-  /** Open-addressing exact-distinct set over primitive longs for the
-    * q131 one-task profile kernel: ~8 B/slot at ≤75% load vs ~48 B +
-    * one allocation per entry for a boxed HashSet[Any] — the boxed
-    * form is multi-GB at q131's 5M-row LocalExact threshold. 0L is
-    * tracked out-of-band so the empty-slot sentinel stays unambiguous
-    * (same convention as AllPairsLocal.LongSet, which can't hold 0). */
-  private final class LongDistinct(initialCap: Int) {
-    private var cap = Integer.highestOneBit(math.max(initialCap, 16) * 2)
-    private var table = new Array[Long](cap)
-    private var n = 0
-    private var hasZero = false
-    def add(k: Long): Unit = {
-      if (k == 0L) { hasZero = true; return }
-      // long arithmetic: at n≈536M, n*4 overflows Int and the growth
-      // check would silently stop firing (ADVICE r13) — unreachable
-      // under q131's 5M-row LocalExact threshold, but fail safe anyway
-      if (n.toLong * 4 >= cap.toLong * 3) grow()
-      var i = (scala.util.hashing.byteswap64(k) & (cap - 1)).toInt
-      var done = false
-      while (!done) {
-        val cur = table(i)
-        if (cur == 0L) { table(i) = k; n += 1; done = true }
-        else if (cur == k) done = true
-        else i = (i + 1) & (cap - 1)
-      }
-    }
-    def size: Long = n.toLong + (if (hasZero) 1L else 0L)
-    private def grow(): Unit = {
-      val old = table
-      cap <<= 1
-      table = new Array[Long](cap)
-      n = 0
-      old.foreach(k => if (k != 0L) add(k))
-    }
-  }
-
   /** Lower median of a WEIGHTED (group, micro-unit value, count)
     * relation: the smallest v whose cumulative count reaches
     * ceil(n/2). Exact and total-order deterministic; the window runs
@@ -367,7 +331,7 @@ object ProfileQueries {
           // columns keep a HashSet (tiny domains here, and string
           // interning beats re-hashing for min/max anyway)
           val longSets = Array.tabulate(6)(i =>
-            if (isStr(i)) null else new LongDistinct(1 << 16))
+            if (isStr(i)) null else new graft.operators.LongSet(1 << 16))
           val strSets = Array.tabulate(6)(i =>
             if (isStr(i)) new java.util.HashSet[String]() else null)
           val minL = Array.fill(6)(Long.MaxValue)

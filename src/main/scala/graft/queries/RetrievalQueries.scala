@@ -1,9 +1,9 @@
 package graft.queries
 
 import graft.functions.TextFns
-import graft.operators.{SimilaritySearch, TopKPerGroup}
+import graft.operators.{AllPairsLocal, SetGroups, SimilaritySearch, TopKPerGroup}
 import graft.util.Tables
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -36,6 +36,47 @@ object RetrievalQueries {
   private def normSqlR(a: String): String =
     s"CAST(list_sum(list_transform($a, " +
       s"x -> CAST(round(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) * 1e10, 0) AS BIGINT))) AS BIGINT)"
+
+  /** The prefix-filter family's (q133/q143/q165) doc relation: the
+    * sorted distinct 3-shingle array `arr`, its size `sz`, and the
+    * `extra` columns per doc, materialized once. Per-doc
+    * array_distinct replaces a corpus-wide explode→DISTINCT shuffle
+    * and the array-rebuilding groupBy — the doc's sorted array IS the
+    * grouped form — and the one map-only materialization feeds dfw,
+    * the prefix stream, and both verify joins. */
+  private def shingleSets(s: SparkSession, dir: String,
+                          extra: (String, Column)*): DataFrame =
+    extra.foldLeft(Tables.wide(s, dir, "documents")
+      .select(col("doc_id"),
+        array_sort(array_distinct(TextFns.shingles(col("text"), 3))).as("arr"))
+      .withColumn("sz", size(col("arr")).cast(LongType))) {
+      case (d, (n, c)) => d.withColumn(n, c)
+    }.localCheckpoint()
+
+  /** Bayardo prefix filter front end over [[shingleSets]]: `sh` is the
+    * exploded (doc_id, sz, carry…, w) stream; `prefix` is each doc's
+    * first ⌊sz/div⌋+1 shingles by global (df, w) ascending — rarest
+    * first, so candidate buckets are the smallest df buckets and the
+    * Zipf head never generates candidates — as (doc_id, w, carry…). */
+  private def prefixStream(docs: DataFrame, div: Int,
+                           carry: String*): (DataFrame, DataFrame) = {
+    val cs = carry.map(col)
+    val sh = docs.select((col("doc_id") +: col("sz") +: cs) :+
+      explode(col("arr")).as("w"): _*)
+    val dfw = sh.groupBy(col("w"))
+      .agg(count(lit(1)).cast(LongType).as("df"))
+    val prefix = sh.join(dfw, "w")
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("w"))))
+      .filter(col("rn") <= expr(s"sz div $div + 1"))
+      .select(col("doc_id") +: col("w") +: cs: _*)
+    (sh, prefix)
+  }
+
+  /** The prefix family's collapse gate: it has no bucket cap (its
+    * plans are exact all-pairs), so it gates at the MinHash family's
+    * default cap of 1000, i.e. 500 duplicate extras. */
+  private val GateBucket = 1000
 
   val all: Seq[Q] = Seq(
 
@@ -417,43 +458,21 @@ object RetrievalQueries {
     // arrays carried to the verify are doc-sized (AllPairs' design).
     Q("q133_allpairs_jaccard",
       (s, dir) => {
-        // Per-doc dedup happens INSIDE the array (array_distinct) —
-        // the (doc_id, w) pairs are then unique by construction, so
-        // the old corpus-wide explode→DISTINCT shuffle and the
-        // re-grouping groupBy(doc_id) that rebuilt the arrays both
-        // disappear: the doc's sorted array IS the grouped form. One
-        // map-only materialization feeds dfw, the prefix stream, and
-        // both verify joins.
-        val docArr = Tables.wide(s, dir, "documents")
-          .select(col("doc_id"),
-            array_sort(array_distinct(TextFns.shingles(col("text"), 3)))
-              .as("arr"))
-          .withColumn("sz", size(col("arr")).cast(LongType))
-          .localCheckpoint()
+        val docArr = shingleSets(s, dir)
         // LocalExact hybrid (AllPairsLocal): below the doc threshold
         // the whole df-rank → prefix → candidate → verify chain is ONE
         // executor task; the Bayardo equi-join below stays the 100-TB
         // path (parity pinned by LocalExactParitySpec).
         def pairsOver(docs: DataFrame): DataFrame = {
-          val sh = docs.select(col("doc_id"), col("sz"),
-            explode(col("arr")).as("w"))
-          val dfw = sh.groupBy(col("w"))
-            .agg(count(lit(1)).cast(LongType).as("df"))
-          val arrs = docs
-          val prefix = sh.join(dfw, "w")
-            .withColumn("rn", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy(col("doc_id")).orderBy(col("df"), col("w"))))
-            .filter(col("rn") <= expr("sz div 2 + 1"))
-            .select(col("doc_id"), col("w"))
+          val (_, prefix) = prefixStream(docs, 2)
           val cand = prefix.as("a").join(prefix.as("b"), Seq("w"))
             .filter(col("a.doc_id") < col("b.doc_id"))
             .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
             .distinct()
           cand
-            .join(arrs.select(col("doc_id").as("d1"), col("arr").as("arr1"),
+            .join(docs.select(col("doc_id").as("d1"), col("arr").as("arr1"),
               col("sz").as("sz1")), "d1")
-            .join(arrs.select(col("doc_id").as("d2"), col("arr").as("arr2"),
+            .join(docs.select(col("doc_id").as("d2"), col("arr").as("arr2"),
               col("sz").as("sz2")), "d2")
             .withColumn("inter", graft.functions.SortedIntersect
               .intersectCount(col("arr1"), col("arr2")))
@@ -462,18 +481,20 @@ object RetrievalQueries {
             .select(col("d1"), col("d2"), col("inter"), col("sz1"), col("sz2"),
               col("jac_bp"))
         }
-        graft.operators.AllPairsLocal.allPairs(docArr)
+        AllPairsLocal.allPairs(docArr)
           .getOrElse {
             // identical-set group collapse (SetGroups): the candidate
             // join over a mass-duplicate corpus is dup²-quadratic; run
             // the pipeline over one rep per distinct set and fan
-            // PASSING pairs out to members — pure output, bit-equal
-            graft.operators.SetGroups
-              .collapse(docArr, "doc_id", Seq("arr", "sz")) match {
+            // PASSING pairs out to members — pure output, bit-equal.
+            // Full membership both ways (no cap: all-pairs semantics);
+            // sz1/sz2 follow their ids when the members reorder.
+            SetGroups.collapse(docArr, "doc_id", Seq("arr", "sz"),
+                GateBucket) match {
               case None => pairsOver(docArr)
-              case Some((reps, mem)) =>
-                val rp = pairsOver(reps)
-                val cross = rp
+              case Some(g) =>
+                val mem = g.members
+                val cross = pairsOver(g.reps)
                   .join(mem.select(col("rep").as("d1"), col("id").as("_m1")),
                     "d1")
                   .join(mem.select(col("rep").as("d2"), col("id").as("_m2")),
@@ -490,16 +511,11 @@ object RetrievalQueries {
                     col("jac_bp"))
                 // members of one non-empty group: J = 1 exactly (the
                 // uncollapsed plan emits them via their shared prefix)
-                val gm = mem.join(
-                  reps.select(col("doc_id").as("rep"), col("sz")), "rep")
-                  .filter(col("sz") > 0)
-                val within = gm.select(col("rep"), col("sz"),
-                    col("id").as("_m1"))
-                  .join(gm.select(col("rep"), col("id").as("_m2")), Seq("rep"))
-                  .filter(col("_m1") < col("_m2"))
-                  .select(col("_m1").as("d1"), col("_m2").as("d2"),
-                    col("sz").as("inter"), col("sz").as("sz1"),
-                    col("sz").as("sz2"), lit(10000L).as("jac_bp"))
+                val within = g.withinGroupPairs(col("sz") > 0, Int.MaxValue,
+                    Seq("inter" -> col("sz"), "sz1" -> col("sz"),
+                      "sz2" -> col("sz"), "jac_bp" -> lit(10000L)))
+                  .withColumnRenamed("id_a", "d1")
+                  .withColumnRenamed("id_b", "d2")
                 cross.unionByName(within)
             }
           }
@@ -551,37 +567,20 @@ object RetrievalQueries {
       (s, dir) => {
         val isBase = graft.operators.Dedup
           .md5Int32(col("doc_id").cast(StringType)) % 100 < 90
-        // per-doc array_distinct replaces the corpus-wide DISTINCT
-        // shuffle and the array-rebuilding groupBy — the q133 shape
-        val docArr = Tables.wide(s, dir, "documents")
-          .select(col("doc_id"),
-            array_sort(array_distinct(TextFns.shingles(col("text"), 3)))
-              .as("arr"))
-          .withColumn("sz", size(col("arr")).cast(LongType))
-          .withColumn("base", isBase)
-          .localCheckpoint()
+        val docArr = shingleSets(s, dir, "base" -> isBase)
         // LocalExact hybrid (AllPairsLocal, q133 convention): one-task
         // exact pass below the doc threshold, the orientation-
         // restricted Bayardo join below as the 100-TB path.
         def incOver(docs: DataFrame): DataFrame = {
-            val sh = docs.select(col("doc_id"), col("sz"), col("base"),
-              explode(col("arr")).as("w"))
-            val dfw = sh.groupBy(col("w"))
-              .agg(count(lit(1)).cast(LongType).as("df"))
-            val arrs = docs
-            val prefix = sh.join(dfw, "w")
-              .withColumn("rn", row_number().over(
-                Window.partitionBy(col("doc_id")).orderBy(col("df"), col("w"))))
-              .filter(col("rn") <= expr("sz div 2 + 1"))
-              .select(col("doc_id"), col("w"), col("base"))
+            val (_, prefix) = prefixStream(docs, 2, "base")
             val cand = prefix.filter(!col("base")).as("a")
               .join(prefix.filter(col("base")).as("b"), Seq("w"))
               .select(col("a.doc_id").as("inc"), col("b.doc_id").as("bs"))
               .distinct()
             cand
-              .join(arrs.select(col("doc_id").as("inc"), col("arr").as("arr1"),
+              .join(docs.select(col("doc_id").as("inc"), col("arr").as("arr1"),
                 col("sz").as("sz1")), "inc")
-              .join(arrs.select(col("doc_id").as("bs"), col("arr").as("arr2"),
+              .join(docs.select(col("doc_id").as("bs"), col("arr").as("arr2"),
                 col("sz").as("sz2")), "bs")
               .withColumn("inter", graft.functions.SortedIntersect
                 .intersectCount(col("arr1"), col("arr2")))
@@ -592,7 +591,7 @@ object RetrievalQueries {
               .select(col("inc"), col("m.bs").as("base_id"),
                 (-col("m.nj")).cast(LongType).as("jac_bp"))
         }
-        graft.operators.AllPairsLocal.incremental(docArr)
+        AllPairsLocal.incremental(docArr)
           .getOrElse {
             // identical-set group collapse, keyed (arr, base): every
             // pair is cross-group by construction (inc vs base differ
@@ -601,12 +600,12 @@ object RetrievalQueries {
             // Rep-level argmin is exact: on a jac_bp tie the true min
             // base id is the min of the tied groups' reps (each rep is
             // its group's min member).
-            graft.operators.SetGroups
-              .collapse(docArr, "doc_id", Seq("arr", "sz", "base")) match {
+            SetGroups.collapse(docArr, "doc_id", Seq("arr", "sz", "base"),
+                GateBucket) match {
               case None => incOver(docArr)
-              case Some((reps, mem)) =>
-                incOver(reps)
-                  .join(mem.select(col("rep").as("inc"), col("id").as("_m")),
+              case Some(g) =>
+                incOver(g.reps)
+                  .join(g.members.select(col("rep").as("inc"), col("id").as("_m")),
                     "inc")
                   .select(col("_m").as("inc"), col("base_id"), col("jac_bp"))
             }
@@ -722,37 +721,20 @@ object RetrievalQueries {
     // takes q75's maxDf boilerplate cap; here the corpus is exact.
     Q("q143_containment_join",
       (s, dir) => {
-        // per-doc array_distinct replaces the corpus-wide DISTINCT
-        // shuffle and the array-rebuilding groupBy — the q133 shape
-        val docArr = Tables.wide(s, dir, "documents")
-          .select(col("doc_id"),
-            array_sort(array_distinct(TextFns.shingles(col("text"), 3)))
-              .as("arr"))
-          .withColumn("sz", size(col("arr")).cast(LongType))
-          .localCheckpoint()
+        val docArr = shingleSets(s, dir)
         // LocalExact hybrid (AllPairsLocal, q133 convention): one-task
         // exact pass below the doc threshold; the one-sided prefix
         // join below stays the 100-TB path.
         def contOver(docs: DataFrame): DataFrame = {
-          val sh = docs.select(col("doc_id"), col("sz"),
-            explode(col("arr")).as("w"))
-          val dfw = sh.groupBy(col("w"))
-            .agg(count(lit(1)).cast(LongType).as("df"))
-          val arrs = docs
-          val prefix = sh.join(dfw, "w")
-            .withColumn("rn", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy(col("doc_id")).orderBy(col("df"), col("w"))))
-            .filter(col("rn") <= expr("sz div 5 + 1"))
-            .select(col("doc_id"), col("w"))
+          val (sh, prefix) = prefixStream(docs, 5)
           val cand = prefix.as("a").join(sh.as("b"), Seq("w"))
             .filter(col("a.doc_id") =!= col("b.doc_id"))
             .select(col("a.doc_id").as("d_a"), col("b.doc_id").as("d_b"))
             .distinct()
           cand
-            .join(arrs.select(col("doc_id").as("d_a"), col("arr").as("arr_a"),
+            .join(docs.select(col("doc_id").as("d_a"), col("arr").as("arr_a"),
               col("sz").as("sz_a")), "d_a")
-            .join(arrs.select(col("doc_id").as("d_b"), col("arr").as("arr_b"),
+            .join(docs.select(col("doc_id").as("d_b"), col("arr").as("arr_b"),
               col("sz").as("sz_b")), "d_b")
             .withColumn("inter", graft.functions.SortedIntersect
               .intersectCount(col("arr_a"), col("arr_b")))
@@ -761,16 +743,17 @@ object RetrievalQueries {
             .select(col("d_a"), col("d_b"), col("inter"), col("sz_a"),
               col("sz_b"), col("cont_bp"))
         }
-        graft.operators.AllPairsLocal.containment(docArr)
+        AllPairsLocal.containment(docArr)
           .getOrElse {
             // identical-set group collapse (SetGroups, the q133 shape —
             // DIRECTED fan-out: rep pairs expand member_a × member_b
             // keeping direction; within-group pairs are containment
             // 10000 in BOTH directions)
-            graft.operators.SetGroups
-              .collapse(docArr, "doc_id", Seq("arr", "sz")) match {
+            SetGroups.collapse(docArr, "doc_id", Seq("arr", "sz"),
+                GateBucket) match {
               case None => contOver(docArr)
-              case Some((reps, mem)) =>
+              case Some(g) =>
+                val (reps, mem) = (g.reps, g.members)
                 val rp = contOver(reps)
                 val cross = rp
                   .join(mem.select(col("rep").as("d_a"), col("id").as("_ma")),

@@ -21,7 +21,8 @@ object TextQueries {
   private val RowsPerBand = 4
   private val ShingleN = 3
 
-  /** DuckDB CTEs mirroring TextFns.shingles + Dedup.minhashSignature. */
+  /** DuckDB CTEs mirroring TextFns.shingles + the signature aggregate
+    * of Dedup.minhashCandidates. */
   private def minhashSigSql: String = {
     val params = Dedup.hashParams(Bands * RowsPerBand)
     val sigCols = params.zipWithIndex.map { case ((a, b), i) =>

@@ -89,7 +89,7 @@ class DedupCollapseSpec extends graft.SparkSpec {
     // a natural bucket at maxBucket − 1. Three duplicates of fp 0
     // (extras = 3 < 4) keep the gate OFF while pushing the member-
     // level bucket to 10 > 8: this is exactly the residual the gate
-    // scaladoc documents ([[Dedup.dupGroups]]).
+    // scaladoc documents ([[graft.operators.SetGroups]]).
     val s = spark; import s.implicits._
     val fps = (1L to 4L).map(_ -> 0L) ++ // 1 natural member + 3 dups
       (5L to 10L).map(i => i -> (i - 4L)) // distinct fps 1..6

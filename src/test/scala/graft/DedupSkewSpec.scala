@@ -162,10 +162,13 @@ class DedupSkewSpec extends SparkSpec {
       Array(1.0f, 0.8f, 0.6f, 0.4f),
       Array(0.9f, 0.9f, 0.5f, 0.5f),
       Array(0.2f, 0.3f, 0.9f, 1.0f))
-    val rows = for {
+    val rows = (for {
       (v, vi) <- vs.zipWithIndex
       copy <- 0 until 3
-    } yield ((vi * 10 + copy).toLong, v)
+    } yield ((vi * 10 + copy).toLong, v)) ++
+      // two identical zero vectors: brute force's 0/0 cosine is NaN and
+      // never passes, so a collapsed group of them must emit no pair
+      Seq(90L, 91L).map(_ -> Array.fill(4)(0f))
     val vecs = rows.toDF("vec_id", "embedding")
     def cos(a: Array[Float], b: Array[Float]): Double = {
       def dot(x: Array[Float], y: Array[Float]) =
@@ -179,9 +182,10 @@ class DedupSkewSpec extends SparkSpec {
     } yield (a, b)).toSet
     assert(expected.exists { case (a, b) => a / 10 == b / 10 } &&
       expected.exists { case (a, b) => a / 10 != b / 10 } &&
-      !expected.exists { case (a, b) => a / 10 == 0 && b / 10 == 2 },
+      !expected.exists { case (a, b) => a / 10 == 0 && b / 10 == 2 } &&
+      !expected.exists { case (a, b) => a >= 90 || b >= 90 },
       "fixture must have internal pairs, a passing cross pair, and a failing cross pair")
-    // force the collapse on (6 extras < the maxBucket/2 default)
+    // force the collapse on (7 extras < the maxBucket/2 default)
     spark.conf.set("spark.graft.dupCollapseMinExtras", "1")
     val got =
       try EmbeddingDedup(vecs, "vec_id", "embedding",
@@ -190,7 +194,7 @@ class DedupSkewSpec extends SparkSpec {
       finally spark.conf.unset("spark.graft.dupCollapseMinExtras")
     assert(got == expected,
       s"collapsed expansion diverged: missing=${expected -- got} extra=${got -- expected}")
-    // default threshold path (collapse off at 6 extras) must agree
+    // default threshold path (collapse off at 7 extras) must agree
     val gotDefault = EmbeddingDedup(vecs, "vec_id", "embedding",
       nPlanes = 2, threshold = thr, maxBucket = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

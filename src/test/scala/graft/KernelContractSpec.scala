@@ -187,4 +187,15 @@ class KernelContractSpec extends graft.SparkSpec {
       .map(t => String.valueOf(t.getMessage)).toSeq
     assert(msgs.exists(_.contains("index 5")), msgs.mkString(" | "))
   }
+
+  test("LongSet: add reports each new key once (0 included); size survives growth") {
+    val set = new LongSet(16)
+    assert(set.add(0L) && !set.add(0L))
+    // 10k keys from an initial 32-slot table: many grow() rehashes
+    val keys = (1L to 10000L).map(_ * 0x9E3779B97F4A7C15L) :+ Long.MinValue :+ -1L
+    assert(keys.forall(set.add))
+    assert(!keys.exists(set.add), "a re-added key was reported new")
+    assert(!set.add(0L))
+    assert(set.size == keys.size + 1L)
+  }
 }

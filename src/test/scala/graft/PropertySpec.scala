@@ -65,9 +65,8 @@ class PropertySpec extends SparkSpec {
       (1L, "w1 w2 w3 w4 w5 w6"), (2L, "w1 w2 w3 w4 w5 w6"),
       (3L, "a b c d e f"), (4L, "w1 w2 w3 x y z")
     ).toDF("doc_id", "text")
-    val cand = graft.operators.Dedup.minhashCandidates(docs, "doc_id", "text", n = 2)
     val verified = graft.operators.Dedup
-      .jaccardVerify(cand, docs, "doc_id", "text", 2)
+      .lshVerified(docs, "doc_id", "text", n = 2)
       .select("id_a", "id_b", "est_jaccard", "jaccard")
       .as[(Long, Long, Double, Double)].collect()
     assert(verified.forall(v => v._3 >= 0 && v._3 <= 1 && v._4 >= 0 && v._4 <= 1))

@@ -20,7 +20,7 @@ class SetGroupsSpec extends SparkSpec {
       (1L, Array(10L, 20L), 2L),
       (2L, Array(10L, 30L), 2L),
       (3L, Array(40L), 1L)).toDF("doc_id", "arr", "sz")
-    assert(SetGroups.collapse(docs, "doc_id", Seq("arr", "sz")).isEmpty)
+    assert(SetGroups.collapse(docs, "doc_id", Seq("arr", "sz"), 1000).isEmpty)
   }
 
   test("collapse: min-id reps, full membership, key columns preserved") {
@@ -32,11 +32,12 @@ class SetGroupsSpec extends SparkSpec {
       (2L, Array.empty[Long], 0L), (8L, Array.empty[Long], 0L)) // empty g
       .toDF("doc_id", "arr", "sz")
     // 3 duplicate extras sit below the r14 default threshold
-    // (Dedup.dupCollapseThreshold) — force the machinery on for the pin
+    // (SetGroups.collapse) — force the machinery on for the pin
     spark.conf.set("spark.graft.dupCollapseMinExtras", "1")
-    val Some((reps, mem)) =
-      try SetGroups.collapse(docs, "doc_id", Seq("arr", "sz"))
+    val Some(g) =
+      try SetGroups.collapse(docs, "doc_id", Seq("arr", "sz"), 1000)
       finally spark.conf.unset("spark.graft.dupCollapseMinExtras")
+    val (reps, mem) = (g.reps, g.members)
     val repRows = reps.collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toSeq, r.getLong(2))).toSet
     assert(repRows == Set((3L, Seq(10L, 20L), 2L), (7L, Seq(10L, 30L), 2L),

@@ -63,7 +63,8 @@ class TextGeoSpec extends SparkSpec {
     val pairs = cand.select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.contains((1L, 3L)) || !pairs.contains((2L, 3L)))
-    val verified = Dedup.jaccardVerify(cand, docs, "doc_id", "text", 2)
+    val verified = Dedup.lshVerified(docs, "doc_id", "text", n = 2, bands = 8,
+        rowsPerBand = 2)
       .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect()
     val j12 = verified.find(v => v._1 == 1L && v._2 == 2L).map(_._3)
     assert(j12.exists(j => j > 0.4 && j < 1.0))
