@@ -74,7 +74,7 @@ object Compaction {
       s"inconsistent partition layouts under $qIn: " +
         specs.map(s => if (s.isEmpty) "<flat>" else s.mkString("/")).mkString(" vs "))
     val partCols: Seq[String] = specs.headOption.getOrElse(Nil)
-    val df = spark.read.parquet(inDir)
+    val df = graft.util.ParquetRead.read(spark, inDir)
     val keyCols = (partCols ++ sortCol).map(col)
     val packed: DataFrame =
       if (keyCols.nonEmpty)

@@ -58,6 +58,29 @@ object Dedup {
       (a, b)
     }
 
+  /** Largest signature length (`bands * rowsPerBand`) the MinHash
+    * family accepts. The distributed tail computes `est_jaccard` as one
+    * flat `when` term per hash ([[candidatesFromSignatures]]), about
+    * 436 bytes of generated bytecode each. Measured from the executed
+    * plan's compiled stages (`debug.codegenStringSeq`, Spark 4.1): the
+    * method holding the projection compiles to 53.5 KB at 128 hashes
+    * and 65.4 KB at 155, the largest count under Spark's 65535-byte
+    * `hugeMethodLimit`; at 156 it no longer compiles, and the stage
+    * falls back to interpreting a hash-deep expression tree per pair
+    * (512 hashes: 38 s for three documents, against 5 s at 128). The
+    * cap keeps 12 KB of that method free for join shapes that inline
+    * more code beside the projection. */
+  val MaxHashes = 128
+
+  private def checkedHashes(bands: Int, rowsPerBand: Int): Int = {
+    require(bands >= 1 && rowsPerBand >= 1,
+      s"bands ($bands) and rowsPerBand ($rowsPerBand) must be positive")
+    val nH = bands * rowsPerBand
+    require(nH <= MaxHashes, s"bands * rowsPerBand = $nH exceeds $MaxHashes, " +
+      "the largest signature whose est_jaccard projection whole-stage-codegens")
+    nH
+  }
+
   /** MinHash-LSH candidate pairs: band the signature, bucket-join on
     * (band, band-signature), emit unordered (idA < idB) pairs with the
     * estimated Jaccard (fraction of matching minhashes).
@@ -80,6 +103,7 @@ object Dedup {
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
                         maxBucket: Int = 1000): DataFrame = {
+    val nH = checkedHashes(bands, rowsPerBand)
     // Shape notes (bench-driven):
     //  - repartition BEFORE the md5 projection: input file layout must
     //    not bound CPU parallelism of a compute-heavy column;
@@ -113,8 +137,7 @@ object Dedup {
         .select(col("id"),
           graft.functions.ShingleHashes(col("_txt"), n).as("_hv"))
       val withSig = signatures(
-        docHv.select(col("id"), explode(col("_hv")).as("hv")),
-        bands * rowsPerBand)
+        docHv.select(col("id"), explode(col("_hv")).as("hv")), nH)
       localCandidates(withSig, bands, rowsPerBand, maxBucket).getOrElse {
         candidatesFromSignatures(withSig, bands, rowsPerBand, maxBucket)
       }
@@ -154,14 +177,12 @@ object Dedup {
       .agg(sigCols.head, sigCols.tail: _*)
       .select(col("id"),
         array((0 until numHashes).map(i => col(s"_s$i")): _*).as("sig"))
-      // LAZY (r15): every consumer path runs [[localCandidates]]'s
-      // gating count as its first action (LocalExact counts before it
-      // dispatches, and the distributed fall-through only executes
-      // AFTER that count returned None) — so the count materializes
-      // the blocks and the dedicated eager-checkpoint job round is
-      // pure overhead. A hypothetical non-Long-id caller that skips
-      // the count would at worst double-compute (block-store races
-      // keep one winner), never diverge.
+      // LAZY (r15): every consumer path runs a count in
+      // [[localCandidates]] as its first action (LocalExact's gating
+      // count for a Long id, a plain count for any other id type, and
+      // the distributed fall-through only executes AFTER it) — so the
+      // count materializes the blocks and a dedicated eager-checkpoint
+      // job round would be pure overhead.
       .localCheckpoint(eager = false)
   }
 
@@ -175,12 +196,17 @@ object Dedup {
     * relation as the distributed tail, so the paths cannot diverge on
     * arithmetic — the kernel is banding + pair emission only. Gated on
     * a LongType id — exotic id types fall through to the distributed
-    * plan. */
+    * plan, after a count that materializes the lazy signature
+    * checkpoint in the gating count's place, so both sides of the
+    * bucket self-join read its blocks instead of recomputing the
+    * corpus-wide aggregate. */
   private def localCandidates(withSig: DataFrame,
                               bands: Int, rowsPerBand: Int,
                               maxBucket: Int): Option[DataFrame] = {
-    if (withSig.schema.head.dataType != org.apache.spark.sql.types.LongType)
+    if (withSig.schema.head.dataType != LongType) {
+      withSig.count()
       return None
+    }
     LocalExact(withSig, org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id_a",
         org.apache.spark.sql.types.LongType),
@@ -245,12 +271,13 @@ object Dedup {
                                     bands: Int = 4, rowsPerBand: Int = 4,
                                     maxBucket: Int = 1000,
                                     collapseDups: Boolean = true): DataFrame = {
+    val nH = checkedHashes(bands, rowsPerBand)
     def cands(docs: DataFrame): DataFrame = {
       val withSig = signatures(
         docs
           .select(col("id"), explode(col("_sh")).as("_s"))
           .select(col("id"), md5Int32(col("_s")).as("hv")),
-        bands * rowsPerBand)
+        nH)
       localCandidates(withSig, bands, rowsPerBand, maxBucket).getOrElse {
         candidatesFromSignatures(withSig, bands, rowsPerBand, maxBucket)
       }
@@ -291,7 +318,8 @@ object Dedup {
     // documents — and this projection runs on every candidate pair on
     // the at-scale distributed path. element_at is 1-based; arrays
     // are always exactly numHashes long, so the flat sum counts the
-    // identical positions bit-for-bit like the HOF did.
+    // identical positions bit-for-bit like the HOF did. [[MaxHashes]]
+    // bounds the term count to what still compiles as one stage.
     val nH = bands * rowsPerBand
     val eqCount = (1 to nH).map(i =>
       when(element_at(col("sig_a"), i) === element_at(col("sig_b"), i), 1)
@@ -316,6 +344,7 @@ object Dedup {
   def lshVerified(docs: DataFrame, idCol: String, textCol: String,
                   n: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
                   maxBucket: Int = 1000): DataFrame = {
+    checkedHashes(bands, rowsPerBand)
     val par = docs.sparkSession.sparkContext.defaultParallelism
     val shingled = docs
       .select(col(idCol), col(textCol))

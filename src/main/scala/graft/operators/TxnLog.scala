@@ -20,7 +20,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Why this scales: the LOG is the only thing replayed — O(commits)
   * driver-side work (the documented bounded-artifact convention; real
   * systems checkpoint the log, same contract) — while the DATA is
-  * never listed by directory walk at all. Snapshot isolation and time
+  * never listed by directory walk: the manifest comes from the log
+  * and the schema from one parquet footer. Snapshot isolation and time
   * travel both fall out of replaying a version prefix: readers pin a
   * version and are immune to concurrent appends; `VERSION AS OF n` is
   * the same replay stopped early. A remove is metadata-only — deletes
@@ -243,14 +244,15 @@ object TxnLog {
   }
 
   /** Snapshot read: replay to `asOf` (latest when None), scan exactly
-    * the live files. No directory listing of the data tree ever
-    * happens — the log IS the file manifest, which is what keeps a
-    * million-file table readable. */
+    * the live files. The file manifest comes from the log, never from
+    * a directory walk of the data tree, and the schema from one footer
+    * of the first live file ([[graft.util.ParquetRead]]), so building
+    * the snapshot runs no Spark job. A missing live file fails here. */
   def snapshot(spark: SparkSession, root: String,
                asOf: Option[Long] = None): DataFrame = {
     val (_, files) = liveFiles(root, asOf)
     require(files.nonEmpty, s"snapshot of $root has no live files")
-    spark.read.parquet(files: _*)
+    graft.util.ParquetRead.read(spark, files: _*)
   }
 
   /** Stats-pruned snapshot read for a `col BETWEEN lo AND hi`
@@ -270,8 +272,8 @@ object TxnLog {
       case None => true
     })
     require(kept.nonEmpty, s"predicate [$lo,$hi] on $colName prunes every file")
-    val df = spark.read
-      .parquet(kept.map(a => Paths.get(root, a.file).toString): _*)
+    val df = graft.util.ParquetRead.read(spark,
+      kept.map(a => Paths.get(root, a.file).toString): _*)
     (df, kept.size.toLong, adds.size.toLong)
   }
 

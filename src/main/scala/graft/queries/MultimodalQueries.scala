@@ -106,7 +106,7 @@ object MultimodalQueries {
     // Asset 12 is deliberately undecodable -> NULL.
     Q("q189_image_dhash",
       (s, dir) => graft.operators.ImageDedup.withDhash(
-          s.read.parquet(graft.util.RepoRoot.fixture("image_assets.parquet")),
+          graft.util.ParquetRead.read(s, graft.util.RepoRoot.fixture("image_assets.parquet")),
           "asset_id", "content")
         .orderBy(col("asset_id")),
       Some(s"""SELECT asset_id, dhash
@@ -125,7 +125,7 @@ object MultimodalQueries {
     // xor/bit_count over the fixture's expected hashes.
     Q("q190_image_neardup",
       (s, dir) => graft.operators.ImageDedup.nearDupPairs(
-          s.read.parquet(graft.util.RepoRoot.fixture("image_assets.parquet")),
+          graft.util.ParquetRead.read(s, graft.util.RepoRoot.fixture("image_assets.parquet")),
           "asset_id", "content", maxHamming = 6)
         .orderBy(col("id_a"), col("id_b")),
       Some(s"""WITH e AS (SELECT asset_id, dhash

@@ -303,9 +303,12 @@ object ProfileQueries {
         // rows ×7 before the exchange; below the row threshold one
         // sequential pass accumulates all six profiles (typed columns
         // pre-derived in Catalyst so the kernel sees only longs and
-        // strings; string min/max in UTF8-binary = code-point order)
+        // strings; string min/max in UTF8-binary = code-point order).
+        // The kernel reads one coalesced partition, so its input is the
+        // plain table: a widened one only adds a repartition shuffle to
+        // the gating count and to the kernel's read.
         val localOut = graft.operators.LocalExact(
-          Tables.wide(s, dir, "orders").select(
+          Tables(s, dir, "orders").select(
             col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
             priceUs.as("p_us"), dateUs.as("d_us"), col("o_orderpriority")),
           org.apache.spark.sql.types.StructType(Seq(

@@ -378,7 +378,7 @@ object ScaleQueries {
             .select(col("o_orderkey").as("u_key"),
               (col("o_totalprice").cast(DecimalType(18, 2)) + lit(1000))
                 .as("u_totalprice"))
-          val rewritten = s.read.parquet(s"$root/f2")
+          val rewritten = graft.util.ParquetRead.read(s, s"$root/f2")
             .join(broadcast(updates), col("o_orderkey") === col("u_key"),
               "left")
             .select(col("o_orderkey"),

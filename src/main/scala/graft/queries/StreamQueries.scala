@@ -209,7 +209,7 @@ object StreamQueries {
               .write.mode("append").parquet(sink)
             ()
           }, "graft_q94_ckpt")
-        s.read.parquet(sink)
+        graft.util.ParquetRead.read(s, sink)
           .groupBy(col("hour_start"), col("event_type"))
           .agg(sum(col("n")).as("n"),
             sum(col("sum_dec")).cast(DoubleType).as("sum_value"))

@@ -754,8 +754,8 @@ object SurfaceQueries {
         require(insFiles.map(_.split('/').last).toSet == Set("d2", "d3") &&
           delFiles.map(_.split('/').last).toSet == Set("d1"),
           s"log diff wrong: +$insFiles -$delFiles")
-        val insSide = s.read.parquet(insFiles: _*)
-        val delSide = s.read.parquet(delFiles: _*)
+        val insSide = graft.util.ParquetRead.read(s, insFiles: _*)
+        val delSide = graft.util.ParquetRead.read(s, delFiles: _*)
         // Multiset netting in ONE aggregate instead of two exceptAll
         // shuffles: tag ±1, group by the full row, keep the net count
         // — carried-over rows (in both sides) cancel exactly as they

@@ -855,8 +855,8 @@ object TextQueries {
     // rank-order-chain ≡ scanner-loop argument on this artifact.
     Q("q101_bpe_encode",
       (s, dir) => {
-        val merges = s.read
-          .parquet(graft.util.RepoRoot.fixture("bpe_merges.parquet"))
+        val merges = graft.util.ParquetRead
+          .read(s, graft.util.RepoRoot.fixture("bpe_merges.parquet"))
           .orderBy(col("rank")).collect().toSeq
           .map(r => (r.getAs[String]("left"), r.getAs[String]("right")))
         val toks = graft.functions.BpeApply.tokens(col("word"), merges)

@@ -115,6 +115,16 @@ object Probe {
   def force(df: DataFrame): DataFrame =
     df.select(df.columns.map(c => count(col(c))).reduce(_ + _))
 
+  /** [[main]]'s protocol over each of `dirs`: the session cache on and
+    * every dir's tables warmed before the probe snapshots the kept
+    * RDDs, then per dir one [[Probe.sweep]]. One record list per dir. */
+  def profile(spark: SparkSession, dirs: Seq[String], names: Seq[String]): Seq[Seq[Record]] = {
+    Tables.enableSessionCache()
+    dirs.foreach(warmTables(spark, _))
+    val probe = new Probe(spark)
+    try dirs.map(probe.sweep(_, names)) finally probe.close()
+  }
+
   /** Bench's table warm, so that [[Probe.keep]] holds the session cache. */
   def warmTables(spark: SparkSession, dir: String): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -192,10 +202,7 @@ object Probe {
     val spark = Tables.session("probe")
     spark.sparkContext.setLogLevel("ERROR")
     SetConf(spark).foreach { case (k, v) => System.err.println(s"[conf] $k=$v") }
-    Tables.enableSessionCache()
-    warmTables(spark, dir)
-    val probe = new Probe(spark)
-    val recs = try probe.sweep(dir, names) finally probe.close()
+    val Seq(recs) = profile(spark, Seq(dir), names)
     def write(path: String, s: String): Unit =
       java.nio.file.Files.writeString(java.nio.file.Paths.get(path), s)
     new java.io.File(s"$out/plans").mkdirs()

@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Scale-up trial: replicate the sf0.1 tables N× with key offsets that
   * preserve referential integrity, then time headline queries at both
-  * scales with [[Probe.measure]] and report the runtime ratio —
+  * scales on [[Probe.main]]'s protocol ([[Probe.profile]]: tables
+  * warm, one warm sweep, the faster of two timed sweeps) and report the
+  * runtime ratio —
   * empirical evidence for the "would this plan survive a scale-up"
   * question, beyond eyeballing plans.
   * `runMain graft.util.ScaleTrial [replicas] [outDir]`.
@@ -106,19 +108,17 @@ object ScaleTrial {
         "q86_dedup_survivors", "q87_source_mixture", "q88_sequence_packing",
         "q89_kmeans_step")
     val headline = if (only.nonEmpty) only else defaultHeadline
-    // one Probe run per directory: Bench's every-column force, a
+    // one Probe profile per directory: Bench's every-column force, a
     // build/plan/exec split and the scratch release after each query.
     // The force value (Σ non-null output cells) at both scales tells
     // output-bound growth (the true answer got bigger — replication
     // makes every replica a genuine duplicate) from a plan hazard.
+    val Seq(small, big) = Probe.profile(spark, Seq(src, outDir), headline.distinct)
     println(f"${"query"}%-26s ${"sf0.1"}%8s ${"x" + replicas}%8s ratio ${"value"}%10s ${"value'"}%10s")
-    val probe = new Probe(spark)
-    headline.distinct.foreach { n =>
-      val (a, b) = (probe.measure(src, n), probe.measure(outDir, n))
-      println(f"$n%-26s ${a.totalS}%8.2f ${b.totalS}%8.2f ${b.totalS / a.totalS}%5.1f " +
+    small.zip(big).foreach { case (a, b) =>
+      println(f"${a.query}%-26s ${a.totalS}%8.2f ${b.totalS}%8.2f ${b.totalS / a.totalS}%5.1f " +
         f"${a.value}%10d ${b.value}%10d ${(a.error ++ b.error).mkString("; ")}")
     }
-    probe.close()
     // IVF index build and probe timed apart: q27's one-line ratio
     // conflates the amortize-once index build (|corpus| × nCells work,
     // nCells ~ √N → ~N^1.5) with the per-query probe (touches
@@ -132,7 +132,7 @@ object ScaleTrial {
     def ivfSplit(label: String)(probeOn: (DataFrame, DataFrame, DataFrame) => Long): Unit = {
       def once(dir: String): (Double, Double) = {
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+        val emb = ParquetRead.read(spark, s"$dir/embeddings.parquet")
         val centroids = emb.filter(col("vec_id") % 50 === 0)
           .select(col("vec_id").as("cell_id"), col("embedding").as("cell_vec"))
         val idx = SimilaritySearch.buildIndex(

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Uniform access to the driver-generated test tables (TESTDATA.md).
   *
-  * All schemas are fixed and known (FIXTURES.md §B) — at 100 TB we never
-  * schema-infer; parquet footers carry the schema and Catalyst prunes
-  * columns/pushes predicates into the scan automatically.
+  * Each table's schema comes from one parquet footer read on the
+  * driver ([[ParquetRead]]), so no table read runs a schema-inference
+  * job; Catalyst prunes columns and pushes predicates into the scan.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -38,7 +38,7 @@ object Tables {
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     if (cacheEnabled)
       cache.getOrElseUpdate((sfDir, name), {
-        val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+        val raw = ParquetRead.read(spark, s"$sfDir/$name.parquet")
         // The generator writes each table as ONE row group, so the scan
         // (and therefore the cached relation) is a single partition no
         // matter what maxPartitionBytes says — every downstream explode/
@@ -66,7 +66,7 @@ object Tables {
           else raw
         wide.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       })
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else ParquetRead.read(spark, s"$sfDir/$name.parquet")
   }
 
   /** A session-parallelism copy of a table that is NOT widened at

@@ -46,14 +46,16 @@ class DedupSkewSpec extends SparkSpec {
     assert(viaKernel == composed.map(_.toSeq).toSeq)
   }
 
-  test("minhash hot bucket emits linear star pairs, not quadratic") {
-    val nDup = 5000
-    val docs = ((0 until nDup).map(i => (i.toLong, "the same exact duplicated text body repeated verbatim")) ++
+  private val nDup = 5000
+  private def hotBucketDocs =
+    ((0 until nDup).map(i => (i.toLong, "the same exact duplicated text body repeated verbatim")) ++
       Seq((90001L, "a completely different document about spark physical planning"),
           (90002L, "a completely different document about spark physical planning"),
           (90003L, "yet another unique text body mentioning catalyst optimizer internals")))
       .toDF("doc_id", "text")
-    val pairs = Dedup.minhashCandidates(docs, "doc_id", "text", maxBucket = 100)
+
+  test("minhash hot bucket emits linear star pairs, not quadratic") {
+    val pairs = Dedup.minhashCandidates(hotBucketDocs, "doc_id", "text", maxBucket = 100)
       .cache()
     val n = pairs.count()
     // star shape: nDup-1 hub pairs for the dup cluster + 1 cold pair
@@ -64,6 +66,20 @@ class DedupSkewSpec extends SparkSpec {
     // the small identical pair (90001, 90002) survives the cold path
     assert(pairs.filter(col("id_a") === 90001L && col("id_b") === 90002L).count() == 1)
     pairs.unpersist()
+  }
+
+  test("minhash with a String id (the distributed fall-through) pairs as with the Long id") {
+    // a non-Long id skips the one-task kernel; its pairs, as unordered
+    // numeric id pairs, must be the Long run's
+    def pairs(docs: org.apache.spark.sql.DataFrame) =
+      Dedup.minhashCandidates(docs, "doc_id", "text", maxBucket = 100).collect().map { r =>
+        val (a, b) = (r.get(0).toString.toLong, r.get(1).toString.toLong)
+        (math.min(a, b), math.max(a, b), r.getDouble(2))
+      }.toSet
+    val byLong = pairs(hotBucketDocs)
+    val byString = pairs(hotBucketDocs.withColumn("doc_id", col("doc_id").cast("string")))
+    assert(byLong.size == nDup)
+    assert(byString == byLong, s"missing=${(byLong -- byString).take(5)} extra=${(byString -- byLong).take(5)}")
   }
 
   test("wide-simhash kernel equals the composed per-bit md5-vote column form") {

@@ -188,6 +188,31 @@ class KernelContractSpec extends graft.SparkSpec {
     assert(msgs.exists(_.contains("index 5")), msgs.mkString(" | "))
   }
 
+  test("minhash: a signature over MaxHashes throws; at MaxHashes est_jaccard still codegens") {
+    val docs = df1("text", Seq("the quick brown fox jumps over the lazy dog again",
+      "the quick brown fox jumps over the lazy dog again",
+      "the quick brown fox jumps over the lazy cat again"))
+      .withColumn("doc_id", monotonically_increasing_id())
+    val over = Dedup.MaxHashes + 1
+    intercept[IllegalArgumentException](
+      Dedup.minhashCandidates(docs, "doc_id", "text", bands = over, rowsPerBand = 1))
+    intercept[IllegalArgumentException](
+      Dedup.lshVerified(docs, "doc_id", "text", bands = 1, rowsPerBand = over))
+    // the cap's premise: the projection's stage compiles under Spark's
+    // hugeMethodLimit, so whole-stage codegen does not fall back
+    forcedDistributed {
+      val df = Dedup.minhashCandidates(docs, "doc_id", "text", bands = 1,
+        rowsPerBand = Dedup.MaxHashes)
+      assert(df.collect().length == 1)
+      val sizes = org.apache.spark.sql.execution.debug.codegenStringSeq(
+        df.queryExecution.executedPlan).filter(_._1.contains("est_jaccard"))
+        .map(_._3.maxMethodCodeSize)
+      val limit = spark.sessionState.conf.hugeMethodLimit
+      assert(sizes.nonEmpty && sizes.forall(s => s > 0 && s <= limit),
+        s"est_jaccard stage method sizes $sizes against a $limit-byte limit")
+    }
+  }
+
   test("LongSet: add reports each new key once (0 included); size survives growth") {
     val set = new LongSet(16)
     assert(set.add(0L) && !set.add(0L))
