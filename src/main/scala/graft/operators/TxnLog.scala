@@ -3,6 +3,8 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Minimal transaction-log table format: the ACID read path of a
@@ -79,14 +81,7 @@ object TxnLog {
     val target = checkpointFile(root, version)
     if (Files.exists(target)) return
     val (_, adds) = liveAdds(root, Some(version))
-    def statsJson(st: Map[String, (Long, Long)]): String =
-      if (st.isEmpty) ""
-      else st.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-        s""""$c":[$lo,$hi]"""
-      }.mkString(""","stats":{""", ",", "}")
-    val body = adds
-      .map(a => s"""{"op":"add","file":"${a.file}"${statsJson(a.stats)}}""")
-      .mkString("", "\n", "\n")
+    val body = adds.map(addLine).mkString("", "\n", "\n")
     val stage = logDir(root).resolve(
       f".ckstage_$version%08d_${java.util.UUID.randomUUID().toString.take(8)}")
     Files.write(stage, body.getBytes(StandardCharsets.UTF_8))
@@ -113,25 +108,48 @@ object TxnLog {
     } finally s.close()
   }
 
-  private def checkpointAdds(root: String, v: Long): Seq[AddFile] = {
-    val m = """\{"op":"add","file":"([^"]+)"(?:,"stats":\{([^}]*)\})?\}""".r
-    val stat = """"([^"]+)":\[(-?\d+),(-?\d+)\]""".r
-    val out = scala.collection.mutable.ArrayBuffer.empty[AddFile]
-    Files.readAllLines(checkpointFile(root, v)).forEach { line =>
-      if (line.nonEmpty) line match {
-        case m(f, st) =>
-          val stats = Option(st).map { body =>
-            stat.findAllMatchIn(body).map { g =>
-              g.group(1) -> (g.group(2).toLong, g.group(3).toLong)
-            }.toMap
-          }.getOrElse(Map.empty[String, (Long, Long)])
-          out += AddFile(f, stats)
-        case other =>
-          sys.error(s"unparseable checkpoint line at version $v: $other")
+  private def checkpointAdds(root: String, v: Long): Seq[AddFile] =
+    lines(checkpointFile(root, v)).map { line =>
+      action(line) match {
+        case Some(("add", a)) => a
+        case _ => sys.error(s"unparseable checkpoint line at version $v: $line")
       }
     }
-    out.toSeq
+
+  // The log is engine-authored with the fixed shapes `addLine` and
+  // `removeLine` write; it is parsed positionally, and anything else
+  // fails loudly.
+  private val ActionLine =
+    """\{"op":"(add|remove)","file":"([^"]+)"(?:,"stats":\{([^}]*)\})?\}""".r
+  private val StatEntry = """"([^"]+)":\[(-?\d+),(-?\d+)\]""".r
+
+  private def addLine(a: AddFile): String = {
+    val stats =
+      if (a.stats.isEmpty) ""
+      else a.stats.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
+        s""""$c":[$lo,$hi]"""
+      }.mkString(""","stats":{""", ",", "}")
+    s"""{"op":"add","file":"${a.file}"$stats}"""
   }
+
+  private def removeLine(file: String): String = s"""{"op":"remove","file":"$file"}"""
+
+  /** (op, file with its logged stats) of one log line, None when the
+    * line has no action shape. */
+  private def action(line: String): Option[(String, AddFile)] = line match {
+    case ActionLine(op, f, st) =>
+      val stats = Option(st).fold(Map.empty[String, (Long, Long)]) { body =>
+        StatEntry.findAllMatchIn(body).map { g =>
+          g.group(1) -> (g.group(2).toLong, g.group(3).toLong)
+        }.toMap
+      }
+      Some(op -> AddFile(f, stats))
+    case _ => None
+  }
+
+  /** The non-empty lines of a log or checkpoint file. */
+  private def lines(p: Path): Seq[String] =
+    Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty)
 
   /** `commit` with per-file column stats carried in the add actions. */
   def commitFiles(root: String, version: Long,
@@ -140,14 +158,7 @@ object TxnLog {
     val target = versionFile(root, version)
     require(!Files.exists(target),
       s"txn log version $version already committed at $target")
-    def statsJson(st: Map[String, (Long, Long)]): String =
-      if (st.isEmpty) ""
-      else st.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
-        s""""$c":[$lo,$hi]"""
-      }.mkString(""","stats":{""", ",", "}")
-    val body = (removes.map(f => s"""{"op":"remove","file":"$f"}""") ++
-      adds.map(a => s"""{"op":"add","file":"${a.file}"${statsJson(a.stats)}}"""))
-      .mkString("", "\n", "\n")
+    val body = (removes.map(removeLine) ++ adds.map(addLine)).mkString("", "\n", "\n")
     // unique stage name per attempt: two racers must not share a stage
     val stage = logDir(root).resolve(
       f".stage_$version%08d_${java.util.UUID.randomUUID().toString.take(8)}")
@@ -216,27 +227,14 @@ object TxnLog {
       case None => 0L
     }
     (ckptFrom to readTo).foreach { v =>
-      Files.readAllLines(versionFile(root, v)).forEach { line =>
-        if (line.nonEmpty) {
-          // the log is engine-authored with the fixed shapes above;
-          // parse positionally and fail loudly on anything else
-          val m = """\{"op":"(add|remove)","file":"([^"]+)"(?:,"stats":\{([^}]*)\})?\}""".r
-          val stat = """"([^"]+)":\[(-?\d+),(-?\d+)\]""".r
-          line match {
-            case m("add", f, st) =>
-              val stats = Option(st).map { body =>
-                stat.findAllMatchIn(body).map { g =>
-                  g.group(1) -> (g.group(2).toLong, g.group(3).toLong)
-                }.toMap
-              }.getOrElse(Map.empty[String, (Long, Long)])
-              require(live.put(f, AddFile(f, stats)).isEmpty,
-                s"double add of $f at version $v")
-            case m("remove", f, _) =>
-              require(live.remove(f).nonEmpty,
-                s"remove of untracked $f at version $v")
-            case other =>
-              sys.error(s"unparseable txn log line at version $v: $other")
-          }
+      lines(versionFile(root, v)).foreach { line =>
+        action(line) match {
+          case Some(("add", a)) =>
+            require(live.put(a.file, a).isEmpty, s"double add of ${a.file} at version $v")
+          case Some((_, a)) =>
+            require(live.remove(a.file).nonEmpty, s"remove of untracked ${a.file} at version $v")
+          case None =>
+            sys.error(s"unparseable txn log line at version $v: $line")
         }
       }
     }
@@ -254,6 +252,14 @@ object TxnLog {
     require(files.nonEmpty, s"snapshot of $root has no live files")
     graft.util.ParquetRead.read(spark, files: _*)
   }
+
+  /** The rows of the snapshot at `asOf` (latest when None), summed
+    * from the parquet footers of its live files on the driver
+    * ([[graft.util.ParquetRead.rowCount]]): the same files a snapshot
+    * scans, counted without a Spark job. A missing live file throws
+    * `FileNotFoundException`, as the snapshot read does. */
+  def rowCount(spark: SparkSession, root: String, asOf: Option[Long] = None): Long =
+    graft.util.ParquetRead.rowCount(spark, liveFiles(root, asOf)._2: _*)
 
   /** Stats-pruned snapshot read for a `col BETWEEN lo AND hi`
     * predicate: files whose logged [min,max] cannot intersect the
@@ -303,10 +309,7 @@ object TxnLog {
     val needed = (retainVersion to latest)
       .flatMap(v => liveFiles(root, Some(v))._2).toSet
     val everAdded = (0L to latest).flatMap { v =>
-      Files.readAllLines(versionFile(root, v)).toArray.toSeq.collect {
-        case l: String if l.contains("\"op\":\"add\"") =>
-          """"file":"([^"]+)"""".r.findFirstMatchIn(l).get.group(1)
-      }
+      lines(versionFile(root, v)).flatMap(action).collect { case ("add", a) => a.file }
     }.toSet
     (everAdded.map(f => Paths.get(root, f).toString) -- needed)
       .toSeq.sorted

@@ -526,16 +526,19 @@ object StreamQueries {
     // readers get snapshot isolation DURING ingest (any version prefix
     // is a consistent table), and (3) the stream's whole history is
     // time-travelable afterwards — REQUIREd here by replaying every
-    // version and checking strictly monotone growth. The oracle is the
-    // batch-twin hourly aggregate over the final snapshot: streaming
-    // ACID ingest must reproduce the batch result exactly.
+    // version and checking strictly monotone growth of its row count.
+    // Each count sums the row-group counts in the parquet footers of
+    // that version's live files, read on the driver (TxnLog.rowCount):
+    // the written files' own metadata, so the check starts no job. The
+    // oracle is the batch-twin hourly aggregate over the final
+    // snapshot: streaming ACID ingest must reproduce the batch result
+    // exactly.
     Q("q177_streaming_txn_ingest",
       (s, dir) => withStatePartitions(s, Seq(staged(s, dir))) {
         import graft.operators.TxnLog
         val (root, last) = txnIngested(s, dir)
         require(last >= 1, s"expected a multi-batch ingest, got ${last + 1} versions")
-        val counts = (0L to last).map(v =>
-          TxnLog.snapshot(s, root, Some(v)).count())
+        val counts = (0L to last).map(v => TxnLog.rowCount(s, root, Some(v)))
         require(counts.zip(counts.tail).forall { case (a, b) => a < b },
           s"snapshot growth not monotone across versions: $counts")
         TxnLog.snapshot(s, root, None)
@@ -558,9 +561,10 @@ object StreamQueries {
     // every small one. The job is IDEMPOTENT via the committed-version
     // gate (a re-run sees the optimize version published and no-ops —
     // the same discipline as a redelivered batch). REQUIREd: the live
-    // file count collapses to 1; the PRE-optimize version is still
-    // readable with identical cardinality (time travel across
-    // OPTIMIZE — compaction must never rewrite history); and
+    // file count collapses to 1; the PRE-optimize version still holds
+    // the optimized version's row count, both summed from their live
+    // files' footers as in q177 (time travel across OPTIMIZE —
+    // compaction must never rewrite history); and
     // vacuumable() names exactly the retracted small files once
     // retention passes the optimize commit. The oracle is the same
     // batch-twin hourly aggregate: OPTIMIZE must not change a single
@@ -582,8 +586,8 @@ object StreamQueries {
         val (_, liveNow) = TxnLog.liveAdds(root, Some(optV))
         require(liveNow.map(_.file) == Seq("opt0"),
           s"optimize must leave one live file, got $liveNow")
-        val preN = TxnLog.snapshot(s, root, Some(ingestLast)).count()
-        val postN = TxnLog.snapshot(s, root, Some(optV)).count()
+        val preN = TxnLog.rowCount(s, root, Some(ingestLast))
+        val postN = TxnLog.rowCount(s, root, Some(optV))
         require(preN == postN,
           s"optimize changed cardinality: $preN -> $postN")
         val vac = TxnLog.vacuumable(root, optV).map(_.split('/').last).toSet

@@ -1,49 +1,74 @@
 package graft
 
-import org.apache.spark.graftprobe.Bus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Pins the LocalExact hybrid queries' two paths equal: the
   * single-task sequential pass (default at test scale) must produce
   * the exact rows of the distributed plan (forced via the
-  * spark.graft.localExactMaxRows=0 override). The forced run must also
-  * launch more Spark jobs than the default one, so a case cannot pass
-  * because the override never reached the operator. Runs on the
-  * sf0.001 testdata when present.
+  * spark.graft.localExactMaxRows=0 override). So that a case cannot
+  * pass because the override never reached the operator, the two runs'
+  * executed plans must differ in the path itself: the kernel's one-task
+  * result scan appears in the default run's plans and in none of the
+  * forced run's. The plans are those of every action the run takes,
+  * the final collect and the construction-time counts and eager
+  * checkpoints alike, since a caller may consume the kernel's result
+  * behind a checkpoint of its own (q103's SemanticDedup). The forced
+  * run must also launch more Spark jobs than the default one. Runs on
+  * the sf0.001 testdata when present.
   */
-class LocalExactParitySpec extends SparkSpec {
+class LocalExactParitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val dir = "/root/testdata/sf0.001"
   private def available: Boolean = new java.io.File(dir).isDirectory
 
-  /** The rows of `name`'s result and the Spark jobs started while it
-    * was built and collected, counted after a listener-bus drain. */
-  private def rowsAndJobs(name: String): (Seq[String], Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+  /** One run of a query: its result rows, the Spark jobs started while
+    * it was built and collected, and the LocalExact kernel scans in the
+    * executed plans of its actions, both counted after a listener-bus
+    * drain. */
+  private case class Run(rows: Seq[String], jobs: Int, kernelScans: Int)
+
+  /** Scans of a LocalExact one-task result in `qe`'s executed plan.
+    * LocalExact lazily checkpoints the kernel's output, so a plan reads
+    * it through an RDD scan whose RDD was created by the
+    * `localCheckpoint` call in LocalExact.scala, which its call site
+    * (in the RDD's `toString`) names. */
+  private def kernelScans(qe: QueryExecution): Int =
+    collectWithSubqueries(qe.executedPlan) {
+      case s: RDDScanExec if s.rdd.toString.contains("LocalExact.scala") => s
+    }.size
+
+  private def run(name: String): Run = {
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val actions = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        scans.addAndGet(kernelScans(qe))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    Bus.drain(sc)
-    sc.addSparkListener(l)
+    spark.listenerManager.register(actions)
     try {
-      val rows = graft.queries.Registry.byName(name).run(spark, dir)
-        .collect().map(_.toString).toSeq
-      Bus.drain(sc)
-      (rows, jobs.get)
-    } finally sc.removeSparkListener(l)
+      // withJobs drains the listener bus, which also delivers `actions`
+      val (rows, jobs) = withJobs(graft.queries.Registry.byName(name).run(spark, dir)
+        .collect().map(_.toString).toSeq)
+      Run(rows, jobs, scans.get)
+    } finally spark.listenerManager.unregister(actions)
   }
 
-  private def bothPaths(name: String): Unit = {
+  /** `kernel = false` for a hybrid whose local path is not a LocalExact
+    * dispatch (no kernel scan to look for); the jobs check still holds. */
+  private def bothPaths(name: String, kernel: Boolean = true): Unit = {
     assume(available, s"$dir not present")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (local, localJobs) = rowsAndJobs(name)
-    val (dist, distJobs) = forcedDistributed(rowsAndJobs(name))
-    assert(local == dist, s"$name: local path != distributed path")
-    assert(local.nonEmpty, s"$name returned no rows")
-    assert(distJobs > localJobs, s"$name: the forced run launched $distJobs " +
-      s"jobs, the default run $localJobs — the override did not change the path")
+    val local = run(name)
+    val dist = forcedDistributed(run(name))
+    assert(local.rows == dist.rows, s"$name: local path != distributed path")
+    assert(local.rows.nonEmpty, s"$name returned no rows")
+    if (kernel) assert(local.kernelScans > 0 && dist.kernelScans == 0,
+      s"$name: the default run's plans scan ${local.kernelScans} kernel result(s), " +
+        s"the forced run's ${dist.kernelScans}")
+    assert(dist.jobs > local.jobs, s"$name: the forced run launched ${dist.jobs} " +
+      s"jobs, the default run ${local.jobs} — the override did not change the path")
   }
 
   test("q135 decision stump: local scan equals the DECIMAL(38) plan") {
@@ -167,7 +192,9 @@ class LocalExactParitySpec extends SparkSpec {
     bothPaths("q180_perceptron")
   }
 
+  // BpeTrain's local path is a driver-side merge loop over the collected
+  // vocabulary, not a LocalExact task, so only the jobs check applies
   test("q102 BPE train: the in-memory merge loop equals the per-rank Spark loop") {
-    bothPaths("q102_bpe_train")
+    bothPaths("q102_bpe_train", kernel = false)
   }
 }

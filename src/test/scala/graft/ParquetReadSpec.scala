@@ -6,8 +6,10 @@ import graft.util.{ParquetRead, Probe, RepoRoot, Tables}
 import java.nio.file.{Files, Paths}
 
 /** [[ParquetRead]] takes a parquet schema from one footer on the driver
-  * instead of Spark's inference job: the schema must equal the one
-  * inference gives, building a TxnLog snapshot must start no job, and a
+  * instead of Spark's inference job, and row counts from the footers'
+  * row groups instead of a count job: the schema must equal the one
+  * inference gives, a footer count must equal the snapshot's `count()`,
+  * building a TxnLog snapshot or counting it must start no job, and a
   * missing live file must fail where the read is built. */
 class ParquetReadSpec extends SparkSpec {
   import spark.implicits._
@@ -77,10 +79,51 @@ class ParquetReadSpec extends SparkSpec {
     assert(empty.getMessage.contains("no parquet data file"), empty.getMessage)
   }
 
-  test("building q174 and q179 on a warm session starts no Spark job") {
+  test("footer row counts equal snapshot count() at every version, with no job") {
+    val root = Files.createTempDirectory("graft_pqcount").toString
+    val rows = (0 until 60).map(i => (i.toLong, s"s$i"))
+    rows.take(40).toDF("k", "v").repartition(4).write.parquet(s"$root/d0")
+    rows.slice(40, 50).toDF("k", "v").repartition(2).write.parquet(s"$root/d1")
+    rows.take(0).toDF("k", "v").write.parquet(s"$root/e0")
+    rows.slice(50, 60).toDF("k", "v").repartition(3).write.parquet(s"$root/d2")
+    def names(d: String) = new java.io.File(s"$root/$d").list().toSeq
+    assert(names("d0").contains("_SUCCESS") && names("d0").exists(_.endsWith(".crc")) &&
+      names("d0").count(_.startsWith("part-")) >= 2,
+      s"fixture must hold a marker, checksums and several part files: ${names("d0")}")
+    val e0Parts = names("e0").filter(_.startsWith("part-"))
+    assert(e0Parts.nonEmpty, s"fixture must hold a zero-row part file: ${names("e0")}")
+    assert(ParquetRead.rowCount(spark, s"$root/e0/${e0Parts.head}") === 0L)
+    TxnLog.commit(root, 0, adds = Seq("d0"))
+    TxnLog.commit(root, 1, adds = Seq("d1", "e0"))
+    TxnLog.commit(root, 2, adds = Seq("d2"), removes = Seq("d0"))
+    TxnLog.commit(root, 3, adds = Nil, removes = Seq("e0"))
+    val versions = 0L to 3L
+    val scanned = versions.map(v => TxnLog.snapshot(spark, root, Some(v)).count())
+    assert(scanned === Seq(40L, 50L, 20L, 20L))
+    val (fromFooters, jobs) = withJobs(versions.map(v => TxnLog.rowCount(spark, root, Some(v))))
+    assert(fromFooters === scanned)
+    assert(jobs === 0, s"footer counts started $jobs job(s)")
+    assert(TxnLog.rowCount(spark, root) === 20L)
+    assert(ParquetRead.rowCount(spark, s"$root/d0", s"$root/d1") === 50L)
+  }
+
+  test("a footer count of a missing live file fails naming the path") {
+    val root = Files.createTempDirectory("graft_pqcount").toString
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$root/f0")
+    Seq((2L, "b")).toDF("k", "v").write.parquet(s"$root/f1")
+    TxnLog.commit(root, 0, adds = Seq("f0", "f1"))
+    deleteTree(s"$root/f1")
+    val missing = intercept[java.io.FileNotFoundException](TxnLog.rowCount(spark, root))
+    assert(missing.getMessage.contains(s"$root/f1"), missing.getMessage)
+  }
+
+  test("building q174, q177, q178 and q179 on a warm session starts no Spark job") {
     val probe = new Probe(spark)
-    try Seq("q174_time_travel", "q179_txn_merge").foreach { q =>
-      probe.measure(sf001, q) // warm: the txn layouts and q179's MERGE commit
+    try Seq("q174_time_travel", "q177_streaming_txn_ingest", "q178_optimize_vacuum",
+      "q179_txn_merge").foreach { q =>
+      // warm: the txn layouts, q177's ingest, q178's OPTIMIZE and
+      // q179's MERGE commits
+      probe.measure(sf001, q)
       val r = probe.measure(sf001, q)
       assert(r.error.isEmpty, s"$q failed: ${r.error}")
       assert(r.buildJobs === 0, s"$q started ${r.buildJobs} job(s) while its DataFrame was built")

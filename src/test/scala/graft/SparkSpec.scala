@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graftprobe.Bus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,5 +32,22 @@ trait SparkSpec extends AnyFunSuite {
   def forcedDistributed[T](body: => T): T = {
     spark.conf.set("spark.graft.localExactMaxRows", "0")
     try body finally spark.conf.unset("spark.graft.localExactMaxRows")
+  }
+
+  /** `body`'s value and the Spark jobs it started, counted after a
+    * listener-bus drain. */
+  def withJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val v = body
+      Bus.drain(sc)
+      (v, jobs.get)
+    } finally sc.removeSparkListener(l)
   }
 }
