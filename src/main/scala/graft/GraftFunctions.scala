@@ -43,8 +43,8 @@ object GraftFunctions {
     * (stay codegen'd in SQL text too); Column combinators register as
     * expression builders — the SQL face composes the SAME native
     * expression tree the DataFrame path builds, so nothing leaves
-    * whole-stage codegen. Only the two genuinely-JVM kernels
-    * (image_dhash's codec, cosine_sim's loop) are Scala UDFs. */
+    * whole-stage codegen. Only `image_dhash` (an image codec) is a
+    * Scala UDF. */
   def registerAll(spark: SparkSession): Unit = {
     // wrong-arity SQL calls must fail with a NAMED error, not an
     // IndexOutOfBounds from cs(1) deep inside a builder (round-10
@@ -126,44 +126,16 @@ object GraftFunctions {
     combinator("quantize_int8", 1)(cs => VectorFns.quantizeInt8(cs(0)))
     combinator("cosine_q8", 2)(cs => VectorFns.cosineQ8(cs(0), cs(1)))
     combinator("l2_sq_scaled", 2)(cs => VectorFns.l2SqScaled(cs(0), cs(1)))
-    spark.udf.register("haversine_km",
-      (lat1: Double, lon1: Double, lat2: Double, lon2: Double) => {
-        // same formula as GeoFns.haversineKm (cl_test1.py:29-35)
-        val sdlat = math.sin(math.toRadians(lat2 - lat1) / 2)
-        val sdlon = math.sin(math.toRadians(lon2 - lon1) / 2)
-        val a = sdlat * sdlat +
-          math.cos(math.toRadians(lat1)) * math.cos(math.toRadians(lat2)) * (sdlon * sdlon)
-        GeoFns.EarthRadiusKm * 2 * math.atan2(math.sqrt(a), math.sqrt(1 - a))
-      })
-    spark.udf.register("cosine_sim", (a: Seq[Float], b: Seq[Float]) => {
-      // same scaled-long encoding as VectorFns.cosine; HALF_UP
-      // away-from-zero like Spark's round() (math.round rounds toward
-      // +inf for negative halves — not the same)
-      def r(x: Double): Long =
-        (if (x >= 0) math.floor(x + 0.5) else math.ceil(x - 0.5)).toLong
-      var dot = 0L; var na = 0L; var nb = 0L; var i = 0
-      while (i < a.length) {
-        dot += r(a(i).toDouble * b(i).toDouble * 1e10)
-        na += r(a(i).toDouble * a(i).toDouble * 1e10)
-        nb += r(b(i).toDouble * b(i).toDouble * 1e10)
-        i += 1
-      }
-      if (na == 0L || nb == 0L) null.asInstanceOf[java.lang.Double]
-      else java.lang.Double.valueOf(dot.toDouble / math.sqrt(na.toDouble * nb.toDouble))
-    })
+    combinator("haversine_km", 4)(cs =>
+      GeoFns.haversineKm(cs(0), cs(1), cs(2), cs(3)))
+    combinator("cosine_sim", 2)(cs => VectorFns.cosine(cs(0), cs(1)))
+    combinator("redact_pii", 1)(cs => TextFns.redactPii(cs(0)))
     // perceptual image hash (ImageDedup.dhash — the q189/q190 kernel):
     // an image codec can't be a codegen expression, so the SQL face is
     // a UDF over the same function the DataFrame path runs
     spark.udf.register("image_dhash",
       (b: Array[Byte]) => graft.operators.ImageDedup.dhash(b)
         .map(java.lang.Long.valueOf).orNull)
-    // PII scrub (TextFns.redactPii composition) for SQL text; the
-    // DataFrame path stays the codegen'd regexp_replace chain
-    spark.udf.register("redact_pii", (s: String) =>
-      if (s == null) null
-      else s.replaceAll(TextFns.EmailRe, "<EMAIL>")
-        .replaceAll(TextFns.Ipv4Re, "<IP>")
-        .replaceAll(TextFns.PhoneRe, "<PHONE>"))
   }
 
   /** Register the driver test tables as temp views for SQL access

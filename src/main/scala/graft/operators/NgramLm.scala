@@ -20,7 +20,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   *     map-side combine collapses it to ≤ |alphabet|² rows inside the
   *     producing tasks — wordcount's shape. The model (bigram counts,
   *     context totals, vocabulary size) is tiny and broadcast.
-  *  2. SCORE — re-explode, broadcast-join the model, integer-sum per
+  *  2. SCORE — join the per-(doc, gram) counts the train pass
+  *     materialized with the broadcast model, integer-sum per
   *     document. One shuffle, keyed by doc.
   *
   * Every number is bit-reproducible by a SQL oracle: the smoothed
@@ -102,72 +103,12 @@ object NgramLm {
   }
 
   /** Per-document bigram rows: (idCol, g). Documents shorter than 2
-    * chars contribute nothing (and are re-attached by [[score]]). */
+    * chars contribute nothing (and are re-attached by [[selfScore]]). */
   private def bigrams(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     widen(docs).filter(length(col(textCol)) >= 2)
       .select(col(idCol),
         explode(expr(s"transform(sequence(1, length($textCol) - 1), " +
           s"i -> substring($textCol, i, 2))")).as("g"))
-
-  /** The trained model: one row per observed bigram with its count,
-    * its context (first char) total, and the vocabulary size V =
-    * number of distinct contexts. Bounded by |alphabet|² rows. */
-  def model(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val gc = bigrams(docs, idCol, textCol).groupBy(col("g"))
-      .agg(count(lit(1)).cast(LongType).as("cab"))
-    val ca = gc.groupBy(substring(col("g"), 1, 1).as("a"))
-      .agg(sum(col("cab")).as("ca"))
-    val v = ca.agg(count(lit(1)).cast(LongType).as("vsz"))
-    gc.join(ca, substring(col("g"), 1, 1) === col("a"))
-      .crossJoin(broadcast(v))
-      .select(col("g"), col("cab"), col("ca"), col("vsz"))
-  }
-
-  /** Score every document against the model: n_bigrams, the mean
-    * scaled smoothed probability, and the mean integer-floor-log2
-    * surprisal (higher = less typical). Zero-bigram docs surface with
-    * n_bigrams = 0 and null means — never dropped. */
-  def score(docs: DataFrame, idCol: String, textCol: String,
-            lm: DataFrame): DataFrame = {
-    val p = scaledP(col("cab"), col("ca") + col("vsz"))
-    val scored = bigrams(docs, idCol, textCol)
-      .join(broadcast(lm), "g")
-      .withColumn("p", p)
-      // integer floor-log2: p in [1, 1e12] ⊂ [2^0, 2^40)
-      .withColumn("s", lit(40L) - floorLog2(col("p")))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).cast(LongType).as("n_bigrams"),
-        // decimal sum: Σp with p ≤ 10¹² wraps a long sum at ~9.2M
-        // bigrams in ONE document under non-ANSI Spark while DuckDB
-        // promotes to HUGEINT — decimal-38 makes overflow impossible
-        // in both engines instead of silently divergent
-        sum(col("p").cast(DecimalType(38, 0))).as("sp"),
-        sum(col("s").cast(DecimalType(38, 0))).as("ss"))
-    // means by exact integer round-half-up — (2Σ+n) div (2n) — and,
-    // for the 6-decimal surprisal mean, exact integer microunits
-    // divided once as a double (q/10⁶ of exact integers is the same
-    // IEEE value in every engine; a float round(x, 6) is not)
-    finish(docs, idCol, scored)
-  }
-
-  /** Re-attach zero-bigram docs and derive the exact-integer means
-    * from (n_bigrams, sp, ss) — shared by [[score]] and
-    * [[selfScore]]. */
-  private def finish(docs: DataFrame, idCol: String,
-                     scored: DataFrame): DataFrame = {
-    val n = col("n_bigrams").cast(DecimalType(38, 0))
-    docs.select(col(idCol)).join(scored, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        when(col("n_bigrams").isNull, lit(null).cast(LongType))
-          .otherwise(intDiv(col("sp") * 2 + n, n * 2).cast(LongType))
-          .as("mean_p_scaled"),
-        when(col("n_bigrams").isNull, lit(null).cast(DoubleType))
-          .otherwise(
-            intDiv(col("ss") * lit(2000000L) + n, n * 2).cast(DoubleType)
-              / lit(1000000.0d))
-          .as("mean_surprisal"))
-  }
 
   /** Document-count threshold of the one-task paths of [[selfScore]]
     * and [[DsirSelect.select]]. */
@@ -176,11 +117,11 @@ object NgramLm {
   /** Self-scoring (train on `docs`, score `docs`) in ONE corpus pass:
     * the per-(doc, gram) count aggregate is materialized once
     * (localCheckpoint, distinct-(doc,gram)-sized) and feeds BOTH the
-    * model derivation and the scoring join — `score(docs, model(docs))`
-    * would run the corpus-sized explode twice, and exchange reuse does
-    * not fire across the differently-pruned branches (measured r8:
-    * 2.6 s → 1.5 s at sf0.1). Identical numbers: per-occurrence sums
-    * become cnt-weighted sums over the distinct-gram rows. */
+    * model derivation and the scoring join — separate train and score
+    * passes would run the corpus-sized explode twice, and exchange
+    * reuse does not fire across the differently-pruned branches
+    * (measured r8: 2.6 s → 1.5 s at sf0.1). Per-occurrence sums are
+    * cnt-weighted sums over the distinct-gram rows. */
   def selfScore(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // LocalExact hybrid: below the doc threshold, train + score run
     // in one sequential pass with the identical BigInt round-half-up
@@ -251,7 +192,23 @@ object NgramLm {
         // pathologically long doc; decimal-38 keeps it exact
         sum(col("cnt").cast(dec) * col("p").cast(dec)).as("sp"),
         sum(col("cnt").cast(dec) * col("s").cast(dec)).as("ss"))
-    finish(docs, idCol, scored)
+    // re-attach zero-bigram docs; means by exact integer round-half-up
+    // — (2Σ+n) div (2n) — and, for the 6-decimal surprisal mean, exact
+    // integer microunits divided once as a double (q/10⁶ of exact
+    // integers is the same IEEE value in every engine; a float
+    // round(x, 6) is not)
+    val n = col("n_bigrams").cast(dec)
+    docs.select(col(idCol)).join(scored, Seq(idCol), "left")
+      .select(col(idCol),
+        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
+        when(col("n_bigrams").isNull, lit(null).cast(LongType))
+          .otherwise(intDiv(col("sp") * 2 + n, n * 2).cast(LongType))
+          .as("mean_p_scaled"),
+        when(col("n_bigrams").isNull, lit(null).cast(DoubleType))
+          .otherwise(
+            intDiv(col("ss") * lit(2000000L) + n, n * 2).cast(DoubleType)
+              / lit(1000000.0d))
+          .as("mean_surprisal"))
   }
 }
 

@@ -112,7 +112,32 @@ object SimilaritySearch {
   /** The probe side alone, over a pre-built [[buildIndex]] frame. */
   def probeTopK(queries: DataFrame, indexed: DataFrame, centroids: DataFrame,
                 qId: String, qVec: String, cId: String, cVec: String,
-                k: Int, nProbe: Int): DataFrame = {
+                k: Int, nProbe: Int): DataFrame =
+    probe(queries, indexed, centroids, qId, qVec, Nil, col(qId) =!= col(cId),
+      cId, cVec, k, nProbe)
+
+  /** Corpus-scale hard-negative mining through the IVF cell probe —
+    * q194's 100-TB path (its registry form broadcasts a small anchor
+    * batch against the full corpus exactly; this probes only the
+    * nProbe nearest cells per anchor): per anchor, the top-k
+    * most-similar vectors with a DIFFERENT label. `indexed` must carry
+    * the label column (buildIndex preserves every corpus column). */
+  def probeHardNegatives(anchors: DataFrame, indexed: DataFrame,
+                         centroids: DataFrame, qId: String, qVec: String,
+                         qLbl: String, cId: String, cLbl: String,
+                         cVec: String, k: Int, nProbe: Int): DataFrame =
+    probe(anchors, indexed, centroids, qId, qVec, Seq(qLbl),
+      col(qLbl) =!= col(cLbl), cId, cVec, k, nProbe)
+
+  /** The one IVF probe: each query's nProbe nearest cells, the cell
+    * members that pass `keep`, and the per-query top-k by cosine.
+    * `carry` names query columns `keep` reads besides the id. `keep`
+    * applies BEFORE the bounded top-k buffers, so only (ids, cosine)
+    * rows ever reach them. */
+  private def probe(queries: DataFrame, indexed: DataFrame, centroids: DataFrame,
+                    qId: String, qVec: String, carry: Seq[String],
+                    keep: org.apache.spark.sql.Column, cId: String, cVec: String,
+                    k: Int, nProbe: Int): DataFrame = {
     val cent = centroids
       .withColumn("_centn", VectorFns.normSqScaled(col("cell_vec")))
     val qCells = queries
@@ -120,50 +145,16 @@ object SimilaritySearch {
       .crossJoin(broadcast(cent))
       .withColumn("_d",
         col("_qn") - lit(2L) * VectorFns.dotScaled(col(qVec), col("cell_vec")) + col("_centn"))
+    val qCols = (qId +: qVec +: carry :+ "_qn").map(col)
     // probe selection is itself a per-query top-nProbe over nCells
     // candidates — nCells ~ √N grows with the corpus, so it takes the
     // same bounded-buffer path (not a window)
     val probes = TopKPhysical.topK(
-      qCells.select(col(qId), col(qVec), col("_qn"), col("cell_id"), col("_d")),
+      qCells.select(qCols ++ Seq(col("cell_id"), col("_d")): _*),
       Seq(qId), Seq(("_d", true), ("cell_id", true)), nProbe, "_rn")
-      .select(col(qId), col(qVec), col("_qn"), col("cell_id").as("cell"))
+      .select(qCols :+ col("cell_id").as("cell"): _*)
     val cand = probes.join(indexed, "cell")
-      .filter(col(qId) =!= col(cId))
-      .withColumn("cosine", cosineFromParts(
-        VectorFns.dotScaled(col(qVec), col(cVec)), col("_qn"), col("_cn")))
-      .select(col(qId), col(cId), col("cosine"))
-    TopKPhysical.topK(cand, Seq(qId), Seq(("cosine", false), (cId, true)), k)
-      .select(col(qId), col(cId), col("cosine"), col("rnk"))
-  }
-
-  /** Corpus-scale hard-negative mining through the IVF cell probe —
-    * q194's 100-TB path (its registry form broadcasts a small anchor
-    * batch against the full corpus exactly; this probes only the
-    * nProbe nearest cells per anchor): per anchor, the top-k
-    * most-similar vectors with a DIFFERENT label. The label-mismatch
-    * filter applies BEFORE the bounded top-k buffers, so only
-    * (ids, cosine) rows ever reach them — same discipline as the
-    * exact form. `indexed` must carry the label column (buildIndex
-    * preserves every corpus column). */
-  def probeHardNegatives(anchors: DataFrame, indexed: DataFrame,
-                         centroids: DataFrame, qId: String, qVec: String,
-                         qLbl: String, cId: String, cLbl: String,
-                         cVec: String, k: Int, nProbe: Int): DataFrame = {
-    val cent = centroids
-      .withColumn("_centn", VectorFns.normSqScaled(col("cell_vec")))
-    val qCells = anchors
-      .withColumn("_qn", VectorFns.normSqScaled(col(qVec)))
-      .crossJoin(broadcast(cent))
-      .withColumn("_d",
-        col("_qn") - lit(2L) * VectorFns.dotScaled(col(qVec), col("cell_vec")) + col("_centn"))
-    val probes = TopKPhysical.topK(
-      qCells.select(col(qId), col(qVec), col(qLbl), col("_qn"),
-        col("cell_id"), col("_d")),
-      Seq(qId), Seq(("_d", true), ("cell_id", true)), nProbe, "_rn")
-      .select(col(qId), col(qVec), col(qLbl), col("_qn"),
-        col("cell_id").as("cell"))
-    val cand = probes.join(indexed, "cell")
-      .filter(col(qLbl) =!= col(cLbl))
+      .filter(keep)
       .withColumn("cosine", cosineFromParts(
         VectorFns.dotScaled(col(qVec), col(cVec)), col("_qn"), col("_cn")))
       .select(col(qId), col(cId), col("cosine"))

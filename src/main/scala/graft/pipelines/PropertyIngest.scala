@@ -1,7 +1,7 @@
 package graft.pipelines
 
 import graft.functions.{CleanFns, HashFns}
-import graft.operators.{CdcDelta, MergeUpsert}
+import graft.operators.MergeUpsert
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -10,8 +10,11 @@ import org.apache.spark.sql.types._
   * providers/base_provider.py → loader_v2.py) as ONE lazy Spark plan:
   *
   *   envelope JSON → explode(properties) → status filter → clean
-  *   price/area/beds/baths → content hash → CDC delta vs known state →
-  *   hash-gated MERGE + soft delete
+  *   price/area/beds/baths → content hash → hash-gated MERGE + soft
+  *   delete
+  *
+  * The CDC delta that gates the per-record detail fetch is
+  * [[graft.operators.CdcDelta]] (q199 calls it directly).
   *
   * The reference executes this row-at-a-time per site with staged
   * Postgres round-trips (stage insert → MERGE SQL → anti-join delete);
@@ -73,18 +76,6 @@ object PropertyIngest {
         HashFns.contentHash(col("title"), col("price"), col("currency"),
           col("sqm"), col("location.lat"), col("location.lng"), col("features"))
           .as("content_hash"))
-  }
-
-  /** Steps 2-4 of §3.1: which listed records need (re-)extraction —
-    * new keys, or source modified_gmt newer than known state + 60 s.
-    * This gates the expensive per-record detail fetch (S3), NOT the
-    * merge: the merge below always sees the full listing so the
-    * absent-row soft delete stays correct. */
-  def extractionDelta(listing: DataFrame, target: DataFrame): DataFrame = {
-    val known = target.select(col("client_id"), col("external_prop_id"),
-      col("updated_at"))
-    CdcDelta(listing, known,
-      Seq("client_id", "external_prop_id"), "modified_gmt", "updated_at", 60L)
   }
 
   /** Steps 8-10: hash-gated merge of the FULL cleaned batch + soft

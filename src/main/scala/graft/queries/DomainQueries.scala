@@ -14,6 +14,7 @@ import org.apache.spark.sql.types._
   * fuzzy matching, and the brand-config contrast calculator.
   */
 object DomainQueries {
+  import GeoQueries.havSql
 
   /** Fine-grained synthetic chains for cluster-unify: groups of ≤7
     * points 16.6 m apart (within the 25 m radius consecutively), groups
@@ -35,15 +36,6 @@ object DomainQueries {
       |      + CAST(c_custkey % 7 AS DOUBLE) * 0.00015 AS lat,
       |  -84.3 + CAST((CAST((c_custkey - (c_custkey % 7)) / 7 AS BIGINT) * 7 % 1000) AS DOUBLE) * 0.01 AS lon
       |FROM customer""".stripMargin
-
-  private def havSql(lat1: String, lon1: String, lat2: String, lon2: String): String =
-    s"""(6371.0 * (2 * atan2(
-       |  sqrt(sin(radians($lat2 - $lat1) / 2) * sin(radians($lat2 - $lat1) / 2)
-       |    + cos(radians($lat1)) * cos(radians($lat2))
-       |      * (sin(radians($lon2 - $lon1) / 2) * sin(radians($lon2 - $lon1) / 2))),
-       |  sqrt(1 - (sin(radians($lat2 - $lat1) / 2) * sin(radians($lat2 - $lat1) / 2)
-       |    + cos(radians($lat1)) * cos(radians($lat2))
-       |      * (sin(radians($lon2 - $lon1) / 2) * sin(radians($lon2 - $lon1) / 2)))))))""".stripMargin
 
   val all: Seq[Q] = Seq(
 

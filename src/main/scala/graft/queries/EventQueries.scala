@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.operators.{CdcDelta, Sessionize}
+import graft.streaming.EventStreams
 import graft.util.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -33,6 +34,15 @@ object EventQueries {
     }
   }
 
+  /** Tumbling hourly aggregate oracle — q15's, shared by the
+    * streaming q92/q94/q170/q177/q178, whose pipelines must reproduce
+    * the batch result exactly. */
+  private[queries] def hourlySql: String =
+    """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour_start, event_type,
+      |  COUNT(*) AS n,
+      |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+      |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin
+
   val all: Seq[Q] = Seq(
 
     // F14 JSON extraction + aggregation (JSONB ->> casts,
@@ -53,19 +63,12 @@ object EventQueries {
              |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
     // Event-time tumbling window aggregation (engine surface for
-    // ST1-ST4; streaming twin uses the same window() call under
-    // watermark — see graft.streaming.EventStreams).
+    // ST1-ST4): the batch branch of EventStreams.hourlyByType, which
+    // the streaming twins run under a watermark.
     Q("q15_hourly_windows",
-      (s, dir) => events(s, dir)
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-        .select(col("w.start").as("hour_start"), col("event_type"), col("n"), col("sum_value"))
+      (s, dir) => EventStreams.hourlyByType(events(s, dir))
         .orderBy(col("hour_start"), col("event_type")),
-      Some("""SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour_start, event_type,
-             |  COUNT(*) AS n,
-             |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-             |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin),
+      Some(hourlySql),
       headline = true),
 
     // Gap-based sessionization (session_window analog).
@@ -163,13 +166,7 @@ object EventQueries {
     // starts (DuckDB time_bucket's 2000-01-03 origin sits on the
     // 30-minute epoch grid, so the alignment is identical).
     Q("q82_sliding_windows",
-      (s, dir) => events(s, dir)
-        .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-        .select(col("w.start").as("win_start"), col("event_type"),
-          col("n"), col("sum_value"))
+      (s, dir) => EventStreams.slidingByType(events(s, dir))
         .orderBy(col("win_start"), col("event_type")),
       Some("""WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS t, event_type, value FROM events),
              |w AS (SELECT event_type, value,

@@ -35,7 +35,9 @@ object GeoQueries {
       |  -84.3 + CAST((s_suppkey * 7) % 1000 AS DOUBLE) * 0.0008 AS s_lon
       |FROM supplier""".stripMargin
 
-  private def havSql(lat1: String, lon1: String, lat2: String, lon2: String): String =
+  /** DuckDB haversine km, the GeoFns.haversineKm formula (shared by
+    * every geo oracle). */
+  private[queries] def havSql(lat1: String, lon1: String, lat2: String, lon2: String): String =
     s"""(6371.0 * (2 * atan2(
        |  sqrt(sin(radians($lat2 - $lat1) / 2) * sin(radians($lat2 - $lat1) / 2)
        |    + cos(radians($lat1)) * cos(radians($lat2))

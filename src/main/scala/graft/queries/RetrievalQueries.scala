@@ -21,21 +21,11 @@ import org.apache.spark.sql.types._
   * engines, partition counts, and reduction orders.
   */
 object RetrievalQueries {
+  import VectorQueries.{dotSql, normSql}
 
   /** Fixed keyword query for the BM25 ranking demo (high-df corpus
     * terms — exercises the Lucene-style always-positive idf). */
   private val BmTerms = Seq("join", "hash", "vector")
-
-  /** DuckDB scaled-long dot product / squared norm between FLOAT
-    * lists — the VectorQueries determinism convention, repeated here
-    * for q167's vector ranking leg. */
-  private def dotSqlR(a: String, b: String): String =
-    s"CAST(list_sum(list_transform(list_zip($a, $b), " +
-      s"s -> CAST(round(CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE) * 1e10, 0) AS BIGINT))) AS BIGINT)"
-
-  private def normSqlR(a: String): String =
-    s"CAST(list_sum(list_transform($a, " +
-      s"x -> CAST(round(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) * 1e10, 0) AS BIGINT))) AS BIGINT)"
 
   /** The prefix-filter family's (q133/q143/q165) doc relation: the
     * sorted distinct 3-shingle array `arr`, its size `sz`, and the
@@ -1015,9 +1005,9 @@ object RetrievalQueries {
              |q AS (SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
              |c AS (SELECT vec_id AS n_id, embedding AS cv FROM embeddings),
              |dots AS (SELECT q_id, n_id,
-             |    ${dotSqlR("qv", "cv")} AS dot,
-             |    ${normSqlR("qv")} AS na,
-             |    ${normSqlR("cv")} AS nb
+             |    ${dotSql("qv", "cv")} AS dot,
+             |    ${normSql("qv")} AS na,
+             |    ${normSql("cv")} AS nb
              |  FROM q, c WHERE q_id <> n_id),
              |cos AS (SELECT q_id, n_id,
              |    CASE WHEN na = 0 OR nb = 0 THEN NULL

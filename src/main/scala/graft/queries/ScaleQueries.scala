@@ -11,14 +11,7 @@ import org.apache.spark.sql.types._
   * groupBy — the point of the oracle).
   */
 object ScaleQueries {
-
-  private def dotSql(a: String, b: String): String =
-    s"CAST(list_sum(list_transform(list_zip($a, $b), " +
-      s"s -> CAST(round(CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE) * 1e10, 0) AS BIGINT))) AS BIGINT)"
-
-  private def normSql(a: String): String =
-    s"CAST(list_sum(list_transform($a, " +
-      s"x -> CAST(round(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) * 1e10, 0) AS BIGINT))) AS BIGINT)"
+  import VectorQueries.{dotSql, normSql}
 
   val all: Seq[Q] = Seq(
 

@@ -32,10 +32,6 @@ object StreamQueries {
   // temp dirs are removed by a JVM shutdown hook, so repeated sessions
   // don't leak /tmp directories.
   private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // RAM-backed + deleted at JVM exit (graft.util.Scratch) — staged
-  // stream sources are per-session transient
-  private def newStagingDir(prefix: String): String =
-    graft.util.Scratch.tempDir(prefix)
   private def sourceFingerprint(dir: String): String = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
@@ -43,44 +39,47 @@ object StreamQueries {
       .map(f => s"${f.getPath}:${f.length}:${f.lastModified}")
       .mkString("|").hashCode.toHexString
   }
-  private def staged(s: SparkSession, dir: String): String =
-    stagedDirs.computeIfAbsent(s"$dir@${sourceFingerprint(dir)}", { _ =>
-      val out = newStagingDir("graft_stream_src")
-      EventQueries.events(s, dir).repartition(8)
-        .write.mode("overwrite").parquet(out)
+  /** The staging dir of `tag` for `dir`'s events, filled by `write`
+    * on first use (RAM-backed + deleted at JVM exit, graft.util.Scratch). */
+  private def stage(s: SparkSession, dir: String, tag: String)(write: String => Unit): String =
+    stagedDirs.computeIfAbsent(s"$tag:$dir@${sourceFingerprint(dir)}", { _ =>
+      val out = graft.util.Scratch.tempDir(s"graft_stream_$tag")
+      write(out)
       out
     })
 
-  private def source(s: SparkSession, dir: String): DataFrame =
+  /** A file stream of events over staged dir `d`, `n` files per trigger. */
+  private def fileStream(s: SparkSession, d: String, n: Int): DataFrame =
     s.readStream.schema(EventStreams.eventSchema)
-      // 8 files → ONE admission poll: the bench-path drain pays a
-      // single plan + state-commit round (plus the final no-data
-      // round where a query opts in). Cross-batch state semantics are
-      // NOT exercised here by design — StreamingSpec pins them with
-      // 1-file triggers, and the 10× ScaleTrial streaming probe runs
-      // the multi-batch catch-up shape.
-      .option("maxFilesPerTrigger", "8")
-      .parquet(staged(s, dir))
+      .option("maxFilesPerTrigger", n.toString).parquet(d)
+
+  private def staged(s: SparkSession, dir: String): String =
+    stage(s, dir, "src") { out =>
+      EventQueries.events(s, dir).repartition(8)
+        .write.mode("overwrite").parquet(out)
+    }
+
+  // 8 files → ONE admission poll: the bench-path drain pays a single
+  // plan + state-commit round (plus the final no-data round where a
+  // query opts in). Cross-batch state semantics are NOT exercised here
+  // by design — StreamingSpec pins them with 1-file triggers, and the
+  // 10× ScaleTrial streaming probe runs the multi-batch catch-up shape.
+  private def source(s: SparkSession, dir: String): DataFrame =
+    fileStream(s, staged(s, dir), 8)
 
   // q93's source: the events staged TWICE (append of a second full
   // copy), so every row has a cross-micro-batch duplicate and the
   // dedup state genuinely halves the stream — a single-copy source
-  // would make dropDuplicates vacuously equal to the input
-  private def dupSource(s: SparkSession, dir: String): DataFrame = {
-    val out = stagedDirs.computeIfAbsent(s"dup:$dir@${sourceFingerprint(dir)}", { _ =>
-      val d = newStagingDir("graft_stream_dup")
+  // would make dropDuplicates vacuously equal to the input.
+  // 16 files → 2 polls: q93 IS the cross-micro-batch dedupe demo
+  // (ST3) — its duplicates must arrive in a LATER batch than the
+  // originals, so this source keeps a genuine 2-batch drain
+  private def dupSource(s: SparkSession, dir: String): DataFrame =
+    fileStream(s, stage(s, dir, "dup") { out =>
       val ev = EventQueries.events(s, dir).repartition(8)
-      ev.write.mode("overwrite").parquet(d)
-      ev.write.mode("append").parquet(d)
-      d
-    })
-    s.readStream.schema(EventStreams.eventSchema)
-      // 16 files → 2 polls: q93 IS the cross-micro-batch dedupe demo
-      // (ST3) — its duplicates must arrive in a LATER batch than the
-      // originals, so this source keeps a genuine 2-batch drain
-      .option("maxFilesPerTrigger", "8")
-      .parquet(out)
-  }
+      ev.write.mode("overwrite").parquet(out)
+      ev.write.mode("append").parquet(out)
+    }, 8)
 
   private def uniq(prefix: String): String =
     prefix + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
@@ -139,14 +138,24 @@ object StreamQueries {
     EventStreams.withConfs(s, Seq("spark.sql.shuffle.partitions" -> n.toString))(body)
   }
 
-  /** Tumbling hourly aggregate oracle — q92 (stream) and q94
-    * (foreachBatch partials) intentionally share q15's batch-twin SQL:
-    * the streaming pipelines must reproduce the batch result exactly. */
-  private def hourlySql: String =
-    """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour_start, event_type,
-      |  COUNT(*) AS n,
-      |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin
+  import EventQueries.hourlySql
+
+  /** One micro-batch's partial of the hourly aggregate (q94/q170's
+    * sink rows): counts and exact DECIMAL(18,2) sums per hour and type. */
+  private def hourlyPartial(batch: DataFrame): DataFrame =
+    batch.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast(DecimalType(18, 2))).as("sum_dec"))
+      .select(col("w.start").as("hour_start"), col("event_type"),
+        col("n"), col("sum_dec"))
+
+  /** The read-back combine of [[hourlyPartial]] rows: counts add, the
+    * decimal sums cast to double only once, here. */
+  private def hourlyCombine(partials: DataFrame): DataFrame =
+    partials.groupBy(col("hour_start"), col("event_type"))
+      .agg(sum(col("n")).as("n"),
+        sum(col("sum_dec")).cast(DoubleType).as("sum_value"))
+      .orderBy(col("hour_start"), col("event_type"))
 
   val all: Seq[Q] = Seq(
 
@@ -201,19 +210,10 @@ object StreamQueries {
         val sink = graft.util.Scratch.tempDir("graft_q94_sink")
         EventStreams.drain(s, source(s, dir).writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-              .agg(count(lit(1)).as("n"),
-                sum(col("value").cast(DecimalType(18, 2))).as("sum_dec"))
-              .select(col("w.start").as("hour_start"), col("event_type"),
-                col("n"), col("sum_dec"))
-              .write.mode("append").parquet(sink)
+            hourlyPartial(batch).write.mode("append").parquet(sink)
             ()
           }, "graft_q94_ckpt")
-        graft.util.ParquetRead.read(s, sink)
-          .groupBy(col("hour_start"), col("event_type"))
-          .agg(sum(col("n")).as("n"),
-            sum(col("sum_dec")).cast(DoubleType).as("sum_value"))
-          .orderBy(col("hour_start"), col("event_type"))
+        hourlyCombine(graft.util.ParquetRead.read(s, sink))
       },
       Some(hourlySql),
       streaming = true),
@@ -241,12 +241,7 @@ object StreamQueries {
           val target = new java.io.File(sink, s"b=$bid")
           if (!target.exists()) { // idempotence gate: published = done
             val tmp = new java.io.File(sink, s".stage_b$bid")
-            batch.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-              .agg(count(lit(1)).as("n"),
-                sum(col("value").cast(DecimalType(18, 2))).as("sum_dec"))
-              .select(col("w.start").as("hour_start"), col("event_type"),
-                col("n"), col("sum_dec"))
-              .write.mode("overwrite").parquet(tmp.toString)
+            hourlyPartial(batch).write.mode("overwrite").parquet(tmp.toString)
             // atomic publish: rename IS the transaction commit
             require(tmp.renameTo(target), s"publish failed for batch $bid")
           }
@@ -262,11 +257,7 @@ object StreamQueries {
         // (in-flight `.stage_*` dirs are dot-hidden from listings) —
         // and a glob here would trip FileStreamSink.hasMetadata's
         // literal getFileStatus on the un-expanded pattern
-        s.read.parquet(sink)
-          .groupBy(col("hour_start"), col("event_type"))
-          .agg(sum(col("n")).as("n"),
-            sum(col("sum_dec")).cast(DoubleType).as("sum_value"))
-          .orderBy(col("hour_start"), col("event_type"))
+        hourlyCombine(s.read.parquet(sink))
       },
       Some(hourlySql),
       streaming = true),
@@ -291,19 +282,14 @@ object StreamQueries {
         // StreamingSpec's 1-file triggers. Staging the type subsets
         // once per JVM beats filtering the full event stream inside
         // every micro-batch of every bench sweep.
-        def sideDir(tpe: String): String = stagedDirs.computeIfAbsent(
-          s"$tpe:$dir@${sourceFingerprint(dir)}", { _ =>
-            val out = newStagingDir(s"graft_stream_$tpe")
-            EventQueries.events(s, dir)
-              .filter(col("event_type") === tpe).repartition(4)
-              .write.mode("overwrite").parquet(out)
-            out
-          })
-        def side(d: String) =
-          s.readStream.schema(EventStreams.eventSchema)
-            .option("maxFilesPerTrigger", "4").parquet(d)
+        def sideDir(tpe: String): String = stage(s, dir, tpe) { out =>
+          EventQueries.events(s, dir)
+            .filter(col("event_type") === tpe).repartition(4)
+            .write.mode("overwrite").parquet(out)
+        }
         val (viewDir, purchaseDir) = (sideDir("view"), sideDir("purchase"))
-        val joined = EventStreams.intervalJoin(side(viewDir), side(purchaseDir),
+        val joined = EventStreams.intervalJoin(
+          fileStream(s, viewDir, 4), fileStream(s, purchaseDir, 4),
           horizon = "6 hours", watermark = "3650 days")
         // sized from the two subset dirs actually streamed, not the
         // full-events staging superset
@@ -348,50 +334,43 @@ object StreamQueries {
     // set is split-invariant and equals the batch LEFT JOIN oracle.
     Q("q168_stream_outer_join",
       (s, dir) => {
-        def orderedDir(tpe: String): String = stagedDirs.computeIfAbsent(
-          s"ord_$tpe:$dir@${sourceFingerprint(dir)}", { _ =>
-            val out = newStagingDir(s"graft_stream_ord_$tpe")
-            EventQueries.events(s, dir)
-              .filter(col("event_type") === tpe)
-              .repartitionByRange(4, col("ts"))
-              .write.mode("overwrite").parquet(out)
-            val f0 = new java.io.File(out).listFiles()
-              .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-            // heartbeat: one far-future sentinel row in its own file
-            import s.implicits._
-            Seq((-1L, java.sql.Timestamp.valueOf("2035-01-01 00:00:00"),
-                -1L, tpe, 0.0d, ""))
-              .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-              .coalesce(1).write.mode("append").parquet(out)
-            // pin replay order: the file source processes oldest
-            // modTime first — range files ascending (part index =
-            // range order), heartbeat strictly last
-            val all = new java.io.File(out).listFiles()
-              .filter(_.getName.endsWith(".parquet"))
-            val base = System.currentTimeMillis() - 3600000L
-            all.filter(f => f0(f.getName)).sortBy(_.getName).zipWithIndex
-              .foreach { case (f, i) => f.setLastModified(base + i * 2000L) }
-            all.filterNot(f => f0(f.getName))
-              .foreach(_.setLastModified(base + 600000L))
-            out
-          })
-        def side(d: String) =
-          s.readStream.schema(EventStreams.eventSchema)
-            // 4 range files + heartbeat → ONE data batch + the
-            // watermark-flush batch (r15; was 2 data batches + flush):
-            // the heartbeat's watermark takes effect only in the NEXT
-            // batch, so the flush batch still evicts outer-join state
-            // COMMITTED BY AN EARLIER BATCH and emits the unmatched
-            // views — the cross-batch eviction demonstration — while
-            // the drain sheds one full plan+addBatch+state-commit
-            // round (~0.9 s: the state commit floor is ~0.7 s/batch
-            // regardless of rows, streamprofile r15). The long
-            // 1-file-per-trigger drain with PROGRESSIVE mid-drain
-            // eviction stays pinned by StreamingSpec.
-            .option("maxFilesPerTrigger", "5")
-            .parquet(d)
+        def orderedDir(tpe: String): String = stage(s, dir, s"ord_$tpe") { out =>
+          EventQueries.events(s, dir)
+            .filter(col("event_type") === tpe)
+            .repartitionByRange(4, col("ts"))
+            .write.mode("overwrite").parquet(out)
+          val f0 = new java.io.File(out).listFiles()
+            .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
+          // heartbeat: one far-future sentinel row in its own file
+          import s.implicits._
+          Seq((-1L, java.sql.Timestamp.valueOf("2035-01-01 00:00:00"),
+              -1L, tpe, 0.0d, ""))
+            .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+            .coalesce(1).write.mode("append").parquet(out)
+          // pin replay order: the file source processes oldest
+          // modTime first — range files ascending (part index =
+          // range order), heartbeat strictly last
+          val all = new java.io.File(out).listFiles()
+            .filter(_.getName.endsWith(".parquet"))
+          val base = System.currentTimeMillis() - 3600000L
+          all.filter(f => f0(f.getName)).sortBy(_.getName).zipWithIndex
+            .foreach { case (f, i) => f.setLastModified(base + i * 2000L) }
+          all.filterNot(f => f0(f.getName))
+            .foreach(_.setLastModified(base + 600000L))
+        }
+        // 4 range files + heartbeat → ONE data batch + the
+        // watermark-flush batch (r15; was 2 data batches + flush): the
+        // heartbeat's watermark takes effect only in the NEXT batch, so
+        // the flush batch still evicts outer-join state COMMITTED BY AN
+        // EARLIER BATCH and emits the unmatched views — the cross-batch
+        // eviction demonstration — while the drain sheds one full
+        // plan+addBatch+state-commit round (~0.9 s: the state commit
+        // floor is ~0.7 s/batch regardless of rows, streamprofile r15).
+        // The long 1-file-per-trigger drain with PROGRESSIVE mid-drain
+        // eviction stays pinned by StreamingSpec.
         val (viewDir, purchaseDir) = (orderedDir("view"), orderedDir("purchase"))
-        val joined = EventStreams.intervalJoin(side(viewDir), side(purchaseDir),
+        val joined = EventStreams.intervalJoin(
+          fileStream(s, viewDir, 5), fileStream(s, purchaseDir, 5),
           horizon = "6 hours", watermark = "60 seconds", joinType = "left_outer")
         withStatePartitions(s, Seq(viewDir, purchaseDir)) {
           EventStreams.runAvailableNow(s, joined, uniq("q168"),
@@ -541,13 +520,7 @@ object StreamQueries {
         val counts = (0L to last).map(v => TxnLog.rowCount(s, root, Some(v)))
         require(counts.zip(counts.tail).forall { case (a, b) => a < b },
           s"snapshot growth not monotone across versions: $counts")
-        TxnLog.snapshot(s, root, None)
-          .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast(DecimalType(18, 2)))
-              .cast(DoubleType).as("sum_value"))
-          .select(col("w.start").as("hour_start"), col("event_type"),
-            col("n"), col("sum_value"))
+        EventStreams.hourlyByType(TxnLog.snapshot(s, root, None))
           .orderBy(col("hour_start"), col("event_type"))
       },
       Some(hourlySql),
@@ -593,13 +566,7 @@ object StreamQueries {
         val vac = TxnLog.vacuumable(root, optV).map(_.split('/').last).toSet
         require(vac == (0L to ingestLast).map(v => s"b$v").toSet,
           s"vacuum list wrong: $vac")
-        TxnLog.snapshot(s, root, Some(optV))
-          .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast(DecimalType(18, 2)))
-              .cast(DoubleType).as("sum_value"))
-          .select(col("w.start").as("hour_start"), col("event_type"),
-            col("n"), col("sum_value"))
+        EventStreams.hourlyByType(TxnLog.snapshot(s, root, Some(optV)))
           .orderBy(col("hour_start"), col("event_type"))
       },
       Some(hourlySql),
@@ -632,7 +599,7 @@ object StreamQueries {
         val dataBatches = q.recentProgress.count(_.numInputRows > 0)
         require(dataBatches >= 2,
           s"expected file-granularity micro-batches (>= 2), got $dataBatches")
-        s.table(name)
+        EventStreams.memorySinkResult(s, name)
           .orderBy(col("src_file"), col("record_index"))
       },
       Some(s"SELECT src_file, record_index, warc_type, content_length, payload_md5 FROM '${graft.util.RepoRoot.fixture("tiny_warc_expected.parquet")}' ORDER BY src_file, record_index"),
@@ -662,9 +629,7 @@ object StreamQueries {
         // q177's WHOLE POINT is one log version per micro-batch with
         // monotone snapshot growth — it keeps a genuine multi-batch
         // drain (4 files/poll) regardless of the bench-path source()
-        EventStreams.drain(s, s.readStream.schema(EventStreams.eventSchema)
-          .option("maxFilesPerTrigger", "4")
-          .parquet(staged(s, dir))
+        EventStreams.drain(s, fileStream(s, staged(s, dir), 4)
           .writeStream
           .foreachBatch { (batch: DataFrame, bid: Long) =>
             publish(batch, bid)

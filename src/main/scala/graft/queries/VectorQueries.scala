@@ -12,12 +12,13 @@ import org.apache.spark.sql.functions._
   */
 object VectorQueries {
 
-  /** DuckDB scaled-long dot product between two FLOAT lists. */
-  private def dotSql(a: String, b: String): String =
+  /** DuckDB scaled-long dot product between two FLOAT lists (shared by
+    * every vector oracle). */
+  private[queries] def dotSql(a: String, b: String): String =
     s"CAST(list_sum(list_transform(list_zip($a, $b), " +
       s"s -> CAST(round(CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE) * 1e10, 0) AS BIGINT))) AS BIGINT)"
 
-  private def normSql(a: String): String =
+  private[queries] def normSql(a: String): String =
     s"CAST(list_sum(list_transform($a, " +
       s"x -> CAST(round(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) * 1e10, 0) AS BIGINT))) AS BIGINT)"
 

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Native OSM PBF scan — no GDAL, no protobuf library: the format is
@@ -194,8 +194,8 @@ object OsmPbf {
 
   private val MemberTypes = Array("node", "way", "relation")
 
-  /** Fetch + decompress + decode one block — the per-task unit shared
-    * by the RDD path ([[read]]) and the DataSource V2 reader. */
+  /** Fetch + decompress + decode one block — the per-task unit of the
+    * `osmpbf` DataSource V2 reader. */
   def decodeEntities(conf: org.apache.hadoop.conf.Configuration,
                      ref: BlockRef): Iterator[OsmEntity] =
     decodePrimitiveBlock(decompressBlob(readRange(conf, ref),
@@ -315,36 +315,13 @@ object OsmPbf {
     }
   }
 
-  /** Distributed scan: one task per slice of the block index. */
-  def read(spark: SparkSession, path: String,
-           numSlices: Int = 0): Dataset[OsmEntity] = {
-    import spark.implicits._
-    val blocks = blockIndex(spark, path)
-    val slices = if (numSlices > 0) numSlices
-      else math.min(math.max(1, blocks.size), spark.sparkContext.defaultParallelism)
-    // Hadoop Configuration is not Serializable (and Spark's wrapper is
-    // private[spark]); ship the entries and rebuild per task
-    val confEntries = {
-      import scala.jdk.CollectionConverters._
-      spark.sparkContext.hadoopConfiguration.iterator().asScala
-        .map(e => e.getKey -> e.getValue).toArray
-    }
-    spark.sparkContext.parallelize(blocks, slices)
-      .mapPartitions { it =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confEntries.foreach { case (k, v) => conf.set(k, v) }
-        it.flatMap(ref => decodeEntities(conf, ref))
-      }
-      .toDS()
-  }
-
   /** The reference's two GDAL layers from the raw entity scan:
     * `points` = tagged nodes, `multipolygons` = relations tagged
     * type=multipolygon — unioned with a `layer` tag column (S1/U1,
     * process_pois.py:361-378). Centroid normalization happens
     * downstream exactly as the reference does it. */
   def layeredScan(spark: SparkSession, path: String): DataFrame = {
-    val all = read(spark, path).toDF()
+    val all = spark.read.format("osmpbf").load(path)
     val points = all.filter(col("layer") === "node" && size(col("tags")) > 0)
       .select(lit("points").as("layer"), col("id"), col("lat"), col("lon"),
         col("tags"))

@@ -17,9 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * .load(path)` — block planning goes through the connector API (one
   * InputPartition per slice of the blob index, so Spark's scheduler
   * owns locality/retries and the scan composes with Catalyst like any
-  * built-in source), while the wire decode is the same code the
-  * function API uses. Registered under the `osmpbf` short name via
-  * META-INF/services. */
+  * built-in source), while the wire decode is [[OsmPbf.decodeEntities]].
+  * Registered under the `osmpbf` short name via META-INF/services. */
 class OsmPbfDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "osmpbf"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =

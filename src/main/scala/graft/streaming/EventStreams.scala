@@ -220,8 +220,18 @@ object EventStreams {
     withConfs(spark, Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> noDataFlush.toString)) {
       drain(spark, streamed.writeStream
         .format("memory").queryName(queryName).outputMode(outputMode), s"ckpt_$queryName")
-      spark.table(queryName)
+      memorySinkResult(spark, queryName)
     }
+  }
+
+  /** The rows of the finished memory-sink query `queryName`. The sink
+    * registers them as a temp view; the DataFrame is resolved before
+    * the view is dropped, so it keeps the rows and the session catalog
+    * does not keep one view (and its rows) per drain. */
+  private[graft] def memorySinkResult(spark: SparkSession, queryName: String): DataFrame = {
+    val rows = spark.table(queryName)
+    spark.catalog.dropTempView(queryName)
+    rows
   }
 
   /** What every graft stream starts under, for its cloned session:

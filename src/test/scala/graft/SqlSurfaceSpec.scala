@@ -20,6 +20,47 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(math.abs(r.getDouble(3) - 1.0) < 1e-9)
     assert(r.getLong(4) == 110000000000L) // (1*3 + 2*4) * 1e10
     assert(r.getSeq[Long](5).length == 2) // "a b c", "b c d"
+
+    // the SQL names compose the DataFrame kernels: equal on table rows
+    import graft.functions.{GeoFns, TextFns, VectorFns}
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    def same(viaSql: String, viaDf: org.apache.spark.sql.DataFrame): Unit = {
+      val got = spark.sql(viaSql).collect().toSeq
+      assert(got.nonEmpty)
+      assert(got == viaDf.collect().toSeq, viaSql)
+    }
+    Seq[(Int, Option[Double], Double, Double, Double)](
+        (1, Some(9.9281), -84.0907, 10.0162, -84.2117), (2, Some(0.0), 0.0, 0.0, 0.0),
+        (3, Some(-33.45), -70.66, 41.4, 2.1), (4, Some(89.9), 180.0, -89.9, -180.0),
+        (5, None, 1.0, 2.0, 3.0))
+      .toDF("k", "lat1", "lon1", "lat2", "lon2").createOrReplaceTempView("geo_rows")
+    same("SELECT k, haversine_km(lat1, lon1, lat2, lon2) FROM geo_rows ORDER BY k",
+      spark.table("geo_rows").orderBy("k").select(col("k"), GeoFns.haversineKm(
+        col("lat1"), col("lon1"), col("lat2"), col("lon2"))))
+    graft.util.Tables(spark, sf001, "embeddings").select(col("vec_id"), col("embedding"))
+      .union(Seq[(Long, Seq[Float])]((-1L, Seq(0f, 0f)), (-2L, Seq(-0.5f, 0.25f)),
+        (-3L, Seq(0.5f, -0.25f))).toDF("vec_id", "embedding"))
+      .createOrReplaceTempView("vec_rows")
+    same("""SELECT a.vec_id, cosine_sim(a.embedding, b.embedding) FROM vec_rows a
+           |JOIN vec_rows b ON b.vec_id = a.vec_id - 1 ORDER BY a.vec_id""".stripMargin,
+      spark.table("vec_rows").as("a")
+        .join(spark.table("vec_rows").as("b"), col("b.vec_id") === col("a.vec_id") - 1)
+        .orderBy(col("a.vec_id"))
+        .select(col("a.vec_id"), VectorFns.cosine(col("a.embedding"), col("b.embedding"))))
+    graft.util.Tables(spark, sf001, "documents").select(col("doc_id"), col("text"))
+      .union(Seq[(Long, String)]((-1L, "mail a.b@c.org from 10.0.0.1, call 555-1234"),
+        (-2L, null), (-3L, "")).toDF("doc_id", "text"))
+      .createOrReplaceTempView("text_rows")
+    same("SELECT doc_id, redact_pii(text) FROM text_rows ORDER BY doc_id",
+      spark.table("text_rows").orderBy("doc_id")
+        .select(col("doc_id"), TextFns.redactPii(col("text"))))
+  }
+
+  test("cosine_sim of a NULL vector is NULL") {
+    GraftFunctions.registerAll(spark)
+    assert(spark.sql("SELECT cosine_sim(CAST(NULL AS ARRAY<FLOAT>), array(1.0F))")
+      .head().isNullAt(0))
   }
 
   test("image_dhash and redact_pii are callable from SQL text") {

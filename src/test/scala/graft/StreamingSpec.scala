@@ -159,6 +159,20 @@ class StreamingSpec extends SparkSpec {
     assert(viaRocks == viaHdfs)
   }
 
+  test("q92 drains leave no memory-sink view behind and equal the batch twin") {
+    val q92 = graft.queries.Registry.byName("q92_streaming_drain")
+    val batch = graft.queries.Registry.byName("q15_hourly_windows")
+      .run(spark, sf001).collect().toSeq
+    val first = q92.run(spark, sf001).collect().toSeq
+    val second = q92.run(spark, sf001).collect().toSeq
+    val views = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("q92_"))
+    assert(views.isEmpty, s"memory-sink views left: ${views.mkString(", ")}")
+    assert(batch.nonEmpty)
+    assert(first == batch)
+    assert(second == batch)
+  }
+
   test("streaming top-k state survives a forced many-batch drain (q162 twin)") {
     // q162's registry drain replays a handful of micro-batches; force
     // a one-file-per-trigger drain (8 files → 8 batches) so the
