@@ -20,26 +20,24 @@ object VectorKernels {
     } else math.rint(x).toLong
   }
 
-  /** Σ round(a_i·b_i·1e10) over float arrays, exact long accumulation. */
-  def dotScaled(a: ArrayData, b: ArrayData): Long = {
-    val n = math.min(a.numElements(), b.numElements())
-    var s = 0L
-    var i = 0
-    while (i < n) {
-      s += halfUpLong(a.getFloat(i).toDouble * b.getFloat(i).toDouble * 1e10)
-      i += 1
-    }
-    s
+  /** The common length of two vectors; a dot product of vectors of
+    * different dimensions is an error, as in pgvector. */
+  private def sameLength(a: ArrayData, b: ArrayData): Int = {
+    val n = a.numElements()
+    if (n != b.numElements())
+      throw new IllegalArgumentException(
+        s"different vector dimensions $n and ${b.numElements()}")
+    n
   }
 
-  /** [[dotScaled]] with per-side element width (float corpus ×
-    * double centroids — k-means-trained centroids are exact
-    * 6-decimal DOUBLES that float narrowing would corrupt). The
-    * `aDouble`/`bDouble` flags are codegen-time constants, so the JIT
-    * sees a branch-free loop. */
+  /** Σ round(a_i·b_i·1e10), exact long accumulation, with per-side
+    * element width (float corpus × double centroids — k-means-trained
+    * centroids are exact 6-decimal DOUBLES that float narrowing would
+    * corrupt). The `aDouble`/`bDouble` flags are codegen-time
+    * constants, so the JIT sees a branch-free loop. */
   def dotScaledW(a: ArrayData, aDouble: Boolean,
                  b: ArrayData, bDouble: Boolean): Long = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = sameLength(a, b)
     var s = 0L
     var i = 0
     while (i < n) {
@@ -54,7 +52,7 @@ object VectorKernels {
   /** Σ a_i·b_i over long arrays — exact integer dot for quantized
     * (int8-range) embeddings. */
   def dotLong(a: ArrayData, b: ArrayData): Long = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = sameLength(a, b)
     var s = 0L
     var i = 0
     while (i < n) {
@@ -95,7 +93,8 @@ object VectorKernels {
   * this is a single static call into a primitive loop, ~100× faster,
   * with identical values (same IEEE products, same HALF_UP rounding,
   * same exact long accumulation). Arrays must be non-null element-wise
-  * (embedding columns are). */
+  * (embedding columns are) and of one length: a dimension mismatch
+  * throws. */
 object DotScaledExpr {
   /** Analysis-time gate shared by the float-array kernels. */
   private[functions] def requireFloatArrays(

@@ -87,6 +87,42 @@ object AllPairsLocal {
     out
   }
 
+  /** Identical-set groups (see [[groupBySet]]), one representative
+    * doc each, and an inverted index from each shingle to the groups
+    * whose `indexed(rep)` array holds it, ascending group index. The
+    * indexed array is the prefix (q133/q165) or the full set (q143). */
+  private final class GroupIndex(docs: Array[Doc], indexed: Doc => Array[Int]) {
+    val groups: Array[Array[Int]] = groupBySet(docs)
+    val reps: Array[Doc] = groups.map(g => docs(g(0)))
+    val postings: Array[Array[Int]] = {
+      val nShingles = reps.iterator.map(d =>
+        if (d.sorted.isEmpty) 0 else d.sorted(d.sorted.length - 1) + 1)
+        .foldLeft(0)(math.max)
+      val counts = new Array[Int](nShingles)
+      reps.foreach(indexed(_).foreach(w => counts(w) += 1))
+      val index = counts.map(n => if (n == 0) Array.emptyIntArray else new Array[Int](n))
+      java.util.Arrays.fill(counts, 0)
+      var gi = 0
+      while (gi < reps.length) {
+        indexed(reps(gi)).foreach { w => index(w)(counts(w)) = gi; counts(w) += 1 }
+        gi += 1
+      }
+      index
+    }
+  }
+
+  /** |A ∩ B| of two ascending interned sets (two-pointer walk). */
+  private def intersect(a: Array[Int], b: Array[Int]): Long = {
+    var (u, v, inter) = (0, 0, 0L)
+    while (u < a.length && v < b.length) {
+      val c = a(u) - b(v)
+      if (c == 0) { inter += 1L; u += 1; v += 1 }
+      else if (c < 0) u += 1
+      else v += 1
+    }
+    inter
+  }
+
   /** Verified (a, b, inter) for candidate pairs under `orient` (which
     * also fixes the emitted orientation). Candidates are generated and
     * verified at identical-set GROUP granularity, then fanned out to
@@ -94,20 +130,8 @@ object AllPairsLocal {
     * sets ⟹ identical prefixes, candidacy, inter and thresholds). */
   private def verifiedPairs(docs: Array[Doc],
                             orient: (Doc, Doc) => Boolean): Iterator[(Doc, Doc, Long)] = {
-    val groups = groupBySet(docs)
-    val reps = groups.map(g => docs(g(0)))
-    val nShingles = reps.iterator.map(d =>
-      if (d.sorted.isEmpty) 0 else d.sorted(d.sorted.length - 1) + 1)
-      .foldLeft(0)(math.max)
-    val index = Array.fill(nShingles)(null: java.util.ArrayList[Integer])
-    var gi = 0
-    while (gi < groups.length) {
-      reps(gi).prefix.foreach { w =>
-        if (index(w) == null) index(w) = new java.util.ArrayList[Integer]()
-        index(w).add(gi)
-      }
-      gi += 1
-    }
+    val gx = new GroupIndex(docs, _.prefix)
+    import gx.{groups, reps}
     val out = scala.collection.mutable.ArrayBuffer.empty[(Doc, Doc, Long)]
     def emitMembers(g1: Array[Int], g2: Array[Int], inter: Long): Unit = {
       var x = 0
@@ -132,32 +156,20 @@ object AllPairsLocal {
         emitMembers(g, g, reps(i0).sz)
     }
     val seen = new LongSet(1 << 16)
-    index.foreach { bucket0 =>
-      if (bucket0 != null) {
-        val bucket = new Array[Int](bucket0.size())
-        var z = 0
-        while (z < bucket.length) { bucket(z) = bucket0.get(z).intValue(); z += 1 }
-        var x = 0
-        while (x < bucket.length) {
-          var y = x + 1
-          while (y < bucket.length) {
-            val (p, q) = (math.min(bucket(x), bucket(y)), math.max(bucket(x), bucket(y)))
-            if (seen.add((p.toLong << 32) | q.toLong)) {
-              val (da, db) = (reps(p), reps(q))
-              var (u, v, inter) = (0, 0, 0L)
-              while (u < da.sorted.length && v < db.sorted.length) {
-                val c = da.sorted(u) - db.sorted(v)
-                if (c == 0) { inter += 1L; u += 1; v += 1 }
-                else if (c < 0) u += 1
-                else v += 1
-              }
-              if (3L * inter >= da.sz + db.sz)
-                emitMembers(groups(p), groups(q), inter)
-            }
-            y += 1
+    gx.postings.foreach { bucket =>
+      var x = 0
+      while (x < bucket.length) {
+        var y = x + 1
+        while (y < bucket.length) {
+          val (p, q) = (math.min(bucket(x), bucket(y)), math.max(bucket(x), bucket(y)))
+          if (seen.add((p.toLong << 32) | q.toLong)) {
+            val inter = intersect(reps(p).sorted, reps(q).sorted)
+            if (3L * inter >= reps(p).sz + reps(q).sz)
+              emitMembers(groups(p), groups(q), inter)
           }
-          x += 1
+          y += 1
         }
+        x += 1
       }
     }
     out.iterator
@@ -199,30 +211,11 @@ object AllPairsLocal {
       val docs = internDocs(it, baseAt = -1, prefixDiv = 5)
       // identical-set groups (see groupBySet): candidacy, inter and
       // the one-sided threshold are all set-level facts, so probe and
-      // verify once per group pair, then fan out ordered member pairs
-      val groups = groupBySet(docs)
-      val reps = groups.map(g => docs(g(0)))
-      val nShingles = reps.iterator.map(d =>
-        if (d.sorted.isEmpty) 0 else d.sorted(d.sorted.length - 1) + 1)
-        .foldLeft(0)(math.max)
-      // FULL-stream inverted index over group reps (the container
-      // side pays nothing), primitive postings
-      val index0 = Array.fill(nShingles)(null: java.util.ArrayList[Integer])
-      var gi = 0
-      while (gi < groups.length) {
-        reps(gi).sorted.foreach { w =>
-          if (index0(w) == null) index0(w) = new java.util.ArrayList[Integer]()
-          index0(w).add(gi)
-        }
-        gi += 1
-      }
-      val index = index0.map { b =>
-        if (b == null) null
-        else { val a0 = new Array[Int](b.size())
-          var z = 0
-          while (z < a0.length) { a0(z) = b.get(z).intValue(); z += 1 }
-          a0 }
-      }
+      // verify once per group pair, then fan out ordered member pairs.
+      // The index holds each rep's FULL set (the container side pays
+      // nothing).
+      val gx = new GroupIndex(docs, _.sorted)
+      import gx.{groups, reps}
       val out = scala.collection.mutable.ArrayBuffer.empty[Row]
       def emitCross(g1: Array[Int], g2: Array[Int], inter: Long,
                     szA: Long, szB: Long): Unit = {
@@ -252,22 +245,15 @@ object AllPairsLocal {
       while (a < groups.length) {
         val da = reps(a)
         da.prefix.foreach { w =>
-          val bucket = index(w)
+          val bucket = gx.postings(w)
           var x = 0
           while (x < bucket.length) {
             val b = bucket(x)
             if (b != a && lastSeen(b) != a) {
               lastSeen(b) = a
-              val db = reps(b)
-              var (u, v, inter) = (0, 0, 0L)
-              while (u < da.sorted.length && v < db.sorted.length) {
-                val c = da.sorted(u) - db.sorted(v)
-                if (c == 0) { inter += 1L; u += 1; v += 1 }
-                else if (c < 0) u += 1
-                else v += 1
-              }
+              val inter = intersect(da.sorted, reps(b).sorted)
               if (5L * inter >= 4L * da.sz)
-                emitCross(groups(a), groups(b), inter, da.sz, db.sz)
+                emitCross(groups(a), groups(b), inter, da.sz, reps(b).sz)
             }
             x += 1
           }

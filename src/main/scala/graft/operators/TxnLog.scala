@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -81,15 +81,25 @@ object TxnLog {
     val target = checkpointFile(root, version)
     if (Files.exists(target)) return
     val (_, adds) = liveAdds(root, Some(version))
-    val body = adds.map(addLine).mkString("", "\n", "\n")
-    val stage = logDir(root).resolve(
-      f".ckstage_$version%08d_${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(stage, body.getBytes(StandardCharsets.UTF_8))
-    try Files.createLink(target, stage)
-    catch { // a racer published the identical derived state — fine
-      case _: java.nio.file.FileAlreadyExistsException => ()
-    }
-    Files.deleteIfExists(stage)
+    // losing a race is fine: the racer published the identical state
+    publish(target, f".ckstage_$version%08d", adds.map(addLine))
+  }
+
+  /** Stage `lines` under a name unique to this attempt (two racers
+    * must not share a stage), then hard-link the stage to `target`
+    * and delete it. link() fails with EEXIST if `target` exists, so of
+    * N concurrent publishers EXACTLY ONE wins — a plain rename would
+    * silently REPLACE the winner's file (POSIX rename semantics).
+    * Readers only ever observe complete files: the link appears
+    * atomically with its content final. False when `target` already
+    * existed. */
+  private def publish(target: Path, stagePrefix: String, lines: Seq[String]): Boolean = {
+    val stage = target.resolveSibling(
+      s"${stagePrefix}_${java.util.UUID.randomUUID().toString.take(8)}")
+    Files.write(stage, lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    try { Files.createLink(target, stage); true }
+    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    finally Files.deleteIfExists(stage)
   }
 
   private def latestCheckpointAtOrBelow(root: String,
@@ -158,26 +168,13 @@ object TxnLog {
     val target = versionFile(root, version)
     require(!Files.exists(target),
       s"txn log version $version already committed at $target")
-    val body = (removes.map(removeLine) ++ adds.map(addLine)).mkString("", "\n", "\n")
-    // unique stage name per attempt: two racers must not share a stage
-    val stage = logDir(root).resolve(
-      f".stage_$version%08d_${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.write(stage, body.getBytes(StandardCharsets.UTF_8))
-    // Atomic O_EXCL publish: link() fails with EEXIST if the version
-    // exists, so of N concurrent committers EXACTLY ONE wins and every
-    // loser throws — a plain rename would silently REPLACE the
-    // winner's commit (POSIX rename semantics), making the exists
-    // check above a TOCTOU race. Readers only ever observe complete
-    // files: the link appears atomically with its content final.
-    try Files.createLink(target, stage)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(stage)
-        throw new IllegalArgumentException(
-          s"txn log version $version lost the commit race at $target — " +
-            "re-replay and retry")
-    }
-    Files.deleteIfExists(stage)
+    // the exists check above is only a fast path: the publish itself
+    // decides the race, and every loser throws
+    if (!publish(target, f".stage_$version%08d",
+        removes.map(removeLine) ++ adds.map(addLine)))
+      throw new IllegalArgumentException(
+        s"txn log version $version lost the commit race at $target — " +
+          "re-replay and retry")
   }
 
   /** Replay the log up to and including `asOf` (or the latest version

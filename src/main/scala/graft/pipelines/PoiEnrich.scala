@@ -1,7 +1,8 @@
 package graft.pipelines
 
 import graft.functions.{GeoFns, HashFns, TextFns}
-import graft.operators.{ClusterUnify, GeoRadiusJoin, TopKPerGroup}
+import graft.operators.{ClusterUnify, GeoRadiusJoin}
+import graft.plans.TopKPhysical
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -82,9 +83,8 @@ object PoiEnrich {
       when(col("brand").isin(anchorBrands: _*), 0)
         .when(col("brand").isin(priorityBrands: _*), 1)
         .otherwise(2))
-    val topk = TopKPerGroup(ranked,
-      Seq(col("property_id"), col("re_category")),
-      Seq(col("brand_rank"), col("dist_km"), col("quality_score").desc, col("osm_id")),
+    val topk = TopKPhysical.topK(ranked, Seq("property_id", "re_category"),
+      Seq(("brand_rank", true), ("dist_km", true), ("quality_score", false), ("osm_id", true)),
       k)
     val walk = topk.groupBy(col("property_id"))
       .agg(

@@ -6,7 +6,7 @@ import org.apache.spark.sql.classic.Strategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.IntegerType
@@ -15,24 +15,27 @@ import scala.collection.mutable
 
 /** Whole-operator custom plan: per-group top-k as a first-class
   * physical operator (the full LogicalPlan → Strategy → SparkPlan
-  * ladder rung, SURVEY §7.3 / guide "custom operator" shape).
+  * ladder rung, SURVEY §7.3 / guide "custom operator" shape), and the
+  * engine's one batch per-group top-k: the one-job replacement for the
+  * reference's `ORDER BY … LIMIT n` round-trip per key
+  * (cl_test1.py:90-98).
   *
-  * The window formulation (TopKPerGroup) sorts every group in full;
-  * this operator runs in TWO phases, the same partial/final split a
-  * hash aggregate gets:
+  * Where a `row_number` window sorts every group in full, this
+  * operator runs in TWO phases, the same partial/final split a hash
+  * aggregate gets:
   *
   *  - a PARTIAL pass on the child's existing partitioning (no
-  *    exchange) keeps a bounded buffer per group per partition and
-  *    emits at most k candidate rows per (partition, group) — the
-  *    map-side combine. A group whose input is corpus-scale (one
-  *    query's candidate set in ANN search) is reduced to
-  *    numPartitions·k rows BEFORE any shuffle.
+  *    exchange) keeps a heap of at most k rows per group per
+  *    partition and emits those candidates — the map-side combine. A
+  *    group whose input is corpus-scale (one query's candidate set in
+  *    ANN search) is reduced to numPartitions·k rows BEFORE any
+  *    shuffle.
   *  - a FINAL pass declares `ClusteredDistribution(groupCols)` — so
   *    the planner inserts exactly one hash exchange over the already
-  *    -reduced candidates — and merges buffers to the exact top-k
-  *    with ranks. O(n log k) work, O(groups·k) memory, no sort of
-  *    the long tail, and no single task ever receives a whole
-  *    group's raw input.
+  *    -reduced candidates — and merges them to the exact top-k with
+  *    ranks. O(n log k) work, O(groups·k) memory, no sort of the long
+  *    tail, and no single task ever receives a whole group's raw
+  *    input.
   *
   * Registered via `spark.experimental.extraStrategies` (or an
   * extensions hook); exposed through [[TopKPhysical.topK]].
@@ -46,7 +49,7 @@ case class TopKPerGroupPlan(groupCols: Seq[Expression], orderCols: Seq[SortOrder
     copy(child = newChild)
 }
 
-/** Map-side half of the split: same bounded buffers, no required
+/** Map-side half of the split: same bounded heaps, no required
   * distribution, no rank — emits each partition's per-group top-k
   * candidates for the final pass to merge. */
 case class PartialTopKPlan(groupCols: Seq[Expression], orderCols: Seq[SortOrder],
@@ -57,56 +60,31 @@ case class PartialTopKPlan(groupCols: Seq[Expression], orderCols: Seq[SortOrder]
     copy(child = newChild)
 }
 
-/** Shared bounded-buffer scan: folds a partition's rows into per-group
-  * buffers capped at k (with periodic trims so memory never exceeds
-  * max(budget, 2·groups·k) rows), yielding each group's sorted top-k. */
+/** Shared bounded scan: folds a partition's rows into one heap per
+  * group holding at most k rows, whose head is the worst row kept. A
+  * row that loses to the head of a full heap is neither copied nor
+  * kept, so a task holds at most groups·k rows. Yields each group's
+  * top-k in order. */
 private[plans] object TopKBuffering {
   def topKPerGroup(it: Iterator[InternalRow], childOutput: Seq[Attribute],
                    groupCols: Seq[Expression], orderCols: Seq[SortOrder],
-                   k: Int, maxBufferedRows: Long): Iterator[Seq[InternalRow]] = {
+                   k: Int): Iterator[Seq[InternalRow]] = {
     val groupProj = UnsafeProjection.create(groupCols, childOutput)
     val ordering = RowOrdering.create(orderCols, childOutput)
-    val trimAt = math.max(k * 4, 64)
-    val buffers = mutable.LinkedHashMap.empty[UnsafeRow, mutable.ArrayBuffer[InternalRow]]
-    var total = 0L
-    var nextGlobalTrim = maxBufferedRows
+    val worstFirst = ordering.reverse
+    val heaps = mutable.LinkedHashMap.empty[UnsafeRow, java.util.PriorityQueue[InternalRow]]
     it.foreach { row =>
       val key = groupProj(row)
-      val buf = buffers.get(key) match {
-        case Some(b) => b
-        case None =>
-          val b = mutable.ArrayBuffer.empty[InternalRow]
-          buffers.put(key.copy(), b)
-          b
-      }
-      buf += row.copy()
-      total += 1
-      if (buf.length >= trimAt) {
-        val kept = buf.sorted(ordering).take(k)
-        total -= (buf.length - kept.length)
-        buf.clear(); buf ++= kept
-      }
-      if (total >= nextGlobalTrim) {
-        // high-cardinality grouping: collapse EVERY buffer to k so a
-        // task's memory can't grow past the output-size floor; back
-        // off the next trigger so we don't thrash once at the floor
-        var newTotal = 0L
-        buffers.valuesIterator.foreach { b =>
-          if (b.length > k) {
-            val kept = b.sorted(ordering).take(k)
-            b.clear(); b ++= kept
-          }
-          newTotal += b.length
-        }
-        total = newTotal
-        nextGlobalTrim = math.max(maxBufferedRows, total * 2)
-      }
+      val heap = heaps.getOrElse(key, {
+        val h = new java.util.PriorityQueue[InternalRow](worstFirst)
+        heaps.put(key.copy(), h)
+        h
+      })
+      if (heap.size() < k) heap.add(row.copy())
+      else if (ordering.lt(row, heap.peek)) { heap.poll(); heap.add(row.copy()) }
     }
-    buffers.valuesIterator.map(buf => buf.sorted(ordering).take(k).toSeq)
+    heaps.valuesIterator.map(heap => heap.toArray(Array.empty[InternalRow]).sorted(ordering).toSeq)
   }
-
-  def maxBufferedRows(plan: SparkPlan): Long = plan.session.conf
-    .get("spark.graft.topk.maxBufferedRows", (4 * 1024 * 1024).toString).toLong
 }
 
 case class TopKPerGroupExec(groupCols: Seq[Expression], orderCols: Seq[SortOrder],
@@ -116,14 +94,17 @@ case class TopKPerGroupExec(groupCols: Seq[Expression], orderCols: Seq[SortOrder
   override def producedAttributes: AttributeSet = AttributeSet(rankAttr :: Nil)
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(groupCols) :: Nil
+  // rows stay in their input partition, so the output keeps the
+  // child's clustering: a consumer grouping on the same keys (q42's
+  // envelope, q113's postings) needs no second exchange
+  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
-    val budget = TopKBuffering.maxBufferedRows(this)
     val (g, o, kk) = (groupCols, orderCols, k)
     child.execute().mapPartitions { it =>
       val outProj = UnsafeProjection.create(output, output)
-      TopKBuffering.topKPerGroup(it, childOutput, g, o, kk, budget).flatMap { buf =>
+      TopKBuffering.topKPerGroup(it, childOutput, g, o, kk).flatMap { buf =>
         buf.iterator.zipWithIndex.map { case (r, i) =>
           outProj(new JoinedRow(r, InternalRow(i + 1)))
         }
@@ -145,14 +126,12 @@ case class PartialTopKExec(groupCols: Seq[Expression], orderCols: Seq[SortOrder]
   // the planner SKIP the final pass's exchange when the input is
   // already clustered on the group keys (e.g. right after a groupBy
   // or a bucketed scan of the same keys).
-  override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
-    child.outputPartitioning
+  override def outputPartitioning: Partitioning = child.outputPartitioning
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
-    val budget = TopKBuffering.maxBufferedRows(this)
     val (g, o, kk) = (groupCols, orderCols, k)
     child.execute().mapPartitions { it =>
-      TopKBuffering.topKPerGroup(it, childOutput, g, o, kk, budget).flatMap(_.iterator)
+      TopKBuffering.topKPerGroup(it, childOutput, g, o, kk).flatMap(_.iterator)
     }
   }
   override protected def withNewChildInternal(newChild: SparkPlan): PartialTopKExec =
@@ -184,9 +163,11 @@ object TopKPhysical {
     * TOTAL order on each group's rows (include a unique tie-break
     * column, as every registry caller does) — under ties, which tied
     * row survives a partial buffer would otherwise depend on
-    * partitioning, same as `row_number` under a non-total ORDER BY. */
+    * partitioning, same as `row_number` under a non-total ORDER BY.
+    * Requires k ≥ 1. */
   def topK(df: DataFrame, groupBy: Seq[String], orderBy: Seq[(String, Boolean)],
            k: Int, rankName: String = "rnk"): DataFrame = {
+    require(k >= 1, s"topK needs k >= 1, got $k")
     val spark = df.sparkSession
     install(spark)
     val analyzed = ColumnBridge.analyzed(df)

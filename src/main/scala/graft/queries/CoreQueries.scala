@@ -1,8 +1,9 @@
 package graft.queries
 
 import graft.functions.CleanFns
-import graft.operators.TopKPerGroup
+import graft.plans.TopKPhysical
 import graft.util.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -22,6 +23,25 @@ object CoreQueries {
     * bit-reproducible by the DuckDB oracle. */
   private def dsum(c: org.apache.spark.sql.Column, scale: Int = 2) =
     sum(c.cast(DecimalType(18, scale))).cast(DoubleType)
+
+  /** The three priciest orders per customer (ties → lower orderkey),
+    * ranked. q06, q51 and q58 keep their registry names over this one
+    * plan and its oracle. */
+  private[queries] def ordersTop3(s: SparkSession, dir: String): DataFrame =
+    TopKPhysical.topK(Tables(s, dir, "orders"),
+      groupBy = Seq("o_custkey"),
+      orderBy = Seq(("o_totalprice", false), ("o_orderkey", true)), k = 3)
+      .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("rnk"))
+      .orderBy(col("o_custkey"), col("rnk"))
+
+  private[queries] val ordersTop3Oracle =
+    """SELECT o_custkey, o_orderkey, o_totalprice, rnk FROM (
+      |  SELECT o_custkey, o_orderkey, o_totalprice,
+      |    ROW_NUMBER() OVER (PARTITION BY o_custkey
+      |      ORDER BY o_totalprice DESC, o_orderkey) AS rnk
+      |  FROM orders) t
+      |WHERE rnk <= 3
+      |ORDER BY o_custkey, rnk""".stripMargin
 
   val all: Seq[Q] = Seq(
 
@@ -125,25 +145,11 @@ object CoreQueries {
              |  WHERE o_custkey = c_custkey AND o_totalprice > 300000)
              |ORDER BY c_custkey""".stripMargin)),
 
-    // T1/T2: distributed top-k per group (window + row_number), the
-    // one-job replacement for the reference's per-key ORDER BY LIMIT
+    // T1/T2: distributed top-k per group (TopKPhysical: partial heaps
+    // per partition, one exchange, final merge), the one-job
+    // replacement for the reference's per-key ORDER BY LIMIT
     // round-trips (cl_test1.py:90-98).
-    Q("q06_topk_per_group",
-      (s, dir) => TopKPerGroup(
-        Tables(s, dir, "orders"),
-        groupBy = Seq(col("o_custkey")),
-        orderBy = Seq(col("o_totalprice").desc, col("o_orderkey")),
-        k = 3)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("rnk"))
-        .orderBy(col("o_custkey"), col("rnk")),
-      Some("""SELECT o_custkey, o_orderkey, o_totalprice, rnk FROM (
-             |  SELECT o_custkey, o_orderkey, o_totalprice,
-             |    ROW_NUMBER() OVER (PARTITION BY o_custkey
-             |      ORDER BY o_totalprice DESC, o_orderkey) AS rnk
-             |  FROM orders) t
-             |WHERE rnk <= 3
-             |ORDER BY o_custkey, rnk""".stripMargin),
-      headline = true),
+    Q("q06_topk_per_group", ordersTop3, Some(ordersTop3Oracle), headline = true),
 
     // U1/U2-style tagged union (PBF layer union, process_pois.py:364-378).
     Q("q07_union_tagged",

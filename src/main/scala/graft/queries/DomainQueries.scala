@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.functions.{DifflibRatio, TextFns}
-import graft.operators.{ClusterUnify, TopKPerGroup}
+import graft.operators.ClusterUnify
+import graft.plans.TopKPhysical
 import graft.util.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -116,9 +117,9 @@ object DomainQueries {
       (s, dir) => {
         val c = Tables(s, dir, "customer")
         val n = Tables(s, dir, "nation")
-        val top = TopKPerGroup(
+        val top = TopKPhysical.topK(
           c.join(broadcast(n), c("c_nationkey") === n("n_nationkey")),
-          Seq(col("n_name")), Seq(col("c_acctbal").desc, col("c_custkey")), 3)
+          Seq("n_name"), Seq(("c_acctbal", false), ("c_custkey", true)), 3)
         val env = top.groupBy(col("n_name"))
           .agg(to_json(struct(
             col("n_name").as("nation"),

@@ -164,49 +164,10 @@ object ExtraQueries {
              |  CAST(quarter(o_orderdate) AS INT) AS qtr
              |FROM orders WHERE o_orderkey % 100 = 0 ORDER BY o_orderkey""".stripMargin)),
 
-    // Typed single-pass top-k via a custom Aggregator (map-side
-    // bounded buffers instead of whole-group window sort) — must equal
-    // the window formulation exactly (same oracle as q06).
-    Q("q51_topk_typed_agg",
-      (s, dir) => {
-        import s.implicits._
-        val ds = Tables(s, dir, "orders")
-          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-          .as[(Long, Long, Double)]
-        ds.groupByKey(_._1)
-          .mapValues(r => (r._2, r._3))
-          .agg(new graft.functions.TopKAggregator(3).toColumn.name("top"))
-          .flatMap { case (ck, hits) =>
-            hits.zipWithIndex.map { case ((ok, price), i) => (ck, ok, price, i + 1) }
-          }
-          .toDF("o_custkey", "o_orderkey", "o_totalprice", "rnk")
-          .orderBy(col("o_custkey"), col("rnk"))
-      },
-      Some("""SELECT o_custkey, o_orderkey, o_totalprice, rnk FROM (
-             |  SELECT o_custkey, o_orderkey, o_totalprice,
-             |    ROW_NUMBER() OVER (PARTITION BY o_custkey
-             |      ORDER BY o_totalprice DESC, o_orderkey) AS rnk
-             |  FROM orders) t
-             |WHERE rnk <= 3
-             |ORDER BY o_custkey, rnk""".stripMargin)),
-
-    // The same top-k through the CUSTOM PHYSICAL OPERATOR
-    // (LogicalPlan + Strategy + SparkPlan, bounded per-partition
-    // buffers after one hash exchange) — must equal the window form.
-    Q("q58_topk_physical",
-      (s, dir) => graft.plans.TopKPhysical.topK(
-        Tables(s, dir, "orders"),
-        groupBy = Seq("o_custkey"),
-        orderBy = Seq(("o_totalprice", false), ("o_orderkey", true)), k = 3)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("rnk"))
-        .orderBy(col("o_custkey"), col("rnk")),
-      Some("""SELECT o_custkey, o_orderkey, o_totalprice, rnk FROM (
-             |  SELECT o_custkey, o_orderkey, o_totalprice,
-             |    ROW_NUMBER() OVER (PARTITION BY o_custkey
-             |      ORDER BY o_totalprice DESC, o_orderkey) AS rnk
-             |  FROM orders) t
-             |WHERE rnk <= 3
-             |ORDER BY o_custkey, rnk""".stripMargin)),
+    // q51 and q58 name the same per-group top-k as q06: one
+    // TopKPhysical plan, one oracle.
+    Q("q51_topk_typed_agg", CoreQueries.ordersTop3, Some(CoreQueries.ordersTop3Oracle)),
+    Q("q58_topk_physical", CoreQueries.ordersTop3, Some(CoreQueries.ordersTop3Oracle)),
 
     // Explicit grouping sets (beyond rollup/cube): status totals and
     // priority totals in one pass.

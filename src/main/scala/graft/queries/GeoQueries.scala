@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.functions.GeoFns
-import graft.operators.{GeoRadiusJoin, TopKPerGroup}
+import graft.operators.GeoRadiusJoin
+import graft.plans.TopKPhysical
 import graft.util.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -82,8 +83,8 @@ object GeoQueries {
         val joined = GeoRadiusJoin(
           customers(s, dir), suppliers(s, dir),
           "c_lat", "c_lon", "s_lat", "s_lon", radiusKm = 5.0)
-        TopKPerGroup(joined, Seq(col("c_custkey")),
-          Seq(col("dist_km"), col("s_suppkey")), k = 3)
+        TopKPhysical.topK(joined, Seq("c_custkey"),
+          Seq(("dist_km", true), ("s_suppkey", true)), k = 3)
           .select(col("c_custkey"), col("s_suppkey"),
             round(col("dist_km"), 6).as("dist_km"), col("rnk"))
           .orderBy(col("c_custkey"), col("rnk"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.functions.TextFns
-import graft.operators.{AllPairsLocal, SetGroups, SimilaritySearch, TopKPerGroup}
+import graft.operators.{AllPairsLocal, SetGroups, SimilaritySearch}
 import graft.util.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -389,8 +389,8 @@ object RetrievalQueries {
       (s, dir) => {
         // per-doc dedup + 64-smallest cap INSIDE the array (the q133
         // lesson): array_sort(array_distinct(..)) then slice replaces
-        // the corpus-wide explode→DISTINCT shuffle AND the
-        // TopKPerGroup window — the capped stream is map-only.
+        // the corpus-wide explode→DISTINCT shuffle AND a per-doc
+        // top-64 window — the capped stream is map-only.
         // Materialized once (lazily): it feeds the df aggregate and
         // both sides of the pair self-join.
         val d = Tables.wide(s, dir, "documents")

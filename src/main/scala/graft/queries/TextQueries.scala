@@ -1069,8 +1069,8 @@ object TextQueries {
         val stats = posting.groupBy(col("term"))
           .agg(count(lit(1)).cast(LongType).as("df"),
             sum(col("tf")).cast(LongType).as("cf"))
-        val tops = graft.operators.TopKPerGroup(posting,
-            Seq(col("term")), Seq(col("tf").desc, col("doc_id")), 50)
+        val tops = graft.plans.TopKPhysical.topK(posting,
+            Seq("term"), Seq(("tf", false), ("doc_id", true)), 50)
           .groupBy(col("term"))
           .agg(array_join(transform(
             sort_array(collect_list(

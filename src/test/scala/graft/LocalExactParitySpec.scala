@@ -139,7 +139,7 @@ class LocalExactParitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     bothPaths("q167_rrf_fusion")
   }
 
-  test("q113 inverted index: one-task pass equals the TopKPerGroup plan") {
+  test("q113 inverted index: one-task pass equals the TopKPhysical plan") {
     bothPaths("q113_inverted_index")
   }
 

@@ -38,9 +38,11 @@ class SqlSurfaceSpec extends SparkSpec {
     same("SELECT k, haversine_km(lat1, lon1, lat2, lon2) FROM geo_rows ORDER BY k",
       spark.table("geo_rows").orderBy("k").select(col("k"), GeoFns.haversineKm(
         col("lat1"), col("lon1"), col("lat2"), col("lon2"))))
+    // the dim-2 synthetic rows sit far below vec_id 0, so the join
+    // pairs them only with each other, never with a dim-64 table row
     graft.util.Tables(spark, sf001, "embeddings").select(col("vec_id"), col("embedding"))
-      .union(Seq[(Long, Seq[Float])]((-1L, Seq(0f, 0f)), (-2L, Seq(-0.5f, 0.25f)),
-        (-3L, Seq(0.5f, -0.25f))).toDF("vec_id", "embedding"))
+      .union(Seq[(Long, Seq[Float])]((-1001L, Seq(0f, 0f)), (-1002L, Seq(-0.5f, 0.25f)),
+        (-1003L, Seq(0.5f, -0.25f))).toDF("vec_id", "embedding"))
       .createOrReplaceTempView("vec_rows")
     same("""SELECT a.vec_id, cosine_sim(a.embedding, b.embedding) FROM vec_rows a
            |JOIN vec_rows b ON b.vec_id = a.vec_id - 1 ORDER BY a.vec_id""".stripMargin,
@@ -55,6 +57,16 @@ class SqlSurfaceSpec extends SparkSpec {
     same("SELECT doc_id, redact_pii(text) FROM text_rows ORDER BY doc_id",
       spark.table("text_rows").orderBy("doc_id")
         .select(col("doc_id"), TextFns.redactPii(col("text"))))
+  }
+
+  test("dot_scaled of vectors of different dimensions raises") {
+    GraftFunctions.registerAll(spark)
+    val e = intercept[Exception] {
+      spark.sql("SELECT dot_scaled(array(1.0F, 2.0F), array(3.0F))").collect()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(messages.exists(_.contains("different vector dimensions 2 and 1")), e)
   }
 
   test("cosine_sim of a NULL vector is NULL") {

@@ -12,13 +12,18 @@ class TopKPhysicalSpec extends SparkSpec {
       orderBy = Seq(("o_totalprice", false), ("o_orderkey", true)), k = 3)
       .select("o_custkey", "o_orderkey", "o_totalprice", "rnk")
       .orderBy("o_custkey", "rnk")
-    val viaWindow = graft.operators.TopKPerGroup(orders,
-      Seq(col("o_custkey")), Seq(col("o_totalprice").desc, col("o_orderkey")), 3)
-      .select("o_custkey", "o_orderkey", "o_totalprice", "rnk")
-      .orderBy("o_custkey", "rnk")
+    orders.createOrReplaceTempView("topk_orders")
+    val viaWindow = spark.sql(
+      """SELECT o_custkey, o_orderkey, o_totalprice, rnk FROM (
+        |  SELECT o_custkey, o_orderkey, o_totalprice,
+        |    ROW_NUMBER() OVER (PARTITION BY o_custkey
+        |      ORDER BY o_totalprice DESC, o_orderkey) AS rnk
+        |  FROM topk_orders) t
+        |WHERE rnk <= 3
+        |ORDER BY o_custkey, rnk""".stripMargin)
     val a = viaExec.collect().toSeq
     val b = viaWindow.collect().toSeq
-    assert(a.size == b.size && a.zip(b).forall { case (x, y) =>
+    assert(a.nonEmpty && a.size == b.size && a.zip(b).forall { case (x, y) =>
       x.getLong(0) == y.getLong(0) && x.getLong(1) == y.getLong(1) &&
         x.getDouble(2) == y.getDouble(2) && x.getInt(3) == y.getInt(3)
     })
@@ -68,31 +73,34 @@ class TopKPhysicalSpec extends SparkSpec {
     assert(df.count() > 0)
   }
 
-  test("bounded buffers survive groups far larger than the trim threshold") {
+  test("a group far larger than k keeps exactly its top k") {
     import spark.implicits._
-    // one group with 10k rows — forces many trim cycles
+    // one group with 10k rows through one heap of 5
     val big = (1 to 10000).map(i => (1L, i.toLong)).toDF("g", "v")
     val out = TopKPhysical.topK(big, Seq("g"), Seq(("v", false)), 5)
       .select("v", "rnk").as[(Long, Int)].collect().sortBy(_._2)
     assert(out.map(_._1).toSeq == Seq(10000L, 9999L, 9998L, 9997L, 9996L))
   }
 
-  test("row budget triggers global trims under high group cardinality") {
+  test("high group cardinality: each group's heap holds k rows") {
     import spark.implicits._
-    spark.conf.set("spark.graft.topk.maxBufferedRows", "1000")
-    try {
-      // 200k distinct groups × 3 rows with per-group buffers that would
-      // hold 3 rows each (below trimAt) — without the global trim the
-      // map retains all 600k rows; with it each buffer collapses to
-      // k=1 as soon as a task crosses 1000 buffered rows
-      val big = (0 until 600000).map(i => (i % 200000L, i.toLong))
-        .toDF("g", "v")
-      val out = TopKPhysical.topK(big, Seq("g"), Seq(("v", false)), 1)
-        .select("g", "v").as[(Long, Long)].collect()
-      assert(out.length == 200000)
-      // top row per group g is v = g + 400000 (the largest of the 3)
-      assert(out.forall { case (g, v) => v == g + 400000L })
-    } finally spark.conf.unset("spark.graft.topk.maxBufferedRows")
+    // 200k distinct groups × 3 rows, k = 1: each group's heap keeps
+    // one row, replacing it only when a larger v arrives
+    val big = (0 until 600000).map(i => (i % 200000L, i.toLong))
+      .toDF("g", "v")
+    val out = TopKPhysical.topK(big, Seq("g"), Seq(("v", false)), 1)
+      .select("g", "v").as[(Long, Long)].collect()
+    assert(out.length == 200000)
+    // top row per group g is v = g + 400000 (the largest of the 3)
+    assert(out.forall { case (g, v) => v == g + 400000L })
+  }
+
+  test("k below 1 is rejected") {
+    val orders = graft.util.Tables(spark, sf001, "orders")
+    val e = intercept[IllegalArgumentException] {
+      TopKPhysical.topK(orders, Seq("o_custkey"), Seq(("o_orderkey", true)), 0)
+    }
+    assert(e.getMessage.contains("k >= 1"), e.getMessage)
   }
 
   test("every topK registry caller is partition-invariant (tie-break convention)") {
@@ -102,9 +110,10 @@ class TopKPhysicalSpec extends SparkSpec {
     // the convention BEHAVIORALLY: run each registry query that routes
     // through TopKPhysical.topK under two very different scan-split +
     // shuffle-partition settings and require identical results.
-    val topKQueries = Seq("q26_cosine_topk", "q27_ivf_topk",
-      "q28b_rag_filtered", "q58_topk_physical", "q72_balanced_sample",
-      "q78_int8_quant")
+    val topKQueries = Seq("q06_topk_per_group", "q26_cosine_topk",
+      "q27_ivf_topk", "q28b_rag_filtered", "q29_nearest_topk",
+      "q42_json_envelope", "q51_topk_typed_agg", "q58_topk_physical",
+      "q72_balanced_sample", "q78_int8_quant", "q113_inverted_index")
     def withConf(pairs: (String, String)*)(body: => Seq[String]): Seq[String] = {
       val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
       pairs.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -116,7 +125,10 @@ class TopKPhysicalSpec extends SparkSpec {
     }
     topKQueries.foreach { name =>
       val q = graft.queries.Registry.byName(name)
-      def canon(): Seq[String] = q.run(spark, sf001).collect().map(_.toString).toSeq
+      // forced onto the distributed plans, so a LocalExact hybrid
+      // (q113) runs its topK plan rather than its one-task kernel
+      def canon(): Seq[String] = forcedDistributed(
+        q.run(spark, sf001).collect().map(_.toString).toSeq)
       val tiny = withConf(
         "spark.sql.files.maxPartitionBytes" -> "65536",
         "spark.sql.files.openCostInBytes" -> "0",
